@@ -1,227 +1,49 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** One timed pass over the registry: prewarm the shared stages, then
+  * every registered query once through [[Harness.materialize]]. Prints
+  * one full JSON line and a compact last line that fits a ~2000-char
+  * tail capture; exits 1 when the prewarm or any query failed.
+  * Failures are named, never timed. */
 object Bench {
-
-  /** Load the committed steady-time profile (`bench_profile.json`, a
-    * flat {"query":secs} object written from the last clean idle
-    * bench; override path with GRAFT_BENCH_PROFILE). Used ONLY to
-    * decide which cold runs look JIT-inflated enough to re-time — the
-    * reported numbers always come from THIS run. Absent file → empty
-    * profile → the flat legacy threshold applies everywhere. */
-  private def loadProfile(): Map[String, Double] = {
-    val path = sys.env.getOrElse("GRAFT_BENCH_PROFILE",
-      "bench_profile.json")
-    val f = new java.io.File(path)
-    if (!f.isFile) Map.empty
-    else {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
-
-  /** 1/5/15-min load averages, read from /proc (Linux). The committed
-    * bench headline has twice been hostage to host contention (r8/r9:
-    * ~200 s of warmup/rerun noise on identical plans); recording the
-    * load at start and end makes a contended run self-describing
-    * instead of needing cross-run forensics. */
-  private def loadavg(): String =
-    try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-      .split("\\s+").take(3).mkString("[", ",", "]")
-    catch { case _: Throwable => "[]" }
-
   def main(args: Array[String]): Unit = {
-    // Self-defense (r13: the committed bench ran at loadavg 10.6 and
-    // became the first artifact to blow its own rerun budget — the
-    // load was RECORDED but not acted on): if the host is visibly
-    // loaded at start, WAIT for a quiet window — bounded by
-    // GRAFT_BENCH_QUIET_WAIT (default 300 s, poll every 15 s) — and
-    // if the wait expires still loaded, proceed but mark the artifact
-    // "contended": true so a reader never has to adjudicate tail
-    // regressions from cross-run forensics again.
-    val maxLoad = sys.env.getOrElse("GRAFT_BENCH_MAX_LOAD", "4.0")
-      .toDouble
-    val quietWait = sys.env.getOrElse("GRAFT_BENCH_QUIET_WAIT", "300")
-      .toDouble
-    def load1(): Double =
-      try loadavg().stripPrefix("[").split(",").head.toDouble
-      catch { case _: Throwable => 0.0 }
-    val waitT0 = System.nanoTime()
-    while (load1() > maxLoad
-        && (System.nanoTime() - waitT0) / 1e9 < quietWait) {
-      System.err.println(f"[bench] loadavg ${load1()}%.2f > " +
-        f"$maxLoad%.1f - waiting for a quiet window")
-      Thread.sleep(15000)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(Harness.cpus)
+    var warmRep = graft.queries.Warmup.Report(Seq.empty, Seq.empty)
+    val warm = Harness.timed {
+      warmRep = graft.queries.Warmup.prewarm(spark, sfDir) }
+    val runs = SparkEntry.queries.toSeq.map { case (name, fn) =>
+      name -> Harness.timed(Harness.materialize(fn(spark, sfDir)))
     }
-    val quietWaited = (System.nanoTime() - waitT0) / 1e9
-    val contended = load1() > maxLoad
-    val loadStart = loadavg()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default 32 = the driver contract's local[32] host; on other
-    // machines set SPARK_GRAFT_CPUS (e.g. to availableProcessors) or
-    // local[32] oversubscribes and skews the numbers
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle/spill on tmpfs when available: local-mode shuffle files on
-    // the root disk are the first thing to degrade under back-to-back
-    // heavy runs
-    val localDir =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
-      else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", localDir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // build the shared stage caches with all cores before the timed
-    // loop; the warmup is timed and included in the total, so the
-    // headline number stays honest — per-query times then reflect each
-    // query's own work instead of whichever cache it populated first
-    val w0 = System.nanoTime()
-    val warmRep =
-      try graft.queries.Warmup.prewarm(spark, sfDir)
-      catch { case _: Throwable =>
-        graft.queries.Warmup.Report(Seq.empty, Seq.empty) }
-    val phases = warmRep.phases
-    val warm = "warmup_shared_stages" -> (System.nanoTime() - w0) / 1e9
-    // per-phase breakdown rides alongside the total so the driver can
-    // separate stage-build cost from query cost (phases are wall-clock
-    // serial, so they sum to ~the warmup total); the total itself stays
-    // the single number added into "value"
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
-    // ONE registry build: SparkEntry.queries is a def (it re-interpolates
-    // live Settings into oracle SQL per access), so capture the map once
-    // instead of paying a ~36 ms rebuild per rerun lookup
-    val qmap = SparkEntry.queries
-    val cold = qmap.map { case (name, fn) => name -> timeOnce(fn) }
-    // First runs of heavyweight plans are dominated by one-time JVM
-    // JIT/codegen, not plan cost (measured repeatedly across rounds:
-    // e.g. 6.7 s → 0.7 s steady for identical plans). Re-time only the
-    // queries whose cold run looks JIT-inflated AGAINST THE RECORDED
-    // STEADY PROFILE — cold > max(1 s, 2× the last clean run's steady
-    // time) — so a genuinely-3-second query is no longer re-run every
-    // bench just for being slow (the r7 flat 2 s rule burned ~49 s of
-    // wall re-timing honest heavyweights). Queries absent from the
-    // profile fall back to the flat 2 s rule. min(cold, rerun) is
-    // reported per query; the cold times ride along under "cold:" rows
-    // and the rerun cost lands in one explicit overhead row — nothing
-    // hidden, the attribution is just honest.
-    val profile = loadProfile()
-    def rerunThreshold(name: String): Double =
-      profile.get(name).map(p => math.max(1.0, 2.0 * p)).getOrElse(2.0)
-    // The rerun pass is BUDGETED (default 30 s wall, override with
-    // GRAFT_BENCH_RERUN_BUDGET): under host contention dozens of
-    // queries blow past 2× steady and an unbounded pass re-times every
-    // one of them for pure noise (134 s of the r9 headline). Most
-    // JIT-inflated first runs go in the biggest offenders, so the pass
-    // re-times in descending cold-time order until the budget is spent;
-    // whatever it could not reach stays at its cold time and is named
-    // in jit_suspect.
-    val rerunBudget = sys.env.getOrElse("GRAFT_BENCH_RERUN_BUDGET", "30")
-      .toDouble
-    val rerunT0 = System.nanoTime()
-    def spent() = (System.nanoTime() - rerunT0) / 1e9
-    // Overshoot guard (r10 verdict): the budget used to gate only when
-    // a rerun STARTED, so the last admitted rerun could blow past it
-    // (39.9 s observed against 30). Estimate each rerun's cost — the
-    // profile steady when available (a rerun executes JIT-warm), else
-    // the cold time as the pessimistic bound — and admit it only if the
-    // estimate fits the remaining budget.
-    val rerun = cold.toSeq.filter { case (n, t) => t > rerunThreshold(n) }
-      .sortBy(-_._2)
-      .flatMap { case (name, coldT) =>
-        val est = profile.getOrElse(name, coldT)
-        if (spent() + est <= rerunBudget)
-          Some(name -> timeOnce(qmap(name)))
-        else None
-      }.toMap
-    val rerunSecs = spent()
-    val steady = cold.map { case (name, t1) =>
-      name -> math.min(t1, rerun.getOrElse(name, t1))
-    }
-    // keep the headline total EXACT wall-clock: warmup + every cold
-    // run + every rerun; whatever steady attribution doesn't cover
-    // lands in one explicit overhead row
-    val overhead = (cold.values.sum + rerunSecs) - steady.values.sum
-    val results = Map(warm) ++ steady ++
-      (if (rerun.nonEmpty)
-        Map("jit_rerun_overhead" -> overhead) else Map.empty)
-    // Honesty line for the no-rerun band: a reported time can still
-    // carry sub-threshold first-run JIT (above the profile's steady but
-    // below the 2× rerun trigger). Name those queries explicitly so a
-    // reader diffing rounds attributes the uptick to JIT, not to a plan
-    // regression — the committed profile is the adjudicator, not a
-    // fresh Prof rerun.
-    val jitSuspect = steady.collect {
-      case (n, t) if profile.get(n).exists(p => t > 1.4 * p && t > 0.5)
-        && !rerun.contains(n) => n
-    }.toSeq.sorted
+    val failed = (("warmup_shared_stages" -> warm) +: runs)
+      .collect { case (name, Left(msg)) =>
+        System.err.println(s"[bench] $name failed: $msg")
+        name
+      }
+    val secs = runs.collect { case (name, Right(t)) => name -> t }
+    val querySum = secs.map(_._2).sum
+
     def r3(v: Double) = math.round(v * 1000) / 1000.0
-    // steady_sum: the load-invariant headline — Σ over queries of
-    // min(cold, rerun, committed-profile steady). The profile entries
-    // are themselves measured clean-window steadies of the same plans,
-    // so taking the min strips residual JIT/contention that the
-    // budgeted rerun pass could not reach; `total` stays the exact
-    // wall-clock (warmup + every cold + every rerun). A plan
-    // REGRESSION still surfaces: the regressed query is listed in
-    // jit_suspect (reported > 1.4× profile) and its profile entry is
-    // refreshed on the next clean-window Prof pass.
-    val steadySum = steady.map { case (n, t) =>
-      math.min(t, profile.getOrElse(n, Double.MaxValue))
-    }.sum
-    val loadEnd = loadavg()
-    val qs = (results ++ rerun.map { case (k, _) =>
-        s"cold:$k" -> cold(k) })
-      .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val jitJson = jitSuspect.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val wp = phases.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    // per-build warmup times (top 12 by wall — the ranking signal for
-    // the next prewarm decision)
-    val wb = warmRep.builds.sortBy(-_._2).take(12)
-      .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    // rerun_secs = the rerun pass's own wall-clock, directly checkable
-    // against the budget (the jit_rerun_overhead ROW additionally
-    // carries cold-minus-steady inflation, so it can legitimately
-    // exceed the budget; this field cannot)
-    val extras = s""""steady_sum":${r3(steadySum)},"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"quiet_wait_secs":${r3(quietWaited)},"contended":$contended,"rerun_secs":${r3(rerunSecs)},"rerun_overhead_budget":$rerunBudget"""
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",$extras,"warmup":$wp,"warmup_builds":$wb,"jit_suspect":$jitJson,"queries":$qs,"sf":"$sfDir"}""")
-    // The harness capturing this output keeps only the last ~2000 chars;
-    // the full line above (~4k chars for 200+ queries) loses its head —
-    // and with it the total — in that window. Repeat the headline as a
-    // compact final line that ALWAYS fits: the graded fields
-    // (value/steady_sum/loadavg) come FIRST, jit_suspect is a count
-    // (the full list stays on the long line above), and the slowest-
-    // queries map is filled only while the whole line stays under
-    // 1,800 chars (r10 lesson: the full 45-name jit list pushed both
-    // lines past the window and the graded artifact lost its headline).
-    val head = s"""{"metric":"total","value":${r3(total)},"n_queries":${steady.size},$extras,"jit_suspect_count":${jitSuspect.size},"unit":"sec","sf":"$sfDir","queries":{"""
-    val tail = "}}"
-    val budgetChars = 1800 - head.length - tail.length
-    val topEntries = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = 0
-    results.toSeq.sortBy(-_._2).foreach { case (k, v) =>
-      val e = "\"" + k + "\":" + r3(v)
-      val cost = e.length + (if (topEntries.nonEmpty) 1 else 0)
-      if (used + cost <= budgetChars) { topEntries += e; used += cost }
+    def obj(kv: Seq[(String, Double)]) =
+      kv.map { case (k, v) => "\"" + k + "\":" + r3(v) }
+    // the first `budget` chars' worth of entries (each plus a comma)
+    def fit(entries: Seq[String], budget: Int): Seq[String] = {
+      var used = 0
+      entries.takeWhile { e => used += e.length + 1; used <= budget }
     }
-    println(head + topEntries.mkString(",") + tail)
+    val names = failed.map("\"" + _ + "\"")
+    val head = s""""metric":"total","value":${r3(warm.getOrElse(0.0) + querySum)},"unit":"sec","warmup_s":${warm.fold(_ => "null", r3(_).toString)},"query_sum":${r3(querySum)},"n_queries":${runs.size},"n_failed":${failed.size},"sf":"$sfDir""""
+    // per-build warmup times: top 12 by wall, the ranking signal for the
+    // next prewarm decision
+    println(s"""{$head,"failed":${names.mkString("[", ",", "]")},"warmup":${obj(warmRep.phases).mkString("{", ",", "}")},"warmup_builds":${obj(warmRep.builds.sortBy(-_._2).take(12)).mkString("{", ",", "}")},"queries":${obj(secs).mkString("{", ",", "}")}}""")
+    // compact last line: the headline fields first, then as many failed
+    // names and slowest queries as keep the line under 1,800 chars
+    val shown = fit(names, 600)
+    val left = 1800 - head.length - shown.map(_.length + 1).sum - 40
+    val top = fit(obj(secs.sortBy(-_._2)), left)
+    println(s"""{$head,"failed":${shown.mkString("[", ",", "]")},"queries":${top.mkString("{", ",", "}")}}""")
     graft.queries.Stage.clear()
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,30 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Write `.explain("formatted")` output for named queries (or every
   * registered query with `--all`) to a directory — the round's plan
-  * evidence (`plans/r15/<query>_<tag>.txt`). Usage:
+  * evidence (`plans/r15/<query>_<tag>.txt`) — and print each query's
+  * non-single-partition Exchange count. Usage:
   *   runMain graft.PlanDump <outDir> <tag> [--all | name...]
-  * Uses the same session shape as Bench so plan choices (AQE, shuffle
-  * partitions, broadcast thresholds) match the measured runs. */
+  * Builds its session through [[Harness.session]], like Bench, so plan
+  * choices (AQE, shuffle partitions, broadcast thresholds) match the
+  * measured runs. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <tag> [--all|names]")
     val outDir = java.nio.file.Paths.get(args(0))
     val tag = args(1)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(Harness.cpus)
     java.nio.file.Files.createDirectories(outDir)
     val qs = SparkEntry.queries
     val names =
@@ -35,7 +25,10 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
         outDir.resolve(s"${n}_$tag.txt"), plan)
-      println(s"[plandump] $n -> ${n}_$tag.txt (${plan.length} chars)")
+      val exchanges = "Exchange (?!SinglePartition)".r
+        .findAllIn(df.queryExecution.executedPlan.toString).length
+      println(s"[plandump] $n -> ${n}_$tag.txt (${plan.length} chars, " +
+        s"$exchanges non-single-partition exchanges)")
     }
     graft.queries.Stage.clear()
     spark.stop()

@@ -23,14 +23,14 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `runMain graft.ScaleStress [factor] [outJson]` — generates
   * the expanded corpus under /tmp (once; keyed by factor), then runs
-  * each measured query TWICE per scale (run 1 pays JIT + shared-stage
-  * builds, run 2 is the steady plan) and prints one JSON line per
-  * measurement plus a final summary with the run-2 time ratio and the
-  * implied scaling exponent log(t_N/t_1)/log(N). A failed run is
-  * recorded with an `err` flag and EXCLUDED from the ratio/exponent
-  * summary — failure-path wall times must never grade as flattering
-  * scaling. When `outJson` is given, the same per-query measurements
-  * + summary are persisted there as one compact JSON line (the
+  * each measured query TWICE per scale through [[Harness.materialize]]
+  * (run 1 pays JIT + shared-stage builds, run 2 is the steady plan)
+  * and prints one JSON line per measurement plus a final summary with
+  * the run-2 time ratio and the implied scaling exponent
+  * log(t_N/t_1)/log(N). A failed run has no time (null) and an `err`
+  * flag, and is EXCLUDED from the ratio/exponent summary. When
+  * `outJson` is given, the same per-query measurements + summary are
+  * persisted there as one compact JSON line (the
   * committed SCALE_r{N}.json artifact, same discipline as Bench), so
   * the scale evidence re-grades from a file instead of NOTES prose.
   * BPE learning is additionally measured at production vocabulary
@@ -144,36 +144,24 @@ object ScaleStress {
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/testdata/sf0.1")
+    val base = Harness.sfDir
     val out = s"/tmp/graft_scale$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val localDir =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
-      else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", localDir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     expand(spark, base, out, factor)
 
     val qs = SparkEntry.queries
+    type Run = Either[String, Double]
     def r2(v: Double) = math.round(v * 100) / 100.0
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    // (query, dir) -> (run1, run2, errored) — an exception in EITHER
-    // run poisons the measurement: failure-path wall times are
-    // near-zero and would grade as flattering scaling if admitted.
+    // a failed run has no time: it prints as null
+    def secs(run: Run): String = run.fold(_ => "null", t => r2(t).toString)
+    def logFailure(what: String, run: Run): Unit =
+      run.left.foreach(m => System.err.println(s"[scale] $what: $m"))
+    def measurement(name: String, dir: String, t1: Run, t2: Run) =
+      s"""{"scale_q":"$name","dir":"$dir","run1":${secs(t1)},"run2":${secs(t2)},"err":${t1.isLeft || t2.isLeft}}"""
+    // (query, dir) -> (run1, run2) — a failure in EITHER run poisons the
+    // measurement and keeps it out of the ratio/exponent summary
     val results = scala.collection.mutable.LinkedHashMap
-      .empty[(String, String), (Double, Double, Boolean)]
+      .empty[(String, String), (Run, Run)]
     val extraLines = scala.collection.mutable.ArrayBuffer.empty[String]
     // hold the incremental-insert BATCH SHARE fixed across scales
     // (the scaling experiment is "the corpus grew N×, a 20% batch
@@ -191,38 +179,36 @@ object ScaleStress {
       if (incrOverride)
         sys.props("graft.ann.incr_base") =
           ((nVecByDir(dir) * 4) / 5).toString
-      var err = false
-      val t1 = time { try qs(name)(spark, dir).count()
-        catch { case e: Throwable => err = true
-          System.err.println(s"[scale] $name@$dir run1: ${e.getMessage}") } }
-      val t2 = time { try qs(name)(spark, dir).count()
-        catch { case e: Throwable => err = true
-          System.err.println(s"[scale] $name@$dir run2: ${e.getMessage}") } }
+      val Seq(t1, t2) = Seq("run1", "run2").map { run =>
+        val t = Harness.timed(Harness.materialize(qs(name)(spark, dir)))
+        logFailure(s"$name@$dir $run", t)
+        t
+      }
       if (incrOverride) sys.props.remove("graft.ann.incr_base")
-      results((name, dir)) = (t1, t2, err)
-      println(s"""{"scale_q":"$name","dir":"$dir","run1":${r2(t1)},"run2":${r2(t2)},"err":$err}""")
+      results((name, dir)) = (t1, t2)
+      println(measurement(name, dir, t1, t2))
     }
     // BPE toward production vocabulary sizes: the r10 watch-item is
     // driver-ACTION cost per merge round (2 actions + a checkpoint),
     // so time/round is the metric. The synthetic vocabulary exhausts
     // near ~90 merges (every word fully merged) — learn() raises
     // there; count the rounds that ran and report per-round cost.
+    val exhausted = "round (\\d+)".r
     for (v <- Seq(80); dir <- Seq(base, out)) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      var rounds = 0
-      var bpeErr = false
-      val t = time {
-        try { graft.text.Bpe.learn(docs, v); rounds = v }
-        catch { case e: IllegalArgumentException =>
-          // vocabulary exhausted mid-run is the EXPECTED stop on the
-          // synthetic corpus; any other message is a real failure
-          val m = "round (\\d+)".r.findFirstMatchIn(
-            Option(e.getMessage).getOrElse(""))
-          rounds = m.map(_.group(1).toInt - 1).getOrElse(0)
-          bpeErr = m.isEmpty
+      var rounds = v
+      val t = Harness.timed {
+        // vocabulary exhausted mid-run is the EXPECTED stop on the
+        // synthetic corpus; any other failure is a real one
+        try graft.text.Bpe.learn(docs, v)
+        catch { case e: IllegalArgumentException
+            if exhausted.findFirstIn(String.valueOf(e.getMessage)).isDefined =>
+          rounds = exhausted.findFirstMatchIn(e.getMessage).get
+            .group(1).toInt - 1
         }
       }
-      val line = s"""{"scale_q":"bpe_learn_v$v","dir":"$dir","wall":${r2(t)},"rounds":$rounds,"per_round":${r2(t / math.max(rounds, 1))},"err":$bpeErr}"""
+      logFailure(s"bpe_learn@$dir", t)
+      val line = s"""{"scale_q":"bpe_learn_v$v","dir":"$dir","wall":${secs(t)},"rounds":$rounds,"per_round":${secs(t.map(_ / math.max(rounds, 1)))},"err":${t.isLeft}}"""
       println(line); extraLines += line
       // the batched mitigation, same merge budget: admitted merges
       // per round over 20 rounds — round count (the driver-action
@@ -232,14 +218,12 @@ object ScaleStress {
       // the r11 verdict asked for.
       for ((rule, exact) <- Seq("exact" -> true, "legacy" -> false)) {
         var nMerges = 0
-        var batchErr = false
-        val tb = time {
-          try nMerges = graft.text.Bpe
+        val tb = Harness.timed {
+          nMerges = graft.text.Bpe
             .learnBatched(docs, 20, 4, exactConflicts = exact)._1.size
-          catch { case e: Throwable => batchErr = true
-            System.err.println(s"[scale] bpe_batched($rule)@$dir: ${e.getMessage}") }
         }
-        val lineB = s"""{"scale_q":"bpe_batched_r20m4_$rule","dir":"$dir","wall":${r2(tb)},"merges":$nMerges,"per_merge":${r2(tb / math.max(nMerges, 1))},"err":$batchErr}"""
+        logFailure(s"bpe_batched($rule)@$dir", tb)
+        val lineB = s"""{"scale_q":"bpe_batched_r20m4_$rule","dir":"$dir","wall":${secs(tb)},"merges":$nMerges,"per_merge":${secs(tb.map(_ / math.max(nMerges, 1)))},"err":${tb.isLeft}}"""
         println(lineB); extraLines += lineB
       }
     }
@@ -252,42 +236,45 @@ object ScaleStress {
     // subset (the cap only DROPS buckets), so recall = capped/uncapped
     // dup pairs.
     if (factor > 8) {
-      def cappedRun(cap: Option[Int]): (Double, Long, Long, Boolean) = {
+      def cappedRun(cap: Option[Int]): (Run, Long, Long) = {
         cap.foreach(c =>
           sys.props("graft.multimodal.max_band_bucket") = c.toString)
+        var df: DataFrame = null
         try {
-          var n = 0L; var nd = 0L; var err = false
-          val t = time {
-            try {
-              val df = qs("q_m_audio_dup")(spark, out).cache()
-              n = df.count()
-              nd = df.filter(col("is_dup")).count()
-              df.unpersist()
-            } catch { case e: Throwable => err = true
-              System.err.println(s"[scale] audio_dup_cap: ${e.getMessage}") }
+          val t = Harness.timed {
+            df = qs("q_m_audio_dup")(spark, out).cache()
+            Harness.materialize(df)
           }
-          (t, n, nd, err)
-        } finally cap.foreach(_ =>
-          sys.props.remove("graft.multimodal.max_band_bucket"))
+          logFailure("audio_dup_cap", t)
+          // the pair counts read the cache the timed run filled
+          if (t.isLeft) (t, 0L, 0L)
+          else (t, df.count(), df.filter(col("is_dup")).count())
+        } finally {
+          if (df != null) df.unpersist()
+          cap.foreach(_ =>
+            sys.props.remove("graft.multimodal.max_band_bucket"))
+        }
       }
-      val (tU, nU, ndU, eU) = cappedRun(None)
-      val (tC, nC, ndC, eC) = cappedRun(Some(8))
+      val (tU, nU, ndU) = cappedRun(None)
+      val (tC, nC, ndC) = cappedRun(Some(8))
       val rec = ndC.toDouble / math.max(ndU, 1L).toDouble
-      val line = s"""{"scale_q":"audio_dup_cap8","dir":"$out","wall_uncapped":${r2(tU)},"wall_capped":${r2(tC)},"pairs_uncapped":$nU,"pairs_capped":$nC,"dup_pairs_uncapped":$ndU,"dup_pairs_capped":$ndC,"dup_recall_capped":${r2(rec)},"err":${eU || eC}}"""
+      val line = s"""{"scale_q":"audio_dup_cap8","dir":"$out","wall_uncapped":${secs(tU)},"wall_capped":${secs(tC)},"pairs_uncapped":$nU,"pairs_capped":$nC,"dup_pairs_uncapped":$ndU,"dup_pairs_capped":$ndC,"dup_recall_capped":${r2(rec)},"err":${tU.isLeft || tC.isLeft}}"""
       println(line); extraLines += line
     }
     val summary = Measured.map { n =>
-      val (_, s1, e1) = results((n, base))
-      val (_, sN, eN) = results((n, out))
-      if (e1 || eN)
-        s""""$n":{"t1":${r2(s1)},"tN":${r2(sN)},"err":true}"""
-      else {
-        val ratio = sN / math.max(s1, 1e-9)
-        val expo = math.log(math.max(ratio, 1e-9)) / math.log(factor)
-        s""""$n":{"t1":${r2(s1)},"tN":${r2(sN)},"ratio":${r2(ratio)},"exponent":${r2(expo)}}"""
+      val (b1, b2) = results((n, base))
+      val (o1, o2) = results((n, out))
+      (b2, o2) match {
+        case (Right(s1), Right(sN)) if b1.isRight && o1.isRight =>
+          val ratio = sN / math.max(s1, 1e-9)
+          val expo = math.log(math.max(ratio, 1e-9)) / math.log(factor)
+          s""""$n":{"t1":${r2(s1)},"tN":${r2(sN)},"ratio":${r2(ratio)},"exponent":${r2(expo)}}"""
+        case _ =>
+          s""""$n":{"t1":${secs(b2)},"tN":${secs(o2)},"err":true}"""
       }
     }.mkString("{", ",", "}")
-    val errCount = results.valuesIterator.count(_._3)
+    val errCount = results.valuesIterator
+      .count { case (t1, t2) => t1.isLeft || t2.isLeft }
     val headline =
       s"""{"metric":"scale_stress","factor":$factor,"err_count":$errCount,"queries":$summary}"""
     println(headline)
@@ -295,8 +282,8 @@ object ScaleStress {
     // up front, the Bench tail-window discipline), then the raw
     // per-measurement lines for re-derivation
     args.lift(1).foreach { path =>
-      val raw = results.map { case ((n, d), (t1b, t2b, e)) =>
-        s"""{"scale_q":"$n","dir":"$d","run1":${r2(t1b)},"run2":${r2(t2b)},"err":$e}"""
+      val raw = results.map { case ((n, d), (t1, t2)) =>
+        measurement(n, d, t1, t2)
       } ++ extraLines
       val w = new java.io.PrintWriter(path)
       try { w.println(headline); raw.foreach(w.println) }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -22,24 +21,7 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.drop(2).toSet // optional query-name filter (local dev)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle/spill on tmpfs when available: local-mode shuffle files on
-    // the root disk are the first thing to degrade under back-to-back
-    // heavy runs
-    val localDir =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
-      else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", localDir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -78,8 +60,6 @@ object Verify {
           String.valueOf(e.getMessage).take(200))}}""")
       }
     }
-    val width = sys.env.get("GRAFT_VERIFY_POOL")
-      .flatMap(_.toIntOption).getOrElse(4)
     val dumps = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .map { case (name, fn) =>
@@ -99,7 +79,7 @@ object Verify {
           ()
         }
       }
-    graft.ops.Pools.awaitAll(dumps, width = width)
+    graft.ops.Pools.awaitAll(dumps, width = 4)
     graft.queries.Stage.clear()
     spark.stop()
   }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.DataFrame
   * keeps the intra-query reuse (the whole point of the cache: the
   * shingle table feeds sizes + frequency prune + holder lists in one
   * build) while `release()` / `clear()` — the latter wired into
-  * `queries.Stage.clear()`, which every Verify/Bench/ScaleStress main
-  * already calls per run — returns the memory. */
+  * `queries.Stage.clear()`, which the Bench, Verify, PlanDump and
+  * ScaleStress mains call per run — returns the memory. */
 object CacheReg {
 
   private val tracked =

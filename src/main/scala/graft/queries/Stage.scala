@@ -13,8 +13,9 @@ import org.apache.spark.storage.StorageLevel
   * uncached so per-query column pruning still reaches the scan; the
   * cached frames are a handful of narrow columns (keys + state + close),
   * which is what every downstream consumer actually reads. `clear()` is
-  * the per-run eviction hook (called by the Verify/Bench mains) so a
-  * long-lived session doesn't accumulate persisted frames.
+  * the per-run eviction hook (called by the Bench, Verify, PlanDump and
+  * ScaleStress mains) so a long-lived session doesn't accumulate
+  * persisted frames.
   */
 object Stage {
 

@@ -27,19 +27,15 @@ object Warmup {
     * members concurrently). Safe to call more than once — Stage.cached
     * memoizes. Returns wall seconds per phase and per build (the
     * bench JSON reports both so stage-build cost is separable from
-    * query cost). Set GRAFT_WARMUP_TIMES=1 to additionally print
-    * per-build wall times to stderr as they finish. */
+    * query cost). */
   def prewarm(spark: SparkSession, dir: String): Report = {
     graft.SparkEntry.tune(spark)
-    val timed = sys.env.get("GRAFT_WARMUP_TIMES").contains("1")
-    // Phase-level build concurrency (GRAFT_WARMUP_POOL). Each build is
-    // itself a multi-job Spark program that can fill all task slots;
-    // running many at once mostly contends for the same slots and
-    // shuffle I/O — under a loaded host (the driver's bench conditions)
-    // 8-wide phases measured 2-6× their idle-machine cost. A modest
-    // width keeps slots fed through stragglers without that pile-up.
-    val width = sys.env.get("GRAFT_WARMUP_POOL")
-      .flatMap(_.toIntOption).getOrElse(4)
+    // Phase-level build concurrency. Each build is itself a multi-job
+    // Spark program that can fill all task slots; running many at once
+    // mostly contends for the same slots and shuffle I/O — under a
+    // loaded host 8-wide phases measured 2-6× their idle-machine cost.
+    // Width 4 keeps slots fed through stragglers without that pile-up.
+    val width = 4
     val phaseTimes = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val buildTimes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
     def phase(label: String, builds: Seq[(String, () => Any)]): Unit = {
@@ -48,10 +44,7 @@ object Warmup {
         () => {
           val t0 = System.nanoTime()
           val r = b()
-          val secs = (System.nanoTime() - t0) / 1e9
-          buildTimes.add(name -> secs)
-          if (timed) System.err.println(
-            f"[warmup] $name%-28s $secs%7.2f s")
+          buildTimes.add(name -> (System.nanoTime() - t0) / 1e9)
           r
         }
       }, width = width)
