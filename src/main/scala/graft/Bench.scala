@@ -9,9 +9,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = Harness.sfDir
     val spark = Harness.session(Harness.cpus)
-    var warmRep = graft.queries.Warmup.Report(Seq.empty, Seq.empty)
+    var warmBuilds = Seq.empty[(String, Double)]
     val warm = Harness.timed {
-      warmRep = graft.queries.Warmup.prewarm(spark, sfDir) }
+      warmBuilds = graft.queries.Warmup.prewarm(spark, sfDir) }
     val runs = SparkEntry.queries.toSeq.map { case (name, fn) =>
       name -> Harness.timed(Harness.materialize(fn(spark, sfDir)))
     }
@@ -35,7 +35,7 @@ object Bench {
     val head = s""""metric":"total","value":${r3(warm.getOrElse(0.0) + querySum)},"unit":"sec","warmup_s":${warm.fold(_ => "null", r3(_).toString)},"query_sum":${r3(querySum)},"n_queries":${runs.size},"n_failed":${failed.size},"sf":"$sfDir""""
     // per-build warmup times: top 12 by wall, the ranking signal for the
     // next prewarm decision
-    println(s"""{$head,"failed":${names.mkString("[", ",", "]")},"warmup":${obj(warmRep.phases).mkString("{", ",", "}")},"warmup_builds":${obj(warmRep.builds.sortBy(-_._2).take(12)).mkString("{", ",", "}")},"queries":${obj(secs).mkString("{", ",", "}")}}""")
+    println(s"""{$head,"failed":${names.mkString("[", ",", "]")},"warmup_builds":${obj(warmBuilds.sortBy(-_._2).take(12)).mkString("{", ",", "}")},"queries":${obj(secs).mkString("{", ",", "}")}}""")
     // compact last line: the headline fields first, then as many failed
     // names and slowest queries as keep the line under 1,800 chars
     val shown = fit(names, 600)

@@ -19,7 +19,7 @@ object Pools {
 
   /** Run independent driver-side tasks concurrently and wait for all.
     * Each call gets its OWN short-lived pool (bounded at 8): orchestration
-    * tasks that themselves call awaitAll (warmup phases → stage builders
+    * tasks that themselves call awaitAll (warmup → stage builders
     * → per-sim builds) therefore never compete for a shared thread pool —
     * a parent blocked in awaitAll can never starve its children of
     * threads, which a shared fixed pool would allow once every worker is

@@ -62,11 +62,9 @@ object AnnStages {
 
   /** Fitted PCA, memoized per sf dir (the broadcast-fit contract —
     * trained once, shipped to every consumer). */
-  private[queries] val pcaMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.ml.PowerPca.Fit]
   private[queries] def pcaFitted(s: SparkSession, dir: String)
       : graft.ml.PowerPca.Fit =
-    pcaMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "pca_fit")(
       graft.ml.PowerPca.fit(t(s, dir, "embeddings"),
         PcaComps, PcaIters,
         // pcaCtes unrolls the oracle for exactly this dimension —
@@ -86,11 +84,9 @@ object AnnStages {
 
   /** PCA fit at the A/B's matched dimension (dimred.dim components ×
     * dimred.pca_iters rounds), memoized per sf dir. */
-  private[queries] val pcaDrMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.ml.PowerPca.Fit]
   private[queries] def pcaDrFitted(s: SparkSession, dir: String)
       : graft.ml.PowerPca.Fit =
-    pcaDrMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "pca_dimred_fit")(
       graft.ml.PowerPca.fit(t(s, dir, "embeddings"), DimredDim,
         DimredPcaIters,
         expectDims = Some(graft.Settings.ann.embeddingDim)))
@@ -309,19 +305,15 @@ object AnnStages {
           col("embedding").cast("array<double>"), d).as("embedding"))
     }
 
-  private[queries] val lloydCbRotMemo = scala.collection.concurrent.TrieMap
-    .empty[String, IndexedSeq[IndexedSeq[Array[Double]]]]
   private[queries] def lloydCbRot(s: SparkSession, dir: String)
       : IndexedSeq[IndexedSeq[Array[Double]]] =
-    lloydCbRotMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "lloyd_cb_rot")(
       Similarity.lloydCodebook(opqRotated(s, dir), m = PqM,
         subK = PqSubK, iters = PqLloydIters))
 
-  private[queries] val lloydCbWideMemo = scala.collection.concurrent.TrieMap
-    .empty[String, IndexedSeq[IndexedSeq[Array[Double]]]]
   private[queries] def lloydCbWide(s: SparkSession, dir: String)
       : IndexedSeq[IndexedSeq[Array[Double]]] =
-    lloydCbWideMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "lloyd_cb_wide")(
       Similarity.lloydCodebook(t(s, dir, "embeddings"), m = 2 * PqM,
         subK = PqSubK, iters = PqLloydIters))
 
@@ -528,11 +520,9 @@ object AnnStages {
     * production artifact (codebooks are trained offline and shipped to
     * every encoder/server), memoized driver-side like the index
     * signatures. */
-  private[queries] val kmCbMemo = scala.collection.concurrent.TrieMap
-    .empty[String, IndexedSeq[IndexedSeq[Array[Double]]]]
   private[queries] def kmCodebook(s: SparkSession, dir: String)
       : IndexedSeq[IndexedSeq[Array[Double]]] =
-    kmCbMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "km_codebook")(
       Similarity.kmeansCodebook(t(s, dir, "embeddings"), m = PqM,
         subK = PqSubK))
 
@@ -563,11 +553,9 @@ object AnnStages {
   /** DETERMINISTIC fitted codebook (per-subspace `LloydKmeans`) — the
     * hash-checkable counterpart to [[kmCodebook]]; memoized per sf dir
     * like the other stored index artifacts. */
-  private[queries] val lloydCbMemo = scala.collection.concurrent.TrieMap
-    .empty[String, IndexedSeq[IndexedSeq[Array[Double]]]]
   private[queries] def lloydCb(s: SparkSession, dir: String)
       : IndexedSeq[IndexedSeq[Array[Double]]] =
-    lloydCbMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "lloyd_codebook")(
       Similarity.lloydCodebook(t(s, dir, "embeddings"), m = PqM,
         subK = PqSubK, iters = PqLloydIters))
 
@@ -627,19 +615,16 @@ object AnnStages {
     * (vid, cell, codes) table) — the standing IVF-PQ index the
     * streaming/batch serving path queries. The table is a cached stage;
     * at 100 TB it is a stored table hash-partitioned by cell. */
-  private[queries] val serveArtMemo = scala.collection.concurrent.TrieMap.empty[
-    String, (graft.streaming.StreamingAnnServe.Cells,
-      graft.streaming.StreamingEncode.Codebook)]
   private[queries] def serveArtifacts(s: SparkSession, dir: String)
       : (graft.streaming.StreamingAnnServe.Cells,
          graft.streaming.StreamingEncode.Codebook) =
-    serveArtMemo.getOrElseUpdate(dir, {
+    Stage.memo(s, dir, "serve_artifacts") {
       val emb = t(s, dir, "embeddings")
       (graft.streaming.StreamingAnnServe.seedCells(emb,
           nCells = IvfNCells),
         graft.streaming.StreamingEncode.seedCodebook(emb, m = PqM,
           subK = PqSubK))
-    })
+    }
   private[queries] def annServeIndex(s: SparkSession, dir: String)
       : DataFrame =
     Stage.cached(s, dir, "ann_serve_index") {
@@ -704,18 +689,15 @@ object AnnStages {
     * 0.113→0.056 at sf0.01) plus the per-subspace Lloyd residual
     * codebook. Stored production artifacts, memoized per sf dir like
     * the other codebooks. */
-  private[queries] val residArtMemo = scala.collection.concurrent.TrieMap.empty[
-    String, (IndexedSeq[Array[Double]],
-      IndexedSeq[IndexedSeq[Array[Double]]])]
   private[queries] def residArtifacts(s: SparkSession, dir: String)
       : (IndexedSeq[Array[Double]],
          IndexedSeq[IndexedSeq[Array[Double]]]) =
-    residArtMemo.getOrElseUpdate(dir, {
+    Stage.memo(s, dir, "resid_artifacts") {
       val emb = t(s, dir, "embeddings")
       val cells = Similarity.lloydCoarseCells(emb, IvfNCells, CoarseIters)
       (cells, Similarity.lloydResidualCodebook(emb, cells, PqM, PqSubK,
         PqLloydIters))
-    })
+    }
 
   /** Residual-IVF-PQ ADC short list (top-$RerankR per query) — ONE
     * build shared by the top-5 query (its rnk ≤ k prefix), the exact
@@ -742,20 +724,17 @@ object AnnStages {
     * fit ONLY on the base snapshot (`vec_id < IncrBase`) — the frozen
     * state an append-only index grows against (faiss add-without-
     * train). Later batches are encoded with these, never refit. */
-  private[queries] val incrArtMemo = scala.collection.concurrent.TrieMap.empty[
-    String, (IndexedSeq[Array[Double]],
-      IndexedSeq[IndexedSeq[Array[Double]]])]
   private[queries] def incrArtifacts(s: SparkSession, dir: String)
       : (IndexedSeq[Array[Double]],
          IndexedSeq[IndexedSeq[Array[Double]]]) =
-    incrArtMemo.getOrElseUpdate(dir, {
+    Stage.memo(s, dir, "incr_artifacts") {
       val base = t(s, dir, "embeddings")
         .filter(col("vec_id") < IncrBase)
       val cells = Similarity.lloydCoarseCells(base, IvfNCells,
         CoarseIters)
       (cells, Similarity.lloydResidualCodebook(base, cells, PqM, PqSubK,
         PqLloydIters))
-    })
+    }
 
   /** The incrementally-grown standing index: the base batch encoded at
     * fit time UNION the delta batch append-encoded later against the

@@ -1190,17 +1190,15 @@ object CurationQueries extends QueryModule {
 
   /** Fitted weights, memoized per sf dir (a classifier is trained once
     * and shipped to every consumer — the bpeLearned contract). */
-  private val qclfMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.text.QualityClf.Weights]
   private[queries] def qclfWeights(s: SparkSession, dir: String)
       : graft.text.QualityClf.Weights =
-    qclfMemo.getOrElseUpdate(dir, {
+    Stage.memo(s, dir, "qclf_weights") {
       val featY = qclfFeatY(s, dir)
       // one bias row per labeled doc → the GD normalizer, off the
       // cached stage (no second pass over documents)
       val n = featY.filter(col("bk") === -1L).count().toDouble
       graft.text.QualityClf.fit(featY, QcB, QcLr, QcIters, n)
-    })
+    }
 
   private[queries] def qclfCtes: String = graft.text.QualityClf.oracleSql(
     hsql, QcB, QcLr, QcIters, QcThresh)
@@ -1209,11 +1207,9 @@ object CurationQueries extends QueryModule {
     * qclfWeights contract: chosen once, shipped to every consumer —
     * pipeline stage 6, the threshold report, streaming curation).
     * Driver cost: one 10-row collect over the scored stage. */
-  private val qclfThrMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Double]
   private[queries] def qclfThreshold(s: SparkSession, dir: String)
       : Double =
-    qclfThrMemo.getOrElseUpdate(dir, {
+    Stage.memo(s, dir, "qclf_threshold") {
       val rows = graft.text.QualityClf.thresholdMetrics(
           graft.text.QualityClf.score(qclfFeatY(s, dir),
             qclfWeights(s, dir)))
@@ -1222,21 +1218,19 @@ object CurationQueries extends QueryModule {
           (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
         .toSeq
       graft.text.QualityClf.chooseThreshold(rows, QcTarget)
-    })
+    }
 
   /** Held-out-evaluation model: the same pinned GD fitted ONLY on the
     * train slice (doc_id % 5 ≠ 0 — the family's standing batch
     * convention, the bpeIncr/idxStarEdges split), frozen, scored on
     * everything. */
-  private val qclfHoMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.text.QualityClf.Weights]
   private[queries] def qclfHeldoutWeights(s: SparkSession, dir: String)
       : graft.text.QualityClf.Weights =
-    qclfHoMemo.getOrElseUpdate(dir, {
+    Stage.memo(s, dir, "qclf_heldout_weights") {
       val train = qclfFeatY(s, dir).filter(col("doc_id") % 5 =!= 0)
       val n = train.filter(col("bk") === -1L).count().toDouble
       graft.text.QualityClf.fit(train, QcB, QcLr, QcIters, n)
-    })
+    }
 
   private def qclfHoCtes: String = graft.text.QualityClf.oracleSql(
     hsql, QcB, QcLr, QcIters, QcThresh, fitPred = "doc_id % 5 <> 0")

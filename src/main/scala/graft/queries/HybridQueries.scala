@@ -82,10 +82,12 @@ object HybridQueries extends QueryModule {
       run: Run): DataFrame = run.mode match {
     case None => BacktestQueries2.comboScored(s, dir)
     case Some(m) => Stage.cached(s, dir, s"hyb_scored_${run.key}") {
-      val frames = SigVariants.map { case (sm, cb) =>
-        keyedFrame(gatedSig(s, dir, Some(m), sm, cb), sm, cb,
-          cellPrefix = Nil)
-      }
+      // the 4 gated signal stages build concurrently, as in wfMetrics
+      val frames = graft.ops.Pools.awaitAll(SigVariants.map {
+        case (sm, cb) => () =>
+          keyedFrame(gatedSig(s, dir, Some(m), sm, cb), sm, cb,
+            cellPrefix = Nil)
+      })
       val trades = Engine.simulateKeyed(frames.reduce(_.unionByName(_)))
         .toDF()
       import s.implicits._
@@ -99,17 +101,6 @@ object HybridQueries extends QueryModule {
         BacktestQueries2.comboMetricsRowsKeyed(trades, cells))
     }
   }
-
-  /** Warmup hooks: the (gate × variant) signal stages, buildable as soon
-    * as gramSlim exists — wfMetrics and the overlay grids then read
-    * every frame from cache instead of racing to build the shared ones. */
-  private[queries] def sigBuilds(s: SparkSession,
-      dir: String): Seq[(String, () => Any)] =
-    for {
-      g <- Seq(None, Some("block_veto"), Some("allow_only"))
-      (m, cb) <- SigVariants
-    } yield (s"gatedSig:${g.getOrElse("base")}:${m}_$cb",
-      () => { gatedSig(s, dir, g, m, cb).count(); () })
 
   /** Tag a signal frame with per-combo cell/config columns: each of the
     * variant's combos (same signal chain, different hold/fee) becomes

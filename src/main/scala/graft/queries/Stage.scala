@@ -1,13 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** Per-session memo of shared pipeline stages (grammar frame, trade
-  * frame): several registered queries consume the same upstream chain;
-  * without this each query re-runs indicators + grammar + the simulator.
-  * Mirrors the reference's staged-artifact reuse (each layer persisted
-  * once, consumed many times) — here as cached in-memory stages.
+/** The one memo for shared artifacts: every fit, codebook, merge
+  * table and cached pipeline stage that several registered queries
+  * consume goes through [[memo]] (or [[cached]], which is `memo` plus a
+  * checkpoint), so its key, lifetime and concurrency are decided here
+  * and nowhere else. Mirrors the reference's staged-artifact reuse
+  * (each layer persisted once, consumed many times).
   *
   * Only SLIM projections are cached: the wide grammar frame stays
   * uncached so per-query column pruning still reaches the scan; the
@@ -15,25 +15,37 @@ import org.apache.spark.storage.StorageLevel
   * which is what every downstream consumer actually reads. `clear()` is
   * the per-run eviction hook (called by the Bench, Verify, PlanDump and
   * ScaleStress mains) so a long-lived session doesn't accumulate
-  * persisted frames.
+  * persisted frames or keep fits made under stale Settings.
   */
 object Stage {
 
   /** Per-key build latch: `lazy val` gives exactly-once evaluation
     * under arbitrary concurrency (losers of the putIfAbsent race block
     * on the winner's monitor instead of double-building a multi-second
-    * stage — TrieMap.getOrElseUpdate alone evaluates a contended thunk
-    * in every racing thread). `forced` guards [[clear]] from
-    * triggering a build just to unpersist it. */
-  private final class Memo(build: () => DataFrame) {
+    * artifact). `forced` guards [[clear]] from triggering a build just
+    * to release it. */
+  private final class Memo(build: () => Any) {
     @volatile private var forced = false
-    lazy val value: DataFrame = { val v = build(); forced = true; v }
-    def ifForced: Option[DataFrame] = if (forced) Some(value) else None
+    lazy val value: Any = { val v = build(); forced = true; v }
+    def ifForced: Option[Any] = if (forced) Some(value) else None
   }
 
   private val cache =
     scala.collection.concurrent.TrieMap.empty[(Int, String, String),
       Memo]
+
+  /** Memoized artifact, built at most once per (session, dir, name)
+    * until the next [[clear]]. Concurrent consumers of one key share a
+    * single build; a builder that needs another unbuilt key builds it
+    * or waits on its running builder, so dependency order needs no
+    * choreography from callers. Names share one namespace with
+    * [[cached]] stages. */
+  def memo[T](spark: SparkSession, dir: String, name: String)(
+      build: => T): T = {
+    val m = new Memo(() => build)
+    cache.putIfAbsent((System.identityHashCode(spark), dir, name), m)
+      .getOrElse(m).value.asInstanceOf[T]
+  }
 
   /** Memoized, lineage-truncated stage. localCheckpoint (eager,
     * MEMORY_AND_DISK blocks) instead of persist(): a persisted frame
@@ -48,8 +60,7 @@ object Stage {
     *
     * Strictly per-session: every run (bench, verify, oracle) recomputes
     * all stages from the parquet inputs — nothing is persisted across
-    * JVM invocations. Concurrent consumers of the same key build it
-    * exactly ONCE (see [[Memo]]) — no pre-touch choreography needed. */
+    * JVM invocations. */
   def cached(spark: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame = {
     import graft.ops.Ckpt._
@@ -57,23 +68,22 @@ object Stage {
     // dumped query plan INLINES its stage subtrees instead of showing
     // LogicalRDD leaves — plan-evidence mode, never set by the
     // bench/verify/driver paths (still memoized, under a disjoint key)
-    val (key, thunk) =
-      if (sys.env.get("GRAFT_STAGE_LAZY").contains("1"))
-        ((System.identityHashCode(spark), dir, "lazy:" + name),
-          () => build)
-      else ((System.identityHashCode(spark), dir, name),
-        () => build.graftCheckpoint())
-    val memo = new Memo(thunk)
-    cache.putIfAbsent(key, memo).getOrElse(memo).value
+    if (sys.env.get("GRAFT_STAGE_LAZY").contains("1"))
+      memo(spark, dir, "lazy:" + name)(build)
+    else memo(spark, dir, name)(build.graftCheckpoint())
   }
 
-  /** Drop every memoized stage (end-of-run eviction). Checkpointed
-    * block storage is released by the ContextCleaner once the dropped
-    * DataFrame references are GC'd; unpersist() additionally clears any
-    * CacheManager entries (e.g. the CC edge cache). Never-forced memos
-    * are dropped without building them. */
+  /** Drop every memoized artifact (end-of-run eviction). Forced
+    * DataFrame stages are unpersisted — checkpointed block storage is
+    * released by the ContextCleaner once the dropped references are
+    * GC'd, and unpersist() additionally clears any CacheManager entries
+    * (e.g. the CC edge cache); fits and other values are just dropped.
+    * Never-forced memos are dropped without building them. */
   def clear(): Unit = {
-    cache.values.foreach(_.ifForced.foreach(_.unpersist(blocking = false)))
+    cache.values.foreach(_.ifForced.foreach {
+      case ds: Dataset[_] => ds.unpersist(blocking = false)
+      case _ =>
+    })
     cache.clear()
     graft.ops.CacheReg.clear()
   }

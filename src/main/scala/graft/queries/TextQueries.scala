@@ -19,8 +19,8 @@ object TextQueries extends QueryModule {
   // defs, not vals, so an override re-interpolates BOTH the engine
   // plans and the oracle SQL below (the registry-as-def desync-proof
   // pattern the hardening/calibration families use). The memoized
-  // fitted artifacts (codebooks, stages) are keyed per sf dir and are
-  // NOT invalidated by an override — override before first use.
+  // fitted artifacts (codebooks, stages) live in Stage.memo until the
+  // next Stage.clear() — override before first use or clear after.
   private[queries] def AnnQ = graft.Settings.ann.nQueries
   private[queries] def AnnK = graft.Settings.ann.topK
   private[queries] def PqM = graft.Settings.ann.pqM
@@ -274,11 +274,9 @@ object TextQueries extends QueryModule {
   /** Learned BPE artifacts (merge table + final word → symbols
     * vocabulary), memoized per sf dir like the fitted ANN codebooks —
     * a tokenizer is trained once and shipped to every consumer. */
-  private[queries] val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[graft.text.Bpe.Merge], DataFrame)]
   private[queries] def bpeLearned(s: SparkSession, dir: String)
       : (Seq[graft.text.Bpe.Merge], DataFrame) =
-    bpeMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "bpe_learned")(
       graft.text.Bpe.learn(t(s, dir, "documents"), BpeMerges))
 
   /** The word → subword-pieces table as a Stage-managed frame (it is
@@ -301,11 +299,9 @@ object TextQueries extends QueryModule {
   /** Byte-level BPE artifacts (GPT-2 alphabet — Bpe.learnBytes over
     * real UTF-8 bytes of [[byteDocs]]), memoized per sf dir like the
     * char-level fit. */
-  private[queries] val bpeBytesMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[graft.text.Bpe.Merge], DataFrame)]
   private[queries] def bpeBytesLearned(s: SparkSession, dir: String)
       : (Seq[graft.text.Bpe.Merge], DataFrame) =
-    bpeBytesMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "bpe_bytes_learned")(
       graft.text.Bpe.learnBytes(byteDocs(s, dir), BpeMerges))
 
   private[queries] def bpeBytesVocab(s: SparkSession, dir: String)
@@ -324,11 +320,9 @@ object TextQueries extends QueryModule {
 
   /** Fitted unigram model, memoized per sf dir (the bpeLearned
     * contract — trained once, shipped to every consumer). */
-  private[queries] val uniMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.text.Unigram.Fit]
   private[queries] def uniLearned(s: SparkSession, dir: String)
       : graft.text.Unigram.Fit =
-    uniMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "uni_learned")(
       graft.text.Unigram.learn(t(s, dir, "documents"), UniSeed, UniL,
         UniRounds, UniKeep, UniUnk, UniMaxW))
 
@@ -339,11 +333,9 @@ object TextQueries extends QueryModule {
   /** Index-slice unigram fit (doc_id % 5 ≠ 0 — the family's standing
     * batch convention) — the frozen artifact the incremental encode
     * serves from. */
-  private[queries] val uniIncrMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.text.Unigram.Fit]
   private[queries] def uniIncrLearned(s: SparkSession, dir: String)
       : graft.text.Unigram.Fit =
-    uniIncrMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "uni_incr_learned")(
       graft.text.Unigram.learn(
         t(s, dir, "documents").filter(col("doc_id") % 5 =!= 0),
         UniSeed, UniL, UniRounds, UniKeep, UniUnk, UniMaxW))
@@ -356,11 +348,9 @@ object TextQueries extends QueryModule {
 
   /** Fitted WordPiece model, memoized per sf dir (the bpeLearned
     * contract — trained once, shipped to every consumer). */
-  private[queries] val wpMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.text.WordPiece.Fit]
   private[queries] def wpLearned(s: SparkSession, dir: String)
       : graft.text.WordPiece.Fit =
-    wpMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "wp_learned")(
       graft.text.WordPiece.learn(t(s, dir, "documents"), WpMerges,
         WpMaxPiece, WpMaxW))
 
@@ -375,11 +365,9 @@ object TextQueries extends QueryModule {
   /** Index-slice WordPiece fit (doc_id % 5 ≠ 0, the family's standing
     * batch convention) — the frozen artifact the incremental encode
     * serves from. */
-  private[queries] val wpIncrMemo = scala.collection.concurrent.TrieMap
-    .empty[String, graft.text.WordPiece.Fit]
   private[queries] def wpIncrLearned(s: SparkSession, dir: String)
       : graft.text.WordPiece.Fit =
-    wpIncrMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "wp_incr_learned")(
       graft.text.WordPiece.learn(
         t(s, dir, "documents").filter(col("doc_id") % 5 =!= 0),
         WpMerges, WpMaxPiece, WpMaxW))
@@ -409,22 +397,18 @@ object TextQueries extends QueryModule {
 
   /** Batched-learning artifacts (Bpe.learnBatched at the live
     * `bpe.batch_*` knobs), memoized like [[bpeLearned]]. */
-  private[queries] val bpeBatchMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[graft.text.Bpe.BatchMerge], DataFrame)]
   private[queries] def bpeBatchLearned(s: SparkSession, dir: String)
       : (Seq[graft.text.Bpe.BatchMerge], DataFrame) =
-    bpeBatchMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "bpe_batch_learned")(
       graft.text.Bpe.learnBatched(t(s, dir, "documents"),
         BpeBatchRounds, BpeBatchM))
 
   /** INCREMENTAL tokenizer state: merges learned only on the standing
     * index corpus (doc_id % 5 ≠ 0 — the family's batch convention), the
     * frozen artifact new deliveries are encoded against. */
-  private[queries] val bpeIncrMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[graft.text.Bpe.Merge], DataFrame)]
   private[queries] def bpeIncrLearned(s: SparkSession, dir: String)
       : (Seq[graft.text.Bpe.Merge], DataFrame) =
-    bpeIncrMemo.getOrElseUpdate(dir,
+    Stage.memo(s, dir, "bpe_incr_learned")(
       graft.text.Bpe.learn(
         t(s, dir, "documents").filter(col("doc_id") % 5 =!= 0),
         BpeMerges))

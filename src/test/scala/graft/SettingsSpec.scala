@@ -409,6 +409,24 @@ class SettingsSpec extends SparkSpec {
     }
   }
 
+  test("a Settings override reaches a memoized fit after Stage.clear()") {
+    // the engine's fit must follow the same knob the oracle text does:
+    // the fitted weights are a Stage.memo value, so clear() drops them
+    val dir = "/root/testdata/sf0.001"
+    def fitRows(): Seq[String] =
+      SparkEntry.queries("q_t_quality_clf_fit")(spark, dir).collect()
+        .map(_.toString).sorted.toSeq
+    graft.queries.Stage.clear()
+    val default = fitRows()
+    graft.queries.Stage.clear()
+    val short = withProp("graft.quality_clf.iters", "4") {
+      try fitRows() finally graft.queries.Stage.clear()
+    }
+    assert(default.nonEmpty && short.nonEmpty)
+    assert(default != short,
+      "quality_clf.iters override did not reach the memoized fit")
+  }
+
   test("wordpiece / stupid-backoff / nndescent knob overrides " +
       "re-interpolate engine and oracle") {
     // wordpiece defaults + the unroll-depth flows: merge rounds end
