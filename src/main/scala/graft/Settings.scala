@@ -574,7 +574,7 @@ object Settings {
     * round scans twice is CORPUS-sized, so unlike the vocab-bounded
     * tokenizer tables it must widen with the data:
     * nPart = clamp(ceil(N·d / rows_per_task), 1, defaultParallelism)
-    * (the Hmm E-step adaptive-width pattern). The default keeps the
+    * (the ml.FitRounds width rule every iterative fit sizes by). The default keeps the
     * driver fixture at the measured 8-partition knee while a 100 TB
     * corpus saturates the cluster. */
   object pca {
@@ -595,7 +595,7 @@ object Settings {
     * (Bpe.learn / Bpe.learnBatched / Unigram.learn / WordPiece.learn /
     * NnDescent.topK) so the 100×-scale story is a config change.
     * NOT for corpus-sized frames — those size adaptively
-    * (`pca.rows_per_task`, Hmm's nPart). */
+    * (`pca.rows_per_task`, the ml.FitRounds per-fit constants). */
   object tuning {
     def smallFrameParts: Int = {
       val v = int("tuning.small_frame_parts", 8)

@@ -1,6 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -213,83 +214,80 @@ object Hmm {
     Model(k, m.d, newPi, newA, newMu, newVar)
   }
 
-  /** Baum-Welch fit over per-key sequences (driver-side over the bounded
-    * sample, like the reference's hmmlearn call). */
-  def fitResult(seqs: Seq[Array[Array[Double]]], k: Int, nIter: Int = 50,
-      tol: Double = 1e-3): FitResult = {
-    var m = init(k, seqs)
+  /** E-step points in one partition of a distributed fit, and the most
+    * points a fit folds on the driver. Measured on a 4-core host: a
+    * spread round is a whole Spark job, ~37 ms for one task in a warm
+    * JVM and ~100 ms for a JVM's first (the retired Dataset round with
+    * its per-round plan and broadcast cost ~77 ms on top of its
+    * arithmetic), while the E-step costs 1.7 µs per point at k = 5,
+    * d = 2 warm and 3–4 µs in a fresh JVM. Splitting a round's N points
+    * over two tasks saves N·c/2 of fold time for one job's cost J, so
+    * the driver fold wins below N = 2J/c ≈ 30–60k points; 32k points
+    * takes the fresh-JVM end of that range. */
+  private[graft] val PointsPerPart = 32768L
+
+  /** A key and its time-sorted observation sequence. */
+  private type Keyed = (String, Array[Array[Double]])
+
+  /** One EM chain over a fit's sequences — the loop of the driver fit,
+    * the distributed fit and every sweep chain. Each round's E-step is
+    * one [[FitRounds.round]]: the model rides the fold's closure (k·d
+    * doubles), and partials merge in partition order. Returns (model,
+    * last log-likelihood, rounds run, converged). */
+  private def em(rounds: FitRounds[Keyed], m0: Model, nIter: Int,
+      tol: Double): (Model, Double, Int, Boolean) = {
+    var m = m0
     var prevLl = Double.NegativeInfinity
     var ll = Double.NegativeInfinity
     var it = 0
     var done = false
     while (it < nIter && !done) {
-      val acc = new EAcc(k, m.d)
-      for (seq <- seqs if seq.nonEmpty) acc.add(m, seq)
+      val mdl = m
+      val acc = rounds.round(it + 1)(() => new EAcc(mdl.k, mdl.d)) {
+        (a, r) => a.add(mdl, r._2); a
+      }(_ merge _)
       ll = acc.ll
       m = mStep(m, acc)
       if (math.abs(ll - prevLl) < tol) done = true
       prevLl = ll
       it += 1
     }
+    (m, ll, it, done)
+  }
+
+  /** Baum-Welch fit over per-key sequences (driver-side over the bounded
+    * sample, like the reference's hmmlearn call), folded in the given
+    * order. */
+  def fitResult(seqs: Seq[Array[Array[Double]]], k: Int, nIter: Int = 50,
+      tol: Double = 1e-3): FitResult = {
+    val (m, ll, it, done) = em(
+      FitRounds.local("hmm", nIter, seqs.map(("", _)).toIndexedSeq),
+      init(k, seqs), nIter, tol)
     FitResult(m, ll, it, done, seqs.map(_.length.toLong).sum, seqs.size)
   }
 
-  /** Fully DISTRIBUTED Baum-Welch fit: per-key sequences stay on the
-    * executors; each EM iteration broadcasts the current model, computes
-    * per-partition forward-backward sufficient statistics ([[EAcc]] —
-    * the same code the driver fit runs), and tree-reduces them to the
-    * driver for the M-step. Driver memory is O(k·d) regardless of input
-    * size — this is what removes the driver-sample cap as a model-quality
-    * bound at 100 TB (the capped [[fitResult]] path mirrors the
-    * reference's in-memory hmmlearn contract; this is the scale path).
-    * One shuffle total: the (key → sorted sequence) assembly is done
-    * once and cached across all iterations.
-    *
-    * Statistics are identical to the driver fit's up to floating-point
-    * summation order (sequences combine associatively); HmmSpec locks
-    * the likelihood trajectory and fitted parameters to the driver fit
-    * on the same input. */
+  /** Baum-Welch fit over the per-key sequences of a (key, ts, features)
+    * frame, for inputs of any size. The (key → time-sorted sequence)
+    * assembly is one shuffle, sized and cached once by [[FitRounds]]:
+    * up to [[PointsPerPart]] points the sequences fold on the driver in
+    * sorted-key order, so the result is bit-identical to [[fitResult]]
+    * on the key-sorted sequences; above it every EM round is one job of
+    * per-partition forward-backward statistics ([[EAcc]], the same code
+    * the driver fit runs) merged in partition order for the M-step, and
+    * driver memory is O(k·d + #keys). The spread fit equals the driver
+    * fit up to floating-point summation order across partitions and is
+    * bit-identical run to run (HmmSpec locks both). */
   def fitResultDistributed(df: DataFrame, k: Int, nIter: Int = 50,
       tol: Double = 1e-3, minLen: Int = 2,
       maxInitPoints: Long = 500000L): FitResult = {
-    val seqs = assembleSequences(df, minLen).cache()
+    val rounds = sequences("hmm", nIter, assembleSequences(df, minLen))
     try {
-      fitOnAssembled(seqs, k, nIter, tol, maxInitPoints)
-    } finally seqs.unpersist()
-  }
-
-  /** Executor-resident (key → time-sorted sequence) assembly — the one
-    * shuffle of the distributed fit, factored out so a model SWEEP pays
-    * it once for all component counts. */
-  private def assembleSequences(df: DataFrame, minLen: Int)
-      : Dataset[(String, Array[Array[Double]])] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    implicit val seqEnc
-        : org.apache.spark.sql.Encoder[(String, Array[Array[Double]])] =
-      org.apache.spark.sql.Encoders.kryo[(String, Array[Array[Double]])]
-    df.select(col("key").cast("string"), col("ts").cast("long"),
-        col("features").cast("array<double>"))
-      .as[(String, Long, Array[Double])]
-      .groupByKey(_._1)
-      .mapGroups((key, it) => (key, it.toArray.sortBy(_._2).map(_._3)))
-      .filter(_._2.length >= minLen)
-  }
-
-  /** EM over an already-assembled (and caller-cached) sequence
-    * Dataset — the loop body of [[fitResultDistributed]]. */
-  private def fitOnAssembled(
-      seqs: Dataset[(String, Array[Array[Double]])], k: Int, nIter: Int,
-      tol: Double, maxInitPoints: Long): FitResult = {
-    val spark = seqs.sparkSession
-    import spark.implicits._
-    {
       // per-key length table: one driver row per key — the remaining
       // driver-memory term is O(#keys), not O(points); FitResult.nSeqs
       // is an Int, so key counts beyond Int.MaxValue are refused
       // loudly instead of silently wrapping
-      val lens = seqs.map { case (key, s) => (key, s.length.toLong) }
-        .collect().sortBy(_._1)
+      val lens = rounds.collect { case (key, s) => (key, s.length.toLong) }
+        .sortBy(_._1)
       val nSeqs = lens.length.toLong
       val nObs = lens.map(_._2).sum
       require(nSeqs > 0, "no sequences of length >= minLen to fit")
@@ -308,49 +306,55 @@ object Hmm {
         for ((key, n) <- lens if budget > 0) { keep += key; budget -= n }
         keep.toSet
       }
-      val initPool = seqs.filter(r => initKeys.contains(r._1))
-        .collect().sortBy(_._1).map(_._2).toSeq
-      var m = init(k, initPool)
-      var prevLl = Double.NegativeInfinity
-      var ll = Double.NegativeInfinity
-      var it = 0
-      var done = false
-      implicit val eaccEnc: org.apache.spark.sql.Encoder[EAcc] =
-        org.apache.spark.sql.Encoders.kryo[EAcc]
-      while (it < nIter && !done) {
-        val bc = spark.sparkContext.broadcast(m)
-        val acc = seqs.mapPartitions { seqIt =>
-          val a = new EAcc(bc.value.k, bc.value.d)
-          seqIt.foreach { case (_, s) => a.add(bc.value, s) }
-          Iterator.single(a)
-        }.reduce((a, b) => a.merge(b))
-        bc.destroy()
-        ll = acc.ll
-        m = mStep(m, acc)
-        if (math.abs(ll - prevLl) < tol) done = true
-        prevLl = ll
-        it += 1
-      }
+      val initPool = rounds.collect {
+        case (key, s) if initKeys.contains(key) => (key, s)
+      }.sortBy(_._1).map(_._2)
+      val (m, ll, it, done) =
+        em(rounds, init(k, initPool), nIter, tol)
       FitResult(m, ll, it, done, nObs, nSeqs.toInt)
-    }
+    } finally rounds.close()
+  }
+
+  /** The assembled sequences as a fit's rounds: weighed in points,
+    * folded on the driver in sorted-key order when they fit one
+    * partition. */
+  private def sequences(name: String, nIter: Int, seqs: RDD[Keyed])
+      : FitRounds[Keyed] =
+    FitRounds(name, nIter, seqs, (r: Keyed) => r._2.length.toLong,
+      PointsPerPart, Some(Ordering.by(_._1)))
+
+  /** Executor-side (key → time-sorted sequence) assembly — the one
+    * shuffle of the distributed fit and of the sweep. */
+  private def assembleSequences(df: DataFrame, minLen: Int)
+      : RDD[Keyed] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    implicit val seqEnc: org.apache.spark.sql.Encoder[Keyed] =
+      org.apache.spark.sql.Encoders.kryo[Keyed]
+    df.select(col("key").cast("string"), col("ts").cast("long"),
+        col("features").cast("array<double>"))
+      .as[(String, Long, Array[Double])]
+      .groupByKey(_._1)
+      .mapGroups((key, it) => (key, it.toArray.sortBy(_._2).map(_._3)))
+      .filter(_._2.length >= minLen)
+      .rdd
   }
 
   /** Distributed model-selection SWEEP — the scale path of the
     * reference's hmm-sweep (research_hmm/pipeline.py:791-858): ONE
     * sequence assembly shuffle (the same per-key cap / min-length /
     * sorted-key global-budget admission as [[collectSequences]], so the
-    * fit input is identical to the driver-sample contract), cached on
-    * the executors, then one EM chain per component count. The per-k
-    * fits are independent — they run CONCURRENTLY (Pools.awaitAll),
-    * so the sweep's wall-clock is the slowest single fit's iteration
-    * chain, not the sum of all of them. When the admitted input fits
-    * one partition (the budget cap makes this the common case) each
-    * chain folds the collected rows on its own driver thread — the
-    * same rows in the same order, so statistics are bit-identical to
-    * the distributed round at zero per-round job cost; with more
-    * partitions each round is a mapPartitions + reduce job. Driver
-    * memory is bounded by the admission budget either way (the init
-    * pool already collects the whole capped admission). */
+    * fit input is identical to the driver-sample contract), sized and
+    * cached once by [[FitRounds]], then one EM chain per component
+    * count. The per-k chains are independent and run CONCURRENTLY
+    * (Pools.awaitAll), so the sweep's wall-clock is the slowest single
+    * chain, not the sum: on the driver fold each chain folds the shared
+    * rows on its own thread; spread, each chain's rounds are its own
+    * job chain over the shared cache. A model's statistics never mix
+    * with another's, so every k's trajectory is bit-identical whether
+    * it runs alone or in the sweep (HmmSpec). Driver memory is bounded
+    * by the admission budget (the init pool collects the whole capped
+    * admission). */
   def fitSweepDistributed(df: DataFrame, ks: Seq[Int], nIter: Int,
       tol: Double = 1e-3, minLen: Int = 2, maxPerKey: Int = Int.MaxValue,
       maxTotalPoints: Long = 500000L): Seq[(Int, FitResult)] = {
@@ -364,10 +368,9 @@ object Hmm {
       .where(col("rn") <= maxPerKey)
       .drop("rn")
     // sorted-key global-budget admission: the per-key lengths are ≤
-    // one row per ticker and were ALREADY collected for the E-step
-    // sizing, so the exclusive prefix sum runs on the driver — no
-    // single-task unpartitioned window (same sorted order, same long
-    // arithmetic, identical admitted set)
+    // one row per ticker, so the exclusive prefix sum runs on the
+    // driver — no single-task unpartitioned window (same sorted order,
+    // same long arithmetic, identical admitted set)
     val lens = capped.groupBy("key").agg(count(lit(1)).as("n"))
       .where(col("n") >= minLen)
       .select(col("key"), col("n").cast("long"))
@@ -379,93 +382,24 @@ object Hmm {
     }
     require(adm.nonEmpty, "no sequences of length >= minLen to fit")
     val nObs = adm.map(_._2).sum
-    // partition the assembled frame by E-STEP COST, not the shuffle
-    // default: each EM round is a full task wave over it, so near-empty
-    // partitions make task-launch overhead dominate (measured 6.5
-    // s/sweep at 32 partitions for a 20k-point capped input) — but
-    // forward-backward is exp/log-heavy (~100× a scan per point), so
-    // the per-partition budget is ~2.5k points (≈ tens of ms of
-    // compute, well above task-launch cost), which spreads even the
-    // capped fixture sweep over a few cores and a production sweep
-    // over the cluster
-    val nPart = math.max(1, math.min(
-      df.sparkSession.sparkContext.defaultParallelism,
-      math.ceil(nObs / 2500.0).toInt))
     // the admitted key set is already on the driver (`adm`): joining
     // against a literal frame of it spares re-evaluating the
     // admission window subtree inside the assembly plan (same key
     // set, identical join rows)
     val admKeys = spark.createDataset(adm.map(_._1).toSeq).toDF("key")
-    val seqs = assembleSequences(
-      capped.join(broadcast(admKeys), Seq("key")), minLen)
-      .coalesce(nPart).rdd.cache()
+    val rounds = sequences("hmm sweep", nIter, assembleSequences(
+      capped.join(broadcast(admKeys), Seq("key")), minLen))
     try {
       // init pool: whole capped admission (the sweep budget already
-      // bounds it), sorted-key deterministic like fitResultDistributed.
-      // The collect keeps PARTITION order in `rows` (the E-step's own
-      // fold order) and sorts only the init pool's copy.
-      val rows = seqs.collect()
-      val initPool = rows.sortBy(_._1).map(_._2).toSeq
-      // CONCURRENT per-k EM chains (guide §2.6 — overlap independent
-      // jobs): each component count runs its own EM loop over the
-      // SHARED cached frame as a concurrent Spark job chain, so the
-      // sweep's wall-clock is the slowest single model's chain, not
-      // the sum of all models' E-step costs. A model's statistics
-      // never mix with another's (each k folds its own EAcc over the
-      // same cached partitions in the same order), so every k's
-      // trajectory — iteration count, tolerance check, fitted
-      // parameters — is bit-identical to the retired joint-wave and
-      // single-model forms (HmmSpec locks sweep ≡ fitResultDistributed
-      // ≡ driver fit). Each k still converges on its own schedule.
-      // The EM loops iterate on the cached RDD, not the Dataset: each
-      // of the (up to nIter) rounds is one action, and Dataset actions
-      // re-plan through Catalyst per call — pure overhead for an
-      // unchanging cached frame (measured ~100 ms/round of the sweep's
-      // cost at the fixture scale).
-      // The model rides the task CLOSURE, not a broadcast: a
-      // diag-Gaussian model is k·d doubles, and a broadcast's
-      // create/destroy round-trip per EM round cost more than
-      // shipping it with every task (measured; fitResultDistributed
-      // keeps its broadcast — one model over arbitrarily many
-      // executors is the shape broadcasts are for)
-      val onePart = seqs.getNumPartitions == 1
-      val fitted = graft.ops.Pools.awaitAll(ks.map { k => () =>
-        var m = init(k, initPool)
-        var prevLl = Double.NegativeInfinity
-        var ll = Double.NegativeInfinity
-        var it = 0
-        var done = false
-        while (it < nIter && !done) {
-          val mdl = m
-          val acc =
-            if (onePart) {
-              // every admitted sequence lives in the ONE cached
-              // partition (and is already on the driver — the init
-              // pool collected it): a per-round Spark job is pure
-              // scheduler overhead here (measured 3-4 s of the
-              // fixture sweep's 6 s: ~30 single-task rounds × |ks|
-              // chains serialized through one DAGScheduler event
-              // loop). Fold the SAME rows in the SAME (partition)
-              // order on this chain's own thread — statistics
-              // bit-identical to the distributed round.
-              val a = new EAcc(mdl.k, mdl.d)
-              rows.foreach { case (_, s) => a.add(mdl, s) }
-              a
-            } else seqs.mapPartitions { seqIt =>
-              val a = new EAcc(mdl.k, mdl.d)
-              seqIt.foreach { case (_, s) => a.add(mdl, s) }
-              Iterator.single(a)
-            }.reduce((a, b) => a.merge(b))
-          ll = acc.ll
-          m = mStep(m, acc)
-          if (math.abs(ll - prevLl) < tol) done = true
-          prevLl = ll
-          it += 1
-        }
+      // bounds it), sorted-key deterministic like fitResultDistributed
+      val initPool = rounds.collect { case (key, s) => (key, s) }
+        .sortBy(_._1).map(_._2)
+      graft.ops.Pools.awaitAll(ks.map { k => () =>
+        val (m, ll, it, done) =
+          em(rounds, init(k, initPool), nIter, tol)
         k -> FitResult(m, ll, it, done, nObs, adm.length)
       })
-      fitted
-    } finally seqs.unpersist()
+    } finally rounds.close()
   }
 
   def fit(seqs: Seq[Array[Array[Double]]], k: Int, nIter: Int = 50,

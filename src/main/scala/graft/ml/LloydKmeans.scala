@@ -20,12 +20,14 @@ import org.apache.spark.sql.functions._
   *    count — one IEEE division on identical inputs in both engines;
   *  - empty clusters keep their previous centroid.
   *
-  * Scale shape: the textbook distributed Lloyd — centroids are a
-  * k×dim driver literal broadcast into a map-only assignment pass, and
-  * the update is ONE partial-aggregated groupBy((cluster, dim)) shuffle
-  * per iteration. Nothing driver-side ever holds more than k×dim
-  * doubles. At 100 TB with k=4..1024 this is exactly MLlib's plan per
-  * iteration, minus the nondeterminism.
+  * Scale shape: the points are sized and cached once ([[FitRounds]]);
+  * a round assigns each point against the k×dim centroids riding the
+  * fold's closure and sums exact per-(cluster, dim) decimal partials.
+  * Up to [[TermsPerPart]] the rounds fold on the driver with no job;
+  * above it each round is one map-side job whose partials merge on the
+  * driver, and nothing driver-side holds more than k×dim sums. At 100 TB
+  * with k=4..1024 this is MLlib's per-iteration shape minus the
+  * nondeterminism.
   */
 object LloydKmeans {
 
@@ -48,9 +50,6 @@ object LloydKmeans {
     element_at(array_sort(array(structs: _*)), 1)
   }
 
-  private def assignCol(vec: Column, cents: IndexedSeq[Array[Double]])
-      : Column = assignStruct(vec, cents).getField("cluster")
-
   /** Run `iters` Lloyd iterations over `(id, vec)` rows (`vecCol` an
     * array column). Returns (assignments df `(id, cluster, d2)` for the
     * FINAL centroids, final centroids). */
@@ -66,68 +65,64 @@ object LloydKmeans {
     * tiebreak ordered by, so it is oracle-exact by construction). */
   def fitWithDist(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int): (DataFrame, IndexedSeq[Array[Double]]) = {
-    val v = col(vecCol).cast("array<double>")
-    // cache the (pid, v) rows ONCE as a plain RDD for the iteration
-    // loop: every Lloyd round re-reads them (assignment + update), and
-    // the previous DataFrame formulation paid a Catalyst plan + a
-    // groupBy((cluster, dim)) exchange PER ROUND — pure fixed cost for
-    // a loop whose input never changes (the Hmm.fitSweepDistributed
-    // lesson; measured ~0.4 s/round at the fixture scale, ×m subspaces
-    // ×arms in the PQ codebook builds). The RDD round is the same
-    // distributed shape (map-side partial k×dim sums, one tiny merge)
-    // with zero per-round planning. Bounded: one id + one vector/row.
-    //
-    // Storage is scale-safe: PRIMITIVE double arrays (a null element
-    // rides as NaN — indistinguishable from null to every decimal fold
-    // on this path, see VecDecimal.sqDist18/dec18) at roughly 1/3 the
-    // boxed footprint, persisted MEMORY_AND_DISK_SER so a corpus that
-    // outgrows storage memory spills to local disk instead of silently
-    // evicting and re-paying the parquet scan + decode every round
-    // (default MEMORY_ONLY recomputes evicted partitions per action).
-    val ptsRdd = df
-      .select(col(idCol).cast("long").as("pid"), v.as("v"))
-      .rdd.map { r =>
-        val s = r.getSeq[Any](1)
-        val arr = new Array[Double](if (s == null) 0 else s.size)
-        if (s != null) {
-          var i = 0
-          s.foreach { x =>
-            arr(i) = x match {
-              case null => Double.NaN
-              case d: java.lang.Double => d.doubleValue
-            }
-            i += 1
-          }
-        }
-        (r.getLong(0), arr)
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val pv = df.select(col(idCol).cast("long").as("pid"),
+      col(vecCol).cast("array<double>").as("v"))
+    val rounds = points(pv, k, iters)
     try {
-      // init: seed slice (first k ids)
-      var cents: IndexedSeq[Array[Double]] = ptsRdd
-        .filter(_._1 < k).collect().sortBy(_._1)
-        .map(_._2.clone()).toIndexedSeq
-      require(cents.length == k, s"need $k seed vectors with pid < $k")
-      val dim = cents.head.length
-      for (_ <- 1 to iters)
-        cents = lloydRound(ptsRdd, cents)
-      require(cents.head.length == dim)
+      val cents = centroids(rounds, k, iters)
       // the returned assignment frame re-derives from the UNCACHED
-      // input (df), so it stays valid after the loop cache unpersists;
-      // consumers keep planning against the same column program as
-      // before (the RDD loop only replaced the per-round actions)
-      val finalAssign = df
-        .select(col(idCol).cast("long").as("pid"), v.as("v"))
+      // input, so it stays valid after the rounds' cache is dropped
+      val finalAssign = pv
         .withColumn("best", assignStruct(col("v"), cents))
         .select(col("pid"), col("best.cluster").as("cluster"),
           col("best.d").as("d2"))
       (finalAssign, cents)
-    } finally { ptsRdd.unpersist(blocking = false); () }
+    } finally rounds.close()
   }
 
-  /** One Lloyd round over the cached point RDD — the JVM twin of the
+  /** Decimal distance terms (row length × k) in one partition of a
+    * spread fit, and the most a fit folds on the driver. A Lloyd round
+    * costs 1.07 µs per term (measured at k = 4 over 6- and 64-dim rows,
+    * 4-core host) against J ≈ 40–60 ms for the job a spread round rides
+    * in ([[Hmm.PointsPerPart]] has the job measurements), so two tasks
+    * beat the driver fold only above 2J/c ≈ 75–110k terms; 96k terms is
+    * ~100 ms of arithmetic per partition. */
+  private[graft] val TermsPerPart = 98304L
+
+  /** The `(pid, v)` rows of a fit as its rounds, vectors as primitive
+    * arrays ([[FitRounds.doubles]]), weighed in decimal terms (row
+    * length × k). */
+  private[graft] def points(pv: DataFrame, k: Int, iters: Int,
+      perPart: Long = TermsPerPart): FitRounds[(Long, Array[Double])] =
+    FitRounds("lloyd", iters,
+      pv.rdd.map(r => (r.getLong(0), FitRounds.doubles(r.getSeq[Any](1)))),
+      (p: (Long, Array[Double])) => p._2.length.toLong * k, perPart)
+
+  /** Up to `iters` Lloyd rounds from the seed slice (first `k` ids). A
+    * round is a pure function of (points, centroids), so once a round
+    * returns its input centroids bitwise every later round would too:
+    * the loop stops there with the same result `iters` rounds give. */
+  private[graft] def centroids(rounds: FitRounds[(Long, Array[Double])],
+      k: Int, iters: Int): IndexedSeq[Array[Double]] = {
+    var cents: IndexedSeq[Array[Double]] = rounds
+      .collect { case (pid, v) if pid < k => (pid, v) }
+      .sortBy(_._1).map(_._2.clone())
+    require(cents.length == k, s"need $k seed vectors with pid < $k")
+    var i = 0
+    var fixed = false
+    while (i < iters && !fixed) {
+      i += 1
+      val next = lloydRound(rounds, i, cents)
+      fixed = next.corresponds(cents)(java.util.Arrays.equals(_, _))
+      cents = next
+    }
+    cents
+  }
+
+  /** Lloyd round `i` over a fit's points — the JVM twin of the
     * retired per-round column program, bit-identical by construction
     * (LloydKmeansSpec locks the full fit against the unrolled oracle
-    * and the legacy DataFrame round):
+    * and the column-program round):
     *  - assignment: argmin over clusters of round-6
     *    [[graft.functions.VecDecimal.sqDist18]] with the
     *    array_sort struct convention — a NULL distance (overflow /
@@ -136,39 +131,36 @@ object LloydKmeans {
     *    cluster id;
     *  - update: per (cluster, dim) mean = CAST(Σ CAST(x AS
     *    DECIMAL(38,18)) AS DOUBLE) / count — decimal sums are exact and
-    *    order-free, so map-side partials merge without drift; a group's
+    *    order-free, so partials merge without drift; a group's
     *    count includes null elements (they just add nothing), and an
     *    all-null or precision-overflowed sum leaves the previous
-    *    centroid coordinate in place (the retired collect program
-    *    would have NPE'd on that null cell — reachable only at
-    *    |sum| ≥ 1e20, outside what the parity specs can cover; the
-    *    graceful carry is intentional);
+    *    centroid coordinate in place (the column program would have
+    *    NPE'd on that null cell — reachable only at |sum| ≥ 1e20,
+    *    outside what the parity specs can cover; the graceful carry is
+    *    intentional);
     *  - empty clusters keep their previous centroid. */
-  private[graft] def lloydRound(
-      pts: org.apache.spark.rdd.RDD[(Long, Array[Double])],
-      cents: IndexedSeq[Array[Double]]): IndexedSeq[Array[Double]] = {
+  private[graft] def lloydRound(rounds: FitRounds[(Long, Array[Double])],
+      i: Int, cents: IndexedSeq[Array[Double]]): IndexedSeq[Array[Double]] = {
     val k = cents.length
     val dim = cents.head.length
     val cArr = cents.map(_.clone).toArray
-    val (sums, counts) = pts.mapPartitions { it =>
-      val s = Array.fill[java.math.BigDecimal](k, dim)(null)
-      val n = Array.ofDim[Long](k, dim)
-      it.foreach { case (_, v) =>
-        val c = assignJvm(v, cArr)
-        var j = 0
-        val len = math.min(v.length, dim)
-        while (j < len) {
-          n(c)(j) += 1
-          // a null element rides as NaN; dec18(NaN) is null, exactly
-          // like the column program's non-ANSI decimal cast of a null
-          val b = graft.functions.VecDecimal.dec18(v(j))
-          if (b != null)
-            s(c)(j) = if (s(c)(j) == null) b else s(c)(j).add(b)
-          j += 1
-        }
+    val (sums, counts) = rounds.round(i)(() =>
+      (Array.fill[java.math.BigDecimal](k, dim)(null),
+        Array.ofDim[Long](k, dim))) { case (acc @ (s, n), (_, v)) =>
+      val c = assignJvm(v, cArr)
+      var j = 0
+      val len = math.min(v.length, dim)
+      while (j < len) {
+        n(c)(j) += 1
+        // a null element rides as NaN; dec18(NaN) is null, exactly
+        // like the column program's non-ANSI decimal cast of a null
+        val b = graft.functions.VecDecimal.dec18(v(j))
+        if (b != null)
+          s(c)(j) = if (s(c)(j) == null) b else s(c)(j).add(b)
+        j += 1
       }
-      Iterator.single((s, n))
-    }.reduce { case ((s1, n1), (s2, n2)) =>
+      acc
+    } { case ((s1, n1), (s2, n2)) =>
       var c = 0
       while (c < k) {
         var j = 0
@@ -224,26 +216,6 @@ object LloydKmeans {
     if (sq == null) null
     else java.lang.Double.valueOf(
       graft.functions.VecDecimal.roundD(sq.doubleValue, 6))
-  }
-
-  /** The retired per-round COLUMN program (assignment expression +
-    * groupBy((cluster, dim)) exchange) — kept as the parity reference:
-    * LloydKmeansSpec asserts [[lloydRound]] reproduces it bit-for-bit
-    * on fixture data, which is what licenses the RDD loop to replace
-    * it in [[fitWithDist]]. */
-  private[graft] def lloydRoundDf(pts: DataFrame,
-      cents: IndexedSeq[Array[Double]]): IndexedSeq[Array[Double]] = {
-    val k = cents.length
-    val assigned = pts.withColumn("cluster", assignCol(col("v"), cents))
-    val sums = assigned
-      .select(col("cluster"), posexplode(col("v")).as(Seq("j", "x")))
-      .groupBy("cluster", "j")
-      .agg((sum(col("x").cast("decimal(38,18)")).cast("double")
-        / count(lit(1))).as("y"))
-      .collect()
-    val next = Array.tabulate(k)(c => cents(c).clone())
-    sums.foreach { r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2) }
-    next.toIndexedSeq.map(identity)
   }
 
   /** Unrolled DuckDB oracle for [[fit]] over the `embeddings` table:

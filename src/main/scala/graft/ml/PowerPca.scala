@@ -29,11 +29,11 @@ import org.apache.spark.sql.functions._
   *    init vector is bit-portable, so the WHOLE fit — every iterate,
   *    every eigenvalue — is reproduced by the unrolled oracle.
   *
-  * Scale shape: per iteration ONE pass over the exploded (vec_id, i,
-  * x) frame for y (map-only against the v literal + a vec_id-keyed
-  * decimal sum) and one (vec_id)-join + dim-keyed decimal sum for w —
-  * two bounded shuffles; driver state is d doubles per component (the
-  * broadcast-fit contract). Fixed `iters` rounds per component — the
+  * Scale shape: the vectors are sized and cached once ([[FitRounds]],
+  * [[fitPartitions]] wide); a power round is ONE pass computing each
+  * row's y against the v riding the fold's closure and the per-dim
+  * decimal w partials, merged on the driver; driver state is d doubles
+  * per component. Fixed `iters` rounds per component — the
   * unrolled-oracle contract, no convergence test. */
 object PowerPca {
 
@@ -89,27 +89,27 @@ object PowerPca {
 
   /** Partition width for the fit pass over the N×d exploded frame:
     * ceil(N·d / pca.rows_per_task), clamped to [1, defaultParallelism]
-    * — the Hmm.scala nPart pattern. The exploded frame is CORPUS-sized
-    * (every power round scans it twice), so a fixed width would cap
-    * the cluster; this keeps the fixture at its measured 8-task knee
-    * and saturates defaultParallelism at scale (PlanAuditSpec locks
-    * both ends). */
+    * — the width [[FitRounds]] sizes [[fit]]'s vectors to (weight d per
+    * row, `pca.rows_per_task` per partition). The exploded frame is
+    * CORPUS-sized (every power round scans it twice), so a fixed width
+    * would cap the cluster; this keeps the fixture at its measured
+    * 8-task knee and saturates defaultParallelism at scale
+    * (PlanAuditSpec locks both ends). */
   def fitPartitions(n: Long, dims: Int, parallelism: Int): Int =
-    math.max(1, math.min(parallelism,
-      math.ceil(n.toDouble * dims /
-        graft.Settings.pca.rowsPerTask).toInt))
+    FitRounds.width(n * dims, graft.Settings.pca.rowsPerTask, parallelism)
 
   /** Fit `nComponents` principal components with `iters` power rounds
-    * each. Driver actions: 2 setup + iters per component, each
-    * collecting ≤ dims+1 rows (the w roll-up + the Σy slot at
-    * i = −1, the QualityClf bias-slot trick). `expectDims`, when
-    * given, is the dimension the UNROLLED ORACLE was generated for
+    * each. Driver actions: the dimension probe, the sizing pass and
+    * one setup pass, then iters per component while the vectors are
+    * spread (none on the driver fold), each collecting ≤ dims+1 sums
+    * per partition (the w roll-up + the Σy slot at i = −1, the
+    * QualityClf bias-slot trick). `expectDims`, when given, is the
+    * dimension the UNROLLED ORACLE was generated for
     * (`ann.embedding_dim`): the fit refuses a corpus whose real dim
     * differs, instead of silently fitting init vectors of another
     * length than the oracle's (the mrlDims validation discipline). */
   def fit(emb: DataFrame, nComponents: Int, iters: Int,
       expectDims: Option[Int] = None): Fit = {
-    val n = emb.count()
     // dimension from ONE row (the Similarity.embDim convention — no
     // corpus-wide explode just to probe a schema-level fact)
     val probeDims = emb.select(size(col("embedding"))).head().getInt(0)
@@ -117,90 +117,58 @@ object PowerPca {
       s"pca oracle dimension $d (ann.embedding_dim) != corpus " +
         s"dimension $probeDims — the unrolled oracle's init vectors " +
         "would silently diverge; fix the knob"))
-    val dims = probeDims
-    // widen OR narrow to the adaptive width: coalesce alone can only
-    // reduce, so a corpus read as a few large splits would silently
-    // run every power round at the scan's width — repartition when
-    // the target exceeds the input's partitioning (values are
-    // partitioning-independent: all sums are exact decimal)
-    val target = fitPartitions(n, dims,
-      emb.sparkSession.sparkContext.defaultParallelism)
-    // cache the per-row vectors ONCE as a plain RDD: every power
-    // round re-reads them (matvec + roll-up), and the previous
-    // DataFrame formulation paid a Catalyst plan + a vec_id join +
-    // two exchanges PER ROUND — pure fixed cost for a loop whose
-    // input never changes (the LloydKmeans/QualityClf round lesson).
-    // The RDD round is the same distributed shape (map-side partial
-    // per-dim decimal sums, one tiny merge) with zero per-round
-    // planning; [[matvecRoundDf]] is kept as the parity reference.
-    //
-    // Storage is scale-safe: PRIMITIVE double arrays (null elements
-    // ride as NaN — identical to null under every dec18 term on this
-    // path) at ~1/3 the boxed footprint, MEMORY_AND_DISK_SER so an
-    // over-memory corpus spills instead of re-paying the parquet scan
-    // per power round (MEMORY_ONLY recomputes evicted partitions).
-    val rdd0 = emb
-      .select(col("embedding").cast("array<double>").as("v"))
-      .rdd.map { r =>
-        val sq = r.getSeq[Any](0)
-        val arr = new Array[Double](if (sq == null) 0 else sq.size)
-        if (sq != null) {
-          var i = 0
-          sq.foreach { x =>
-            arr(i) = x match {
-              case null => Double.NaN
-              case d: java.lang.Double => d.doubleValue
-            }
-            i += 1
-          }
-        }
-        arr
-      }
-    val cur = rdd0.getNumPartitions
-    val pts = (if (cur > target) rdd0.coalesce(target)
-      else if (cur < target) rdd0.repartition(target)
-      else rdd0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-    // ONE setup pass: per-dim decimal sums (u) + Σx² — the retired
-    // program's two setup actions, same exact order-free decimals
-    val (uAcc, sqAcc) = pts.mapPartitions { it =>
-      val ub = new Array[java.math.BigDecimal](dims)
-      var sq: java.math.BigDecimal = null
-      it.foreach { xs =>
-        var i = 0
-        val len = math.min(xs.length, dims)
-        while (i < len) {
-          // null elements ride as NaN; dec18(NaN) is null, exactly the
-          // retired program's skipped null term
-          val x = xs(i)
-          val t = graft.functions.VecDecimal.dec18(x)
-          if (t != null) ub(i) = if (ub(i) == null) t else ub(i).add(t)
-          val t2 = graft.functions.VecDecimal.dec18(x * x)
-          if (t2 != null) sq = if (sq == null) t2 else sq.add(t2)
-          i += 1
-        }
-      }
-      Iterator.single((ub, sq))
-    }.reduce { case ((u1, s1), (u2, s2)) =>
+    val rounds = vectors(emb, probeDims, nComponents * iters)
+    try fitOn(rounds, probeDims, nComponents, iters)
+    finally rounds.close()
+  }
+
+  /** The embedding rows as a fit's rounds, as primitive arrays
+    * ([[FitRounds.doubles]]), sized to [[fitPartitions]] (values are
+    * partitioning-independent: all sums are exact decimal). */
+  private[graft] def vectors(emb: DataFrame, dims: Int, nRounds: Int,
+      perPart: Long = graft.Settings.pca.rowsPerTask)
+      : FitRounds[Array[Double]] =
+    FitRounds("pca", nRounds,
+      emb.select(col("embedding").cast("array<double>"))
+        .rdd.map(r => FitRounds.doubles(r.getSeq[Any](0))),
+      (_: Array[Double]) => dims.toLong, perPart)
+
+  /** The power rounds of [[fit]] over its sized vectors: round 0 is the
+    * setup pass, round c·iters + t the t-th power round of component
+    * c. */
+  private[graft] def fitOn(rounds: FitRounds[Array[Double]], dims: Int,
+      nComponents: Int, iters: Int): Fit = {
+    val n = rounds.count
+    // ONE setup pass: per-dim decimal sums (slots 0..dims−1) + Σx²
+    // (slot dims), exact and order-free
+    val setup = rounds.round(0)(() =>
+      new Array[java.math.BigDecimal](dims + 1)) { (acc, xs) =>
       var i = 0
-      while (i < dims) {
-        if (u2(i) != null)
-          u1(i) = if (u1(i) == null) u2(i) else u1(i).add(u2(i))
+      val len = math.min(xs.length, dims)
+      while (i < len) {
+        // null elements ride as NaN; dec18(NaN) is null, exactly the
+        // column program's skipped null term
+        val x = xs(i)
+        val t = graft.functions.VecDecimal.dec18(x)
+        if (t != null) acc(i) = if (acc(i) == null) t else acc(i).add(t)
+        val t2 = graft.functions.VecDecimal.dec18(x * x)
+        if (t2 != null)
+          acc(dims) = if (acc(dims) == null) t2 else acc(dims).add(t2)
         i += 1
       }
-      (u1, if (s1 == null) s2 else if (s2 == null) s1 else s1.add(s2))
-    }
-    val mean = (0 until dims).map(i => decToD(uAcc(i)) / n)
-    val totalVar = r9((decToD(sqAcc) - n * dotD(mean, mean)) / (n - 1.0))
+      acc
+    }(addDec)
+    val mean = (0 until dims).map(i => decToD(setup(i)) / n)
+    val totalVar =
+      r9((decToD(setup(dims)) - n * dotD(mean, mean)) / (n - 1.0))
     var comps = Vector.empty[Component]
     for (c <- 0 until nComponents) {
       val raw = initRaw(c, dims)
       val nrm0 = normOf(raw)
       var v = raw.map(x => r9(x / nrm0))
       var lambda = 0.0
-      for (_ <- 1 to iters) {
-        val rows = matvecRound(pts, v, dims)
+      for (t <- 1 to iters) {
+        val rows = matvecRound(rounds, c * iters + t, v, dims)
         val sy = rows(-1)
         // centered matvec, then operator-space deflation — subtracted
         // LEFT-TO-RIGHT per prior component, the oracle's expression
@@ -224,12 +192,23 @@ object PowerPca {
       comps :+= Component(c, lambda, v)
     }
     Fit(n, dims, mean, totalVar, comps)
-    } finally { pts.unpersist(blocking = false); () }
+  }
+
+  /** Slot-wise exact decimal merge of two partials (a null slot has no
+    * terms yet). */
+  private def addDec(a: Array[java.math.BigDecimal],
+      b: Array[java.math.BigDecimal]): Array[java.math.BigDecimal] = {
+    var i = 0
+    while (i < a.length) {
+      if (b(i) != null) a(i) = if (a(i) == null) b(i) else a(i).add(b(i))
+      i += 1
+    }
+    a
   }
 
   /** CAST(decimal-sum AS DOUBLE) driver twin: a null or
     * precision-overflowed sum reads 0.0. NOTE this intentionally
-    * degrades gracefully where the retired collect path would have
+    * degrades gracefully where the column program's collect would have
     * thrown (Row.getDouble NPEs on a null cell) — reachable only on
     * |sum| ≥ 1e20 precision overflow, which no fixture and no sane
     * embedding corpus produces; the parity specs cannot cover this
@@ -237,84 +216,50 @@ object PowerPca {
   private def decToD(b: java.math.BigDecimal): Double =
     if (b == null || b.precision > 38) 0.0 else b.doubleValue
 
-  /** One power round over the cached vector RDD — the JVM twin of the
-    * retired per-round column program ([[matvecRoundDf]], locked
-    * bit-identical in PowerPcaSpec): per row y = CAST(Σ_i CAST(x_i·v_i
-    * AS DECIMAL(38,18)) AS DOUBLE), then per dim w_i = CAST(Σ_rows
+  /** Power round `at` over the fit's vectors — the JVM twin of the
+    * retired per-round column program (locked bit-identical in
+    * PowerPcaSpec): per row y = CAST(Σ_i CAST(x_i·v_i AS
+    * DECIMAL(38,18)) AS DOUBLE), then per dim w_i = CAST(Σ_rows
     * CAST(x_i·y AS DECIMAL(38,18)) AS DOUBLE) with Σy riding slot −1
     * (the QualityClf bias-slot trick). Decimal sums are exact and
-    * order-free, so map-side partials merge without drift; null terms
+    * order-free, so partials merge without drift; null terms
     * (NaN/Inf casts, null elements) are skipped exactly like the
     * column program's non-ANSI decimal cast. */
-  private[graft] def matvecRound(
-      pts: org.apache.spark.rdd.RDD[Array[Double]],
-      v: IndexedSeq[Double], dims: Int): Map[Int, Double] = {
+  private[graft] def matvecRound(rounds: FitRounds[Array[Double]],
+      at: Int, v: IndexedSeq[Double], dims: Int): Map[Int, Double] = {
     val vArr = v.toArray
-    val (wAcc, syAcc) = pts.mapPartitions { it =>
-      val w = new Array[java.math.BigDecimal](dims)
-      var sy: java.math.BigDecimal = null
-      it.foreach { xs =>
-        var yB: java.math.BigDecimal = null
-        var i = 0
-        val len = math.min(xs.length, dims)
-        while (i < len) {
-          // null elements ride as NaN; NaN·v is NaN and dec18(NaN) is
-          // null — the retired program's skipped null term verbatim
-          val t = graft.functions.VecDecimal.dec18(xs(i) * vArr(i))
-          if (t != null) yB = if (yB == null) t else yB.add(t)
-          i += 1
-        }
-        // sum(decimal(38,18)) nulls on precision overflow (non-ANSI);
-        // a null y drops the row from the roll-up AND from Σy —
-        // exactly the retired join's null-propagation
-        if (yB != null && yB.precision <= 38) {
-          val y = yB.doubleValue
-          val yD = graft.functions.VecDecimal.dec18(y)
-          if (yD != null) sy = if (sy == null) yD else sy.add(yD)
-          i = 0
-          while (i < len) {
-            val t = graft.functions.VecDecimal.dec18(xs(i) * y)
-            if (t != null) w(i) = if (w(i) == null) t else w(i).add(t)
-            i += 1
-          }
-        }
-      }
-      Iterator.single((w, sy))
-    }.reduce { case ((w1, s1), (w2, s2)) =>
+    // slots 0..dims−1: w; slot dims: Σy
+    val acc = rounds.round(at)(() =>
+      new Array[java.math.BigDecimal](dims + 1)) { (w, xs) =>
+      var yB: java.math.BigDecimal = null
       var i = 0
-      while (i < dims) {
-        if (w2(i) != null)
-          w1(i) = if (w1(i) == null) w2(i) else w1(i).add(w2(i))
+      val len = math.min(xs.length, dims)
+      while (i < len) {
+        // null elements ride as NaN; NaN·v is NaN and dec18(NaN) is
+        // null — the column program's skipped null term verbatim
+        val t = graft.functions.VecDecimal.dec18(xs(i) * vArr(i))
+        if (t != null) yB = if (yB == null) t else yB.add(t)
         i += 1
       }
-      (w1, if (s1 == null) s2 else if (s2 == null) s1 else s1.add(s2))
-    }
-    ((0 until dims).map(i => i -> decToD(wAcc(i))) :+
-      (-1 -> decToD(syAcc))).toMap
-  }
-
-  /** The retired per-round COLUMN program (vec_id-keyed matvec + join
-    * + dim-keyed roll-up, two exchanges) — kept as the parity
-    * reference: PowerPcaSpec asserts [[matvecRound]] reproduces it
-    * bit-for-bit over the exploded frame, which is what licenses the
-    * RDD loop to replace it in [[fit]]. */
-  private[graft] def matvecRoundDf(px: DataFrame, v: IndexedSeq[Double],
-      dims: Int): Map[Int, Double] = {
-    val vmap = map((0 until dims)
-      .flatMap(i => Seq(lit(i), lit(v(i)))): _*)
-    val y = px
-      .withColumn("xv",
-        (col("x") * element_at(vmap, col("i")))
-          .cast("decimal(38,18)"))
-      .groupBy("vec_id")
-      .agg(sum("xv").cast("double").as("y"))
-    px.join(y, Seq("vec_id"))
-      .select(col("i"), (col("x") * col("y"))
-        .cast("decimal(38,18)").as("p"))
-      .unionAll(y.select(lit(-1).as("i"),
-        col("y").cast("decimal(38,18)").as("p")))
-      .groupBy("i").agg(sum("p").cast("double").as("w"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      // sum(decimal(38,18)) nulls on precision overflow (non-ANSI);
+      // a null y drops the row from the roll-up AND from Σy —
+      // exactly the column program's join null-propagation
+      if (yB != null && yB.precision <= 38) {
+        val y = yB.doubleValue
+        val yD = graft.functions.VecDecimal.dec18(y)
+        if (yD != null)
+          w(dims) = if (w(dims) == null) yD else w(dims).add(yD)
+        i = 0
+        while (i < len) {
+          val t = graft.functions.VecDecimal.dec18(xs(i) * y)
+          if (t != null) w(i) = if (w(i) == null) t else w(i).add(t)
+          i += 1
+        }
+      }
+      w
+    }(addDec)
+    ((0 until dims).map(i => i -> decToD(acc(i))) :+
+      (-1 -> decToD(acc(dims)))).toMap
   }
 
   /** Project a frame's embeddings onto the fitted components —

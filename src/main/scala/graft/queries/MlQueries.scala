@@ -818,13 +818,13 @@ object MlQueries extends QueryModule {
       // defaults, production values one override away
       val rh = graft.Settings.researchHmm
       // the REGISTERED sweep runs the scale path: sequences assemble
-      // once and stay on the executors, every EM iteration computes
-      // per-partition E-step statistics and tree-reduces them to a
-      // driver M-step (Hmm.fitSweepDistributed — the same admission
-      // caps as the old collected path, so the fit input is
-      // unchanged; HmmSpec locks distributed ≡ driver fit). The per-k
-      // fits interleave as concurrent Spark jobs; the k per-model
-      // decodes collapse into ONE sweepStateCounts pass over ev.
+      // once, and every EM iteration's E-step statistics fold on the
+      // driver (within one task's budget) or per partition, merged in
+      // partition order for a driver M-step (Hmm.fitSweepDistributed —
+      // the same admission caps as the old collected path, so the fit
+      // input is unchanged; HmmSpec locks distributed ≡ driver fit).
+      // The per-k fits run concurrently; the k per-model decodes
+      // collapse into ONE sweepStateCounts pass over ev.
       val fits = Hmm.fitSweepDistributed(ev,
         rh.sweepComponents, nIter = rh.nIter,
         minLen = rh.minSequenceLength, maxPerKey = 5000,

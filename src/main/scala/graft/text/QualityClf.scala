@@ -56,19 +56,14 @@ import org.apache.spark.sql.functions._
   *  bit-identical across engines.
   *
   * Scale shape: the textbook distributed GD — the model is ≤ B+1
-  * doubles of driver state broadcast into the plan as a map literal;
-  * each iteration is ONE pass over the cached (doc, bucket, x) frame:
-  * margin via a doc-partitioned window aggregate (no join), then a
-  * map-side-combinable groupBy(bucket) collecting ≤ B+1 rows.
-  * Measured plan cost per round: TWO exchanges of the slim frame (the
-  * window's doc_id clustering — a localCheckpoint leaf does not carry
-  * the pre-checkpoint hash partitioning into the window's required
-  * distribution — plus the bucket aggregation), both over ≤ B+2 rows
-  * per doc. Nothing driver-side ever grows with corpus size; at
-  * 100 TB this is MLlib LogisticRegression's aggregate-per-iteration
-  * plan (which likewise pays a full pass per iteration), minus the
-  * nondeterminism (tree-aggregation float order) that would break the
-  * oracle.
+  * doubles of driver state riding each round's fold; one setup shuffle
+  * groups each doc's feature rows, and every round is ONE fold over the
+  * sized, cached docs ([[graft.ml.FitRounds]]) producing ≤ B+2 exact
+  * decimal gradient partials. Nothing driver-side ever grows with
+  * corpus size beyond one task's budget; at 100 TB this is MLlib
+  * LogisticRegression's aggregate-per-iteration shape (a full pass per
+  * iteration), minus the nondeterminism (tree-aggregation float order)
+  * that would break the oracle.
   */
 object QualityClf {
 
@@ -129,58 +124,68 @@ object QualityClf {
       .over(Window.partitionBy("doc_id")).cast("double")
 
   /** `iters` full-batch logistic GD rounds over `featY(doc_id, y, bk,
-    * x)` (callers cache it — every round re-reads it). `nDocs` is the
-    * labeled doc count (the gradient normalizer).
+    * x)`. `nDocs` is the labeled doc count (the gradient normalizer).
     *
-    * The round loop runs over a per-doc-grouped RDD cached ONCE: the
-    * previous formulation paid a Catalyst plan + TWO exchanges of the
-    * slim frame (doc_id window + bucket aggregation) PER ROUND — pure
-    * fixed cost for a loop whose input never changes (the LloydKmeans
-    * round lesson). One setup shuffle groups each doc's feature rows
-    * together; each round is then a single map-side pass producing
-    * ≤ B+2 partial decimal sums per partition and one tiny merge —
-    * the same distributed shape with zero per-round planning.
-    * Bit-identical to the retired column program by construction
-    * ([[fitRoundDf]] kept as the parity reference, locked in
-    * QualityClfSpec). */
+    * One setup shuffle groups each doc's feature rows together, and
+    * [[graft.ml.FitRounds]] sizes and caches the grouped docs once:
+    * each round is a single fold producing ≤ B+2 partial decimal sums
+    * (on the driver, or one map-side job per round when spread) with
+    * zero per-round planning. Bit-identical to the retired per-round
+    * column program by construction (locked in QualityClfSpec). */
   def fit(featY: DataFrame, nBuckets: Int, lr: Double, iters: Int,
       nDocs: Double): Weights = {
-    // rows are already primitive (y, long[], double[]);
-    // MEMORY_AND_DISK_SER so an over-memory corpus spills to local
-    // disk instead of re-paying the feature build every GD round
-    // (default MEMORY_ONLY recomputes evicted partitions per action)
-    val grouped = groupedRdd(featY)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-      // slots −1 (bias) .. nBuckets (dense length feature), inclusive
-      var w: Weights = (-1L to nBuckets.toLong).map(_ -> 0.0).toMap
-      for (_ <- 1 to iters)
-        w = fitRound(grouped, lr, nDocs, w)
-      w
-    } finally { grouped.unpersist(blocking = false); () }
+    val rounds = docs(featY, iters)
+    try fitOn(rounds, nBuckets, lr, iters, nDocs)
+    finally rounds.close()
   }
 
-  /** The per-doc-grouped `(y, bks, xs)` rows of a feature frame — one
-    * groupBy shuffle at setup, amortized over every GD round. Row
-    * order within a doc is free: every per-doc and per-bucket sum in
-    * the round is an exact DECIMAL(38,18) accumulation. */
-  private[graft] def groupedRdd(featY: DataFrame)
-      : org.apache.spark.rdd.RDD[(Double, Array[Long], Array[Double])] =
-    featY.groupBy("doc_id", "y")
-      .agg(collect_list(struct(col("bk"), col("x"))).as("fs"))
-      .select(col("y"), col("fs"))
-      .rdd.map { r =>
-        val fs = r.getSeq[org.apache.spark.sql.Row](1)
-        val bks = new Array[Long](fs.size)
-        val xs = new Array[Double](fs.size)
-        var i = 0
-        fs.foreach { f =>
-          bks(i) = f.getLong(0); xs(i) = f.getDouble(1); i += 1 }
-        (r.getDouble(0), bks, xs)
-      }
+  /** Feature terms (a doc's feature rows) in one partition of a spread
+    * fit, and the most a fit folds on the driver. A GD round costs
+    * 2.5 µs per term (two DECIMAL(38,18) products per term, measured
+    * over the sf0.01 documents, 4-core host) against J ≈ 40–60 ms for
+    * the job a spread round rides in (graft.ml.Hmm.PointsPerPart has
+    * the job measurements), so two tasks beat the driver fold only
+    * above 2J/c ≈ 32–48k terms; 40k terms is ~100 ms of arithmetic per
+    * partition. */
+  private[graft] val TermsPerPart = 40960L
 
-  /** One GD round over the grouped RDD — the JVM twin of the retired
-    * column program ([[fitRoundDf]]), bit-identical by construction:
+  /** The per-doc-grouped `(y, bks, xs)` rows of a feature frame as a
+    * fit's rounds — one groupBy shuffle at setup, weighed in feature
+    * terms. Row order within a doc is free: every per-doc and
+    * per-bucket sum in the round is an exact DECIMAL(38,18)
+    * accumulation. */
+  private[graft] def docs(featY: DataFrame, iters: Int,
+      perPart: Long = TermsPerPart)
+      : graft.ml.FitRounds[(Double, Array[Long], Array[Double])] =
+    graft.ml.FitRounds("quality clf", iters,
+      featY.groupBy("doc_id", "y")
+        .agg(collect_list(struct(col("bk"), col("x"))).as("fs"))
+        .select(col("y"), col("fs"))
+        .rdd.map { r =>
+          val fs = r.getSeq[org.apache.spark.sql.Row](1)
+          val bks = new Array[Long](fs.size)
+          val xs = new Array[Double](fs.size)
+          var i = 0
+          fs.foreach { f =>
+            bks(i) = f.getLong(0); xs(i) = f.getDouble(1); i += 1 }
+          (r.getDouble(0), bks, xs)
+        },
+      (d: (Double, Array[Long], Array[Double])) => d._2.length.toLong,
+      perPart)
+
+  /** The GD rounds of [[fit]] from w = 0 over slots −1 (bias) ..
+    * nBuckets (dense length feature), inclusive. */
+  private[graft] def fitOn(
+      rounds: graft.ml.FitRounds[(Double, Array[Long], Array[Double])],
+      nBuckets: Int, lr: Double, iters: Int, nDocs: Double): Weights = {
+    var w: Weights = (-1L to nBuckets.toLong).map(_ -> 0.0).toMap
+    for (i <- 1 to iters)
+      w = fitRound(rounds, i, lr, nDocs, w)
+    w
+  }
+
+  /** GD round `i` over the grouped docs — the JVM twin of the retired
+    * column program, bit-identical by construction:
     *  - margin: CAST(Σ_doc CAST(x·w(bk) AS DECIMAL(38,18)) AS DOUBLE)
     *    — order-free exact decimal terms (graft.functions.VecDecimal
     *    cast contract: NaN/Inf/precision-overflow terms are null and
@@ -188,45 +193,42 @@ object QualityClf {
     *  - err: round(1/(1+exp(−margin)) − y, 9) — same JVM libm exp,
     *    same decimal-string HALF_UP round;
     *  - gradient: per-bucket CAST(Σ CAST(err·x AS DECIMAL(38,18)) AS
-    *    DOUBLE), map-side partials merged by exact decimal adds;
+    *    DOUBLE), partials merged by exact decimal adds;
     *  - update: w − lr·(g/nDocs) in IEEE doubles, buckets with no
     *    (non-null) terms contribute 0 (a precision-overflowed bucket
-    *    sum also reads 0 — the retired collect program would have
+    *    sum also reads 0 — the column program's collect would have
     *    NPE'd on that null cell; unreachable below |sum| ≥ 1e20, so
     *    the parity specs cannot cover it and the graceful fallback is
     *    intentional). */
   private[graft] def fitRound(
-      grouped: org.apache.spark.rdd.RDD[(Double, Array[Long], Array[Double])],
-      lr: Double, nDocs: Double, w: Weights): Weights = {
+      rounds: graft.ml.FitRounds[(Double, Array[Long], Array[Double])],
+      i: Int, lr: Double, nDocs: Double, w: Weights): Weights = {
     val wArr = w
-    val g = grouped.mapPartitions { it =>
-      val acc = scala.collection.mutable.HashMap
-        .empty[Long, java.math.BigDecimal]
-      it.foreach { case (y, bks, xs) =>
-        var m: java.math.BigDecimal = null
-        var i = 0
-        while (i < bks.length) {
-          val b = graft.functions.VecDecimal.dec18(xs(i) * wArr(bks(i)))
-          if (b != null) m = if (m == null) b else m.add(b)
-          i += 1
-        }
-        // sum(decimal(38,18)) nulls on precision overflow (non-ANSI)
-        if (m != null && m.precision <= 38) {
-          val err = graft.functions.VecDecimal.roundD(
-            1.0 / (1.0 + math.exp(-m.doubleValue)) - y, 9)
-          i = 0
-          while (i < bks.length) {
-            val t = graft.functions.VecDecimal.dec18(err * xs(i))
-            if (t != null) {
-              val prev = acc.getOrElse(bks(i), null)
-              acc(bks(i)) = if (prev == null) t else prev.add(t)
-            }
-            i += 1
+    type Acc = scala.collection.mutable.HashMap[Long, java.math.BigDecimal]
+    val g = rounds.round(i)(() => new Acc) { case (acc, (y, bks, xs)) =>
+      var m: java.math.BigDecimal = null
+      var j = 0
+      while (j < bks.length) {
+        val b = graft.functions.VecDecimal.dec18(xs(j) * wArr(bks(j)))
+        if (b != null) m = if (m == null) b else m.add(b)
+        j += 1
+      }
+      // sum(decimal(38,18)) nulls on precision overflow (non-ANSI)
+      if (m != null && m.precision <= 38) {
+        val err = graft.functions.VecDecimal.roundD(
+          1.0 / (1.0 + math.exp(-m.doubleValue)) - y, 9)
+        j = 0
+        while (j < bks.length) {
+          val t = graft.functions.VecDecimal.dec18(err * xs(j))
+          if (t != null) {
+            val prev = acc.getOrElse(bks(j), null)
+            acc(bks(j)) = if (prev == null) t else prev.add(t)
           }
+          j += 1
         }
       }
-      Iterator.single(acc)
-    }.reduce { (a, b) =>
+      acc
+    } { (a, b) =>
       b.foreach { case (k, v) =>
         val prev = a.getOrElse(k, null)
         a(k) = if (prev == null) v else prev.add(v)
@@ -239,25 +241,6 @@ object QualityClf {
         case _ => 0.0
       }
       bk -> (wv - lr * (gv / nDocs))
-    }
-  }
-
-  /** The retired per-round COLUMN program (doc-window margin + bucket
-    * aggregation exchange) — kept as the parity reference:
-    * QualityClfSpec asserts [[fitRound]] reproduces it bit-for-bit on
-    * fixture data, which is what licenses the RDD loop to replace it
-    * in [[fit]]. */
-  private[graft] def fitRoundDf(featY: DataFrame, lr: Double,
-      nDocs: Double, w: Weights): Weights = {
-    val err = round(lit(1.0) / (lit(1.0) + exp(-marginCol(w)))
-      - col("y"), 9)
-    val g = featY.withColumn("err", err)
-      .groupBy("bk")
-      .agg(sum((col("err") * col("x")).cast("decimal(38,18)"))
-        .cast("double").as("g"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    w.map { case (bk, wv) =>
-      bk -> (wv - lr * (g.getOrElse(bk, 0.0) / nDocs))
     }
   }
 

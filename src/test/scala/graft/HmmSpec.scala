@@ -60,24 +60,50 @@ class HmmSpec extends SparkSpec {
     assert(agree > 0.9, s"posterior argmax vs viterbi agreement $agree")
   }
 
+  /** (key, ts, features) rows of `data`'s sequences, keys in index
+    * order. */
+  private def frame(data: Seq[(Array[Array[Double]], Array[Int])]) = {
+    import spark.implicits._
+    data.zipWithIndex.flatMap { case ((obs, _), si) =>
+      obs.zipWithIndex.map { case (x, i) =>
+        (f"k$si%02d", i.toLong, x.toSeq)
+      }
+    }.toDF("key", "ts", "features")
+  }
+
+  /** Every field of two fits, models compared element by element. */
+  private def same(a: Hmm.FitResult, b: Hmm.FitResult): Boolean = {
+    def rows(x: Array[Array[Double]]) = x.map(_.toSeq).toSeq
+    a.logLik == b.logLik && a.nIterUsed == b.nIterUsed &&
+      a.converged == b.converged && a.nObs == b.nObs &&
+      a.nSeqs == b.nSeqs && a.model.k == b.model.k &&
+      a.model.d == b.model.d &&
+      a.model.logPi.toSeq == b.model.logPi.toSeq &&
+      rows(a.model.logA) == rows(b.model.logA) &&
+      rows(a.model.means) == rows(b.model.means) &&
+      rows(a.model.vars) == rows(b.model.vars)
+  }
+
+  // 40 sequences × 1000 points: above the driver-fold size, so the
+  // distributed fit spreads its rounds over several partitions
+  private lazy val large = (0 until 40).map(s => synthSeq(1000, s + 1))
+
   test("distributed Baum-Welch E-step fit matches the driver fit on " +
       "the same sequences") {
-    import spark.implicits._
-    val data = (0 until 6).map(s => synthSeq(120, s + 1))
+    val data = large
     // driver path: in-memory sequences
     val driver = Hmm.fitResult(data.map(_._1), k = 2, nIter = 15,
       tol = 0.0) // tol=0: fixed iteration count on both sides
     // distributed path: the SAME sequences as a (key, ts, features)
     // frame — per-key forward-backward stats on executors, M on driver
-    val rows = data.zipWithIndex.flatMap { case ((obs, _), si) =>
-      obs.zipWithIndex.map { case (x, i) =>
-        (f"k$si%02d", i.toLong, x.toSeq)
-      }
-    }
-    val df = rows.toDF("key", "ts", "features")
+    val df = frame(data)
       .repartition(8) // stats must merge across partitions
-    val dist = Hmm.fitResultDistributed(df, k = 2, nIter = 15,
-      tol = 0.0, minLen = 2)
+    var dist: Hmm.FitResult = null
+    // spread: every EM round is a job (the driver fold submits none)
+    assert(Jobs.count(spark) {
+      dist = Hmm.fitResultDistributed(df, k = 2, nIter = 15,
+        tol = 0.0, minLen = 2)
+    } >= 15, "the input must reach the spread rounds")
     assert(dist.nObs == driver.nObs && dist.nSeqs == driver.nSeqs)
     assert(dist.nIterUsed == driver.nIterUsed)
     // identical up to FP summation order of independent sequences
@@ -93,6 +119,27 @@ class HmmSpec extends SparkSpec {
     for (s <- 0 until 2; q <- 0 until 2)
       assert(math.abs(dist.model.logA(s)(q)
         - driver.model.logA(s)(q)) < 1e-8)
+  }
+
+  test("a spread fit is bit-identical run to run: partials merge in " +
+      "partition order, not in task-finish order") {
+    val df = frame(large).repartition(8)
+    val a = Hmm.fitResultDistributed(df, k = 2, nIter = 8, tol = 0.0)
+    val b = Hmm.fitResultDistributed(df, k = 2, nIter = 8, tol = 0.0)
+    assert(a.nObs > Hmm.PointsPerPart, "the input must be spread")
+    assert(same(a, b), s"loglik ${a.logLik} vs ${b.logLik}")
+  }
+
+  test("a driver-folded distributed fit equals fitResult on the " +
+      "key-sorted sequences exactly") {
+    val data = (0 until 6).map(s => synthSeq(120, s + 1))
+    val dist = Hmm.fitResultDistributed(frame(data).repartition(8),
+      k = 2, nIter = 15, tol = 0.0)
+    // frame keys k00..k05 sort in index order
+    val driver = Hmm.fitResult(data.map(_._1), k = 2, nIter = 15,
+      tol = 0.0)
+    assert(same(dist, driver),
+      s"loglik ${dist.logLik} vs ${driver.logLik}")
   }
 
   test("sweep fits are per-k independent: each component count's fit " +
@@ -183,5 +230,23 @@ class HmmSpec extends SparkSpec {
       assert(batched(k) == single,
         s"sweep counts for k=$k must equal the per-model decode")
     }
+  }
+
+  test("a one-partition HMM fit submits the same jobs at 5 and 30 " +
+      "rounds") {
+    import spark.implicits._
+    // 600 points: one partition's budget, so every round folds on the
+    // driver
+    val df = (0 until 4).flatMap { s =>
+      (0 until 150).map { i =>
+        (s"k$s", i.toLong, Seq(math.sin(i * 0.1 + s), (i % 7).toDouble))
+      }
+    }.toDF("key", "ts", "features").coalesce(1)
+    def jobs(iters: Int) = Jobs.count(spark) {
+      val fr = Hmm.fitResultDistributed(df, k = 3, nIter = iters,
+        tol = 0.0)
+      assert(fr.nIterUsed == iters)
+    }
+    assert(jobs(5) == jobs(30))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ml.LloydKmeans
 
@@ -57,6 +58,29 @@ class LloydKmeansSpec extends SparkSpec {
     }
   }
 
+  /** The retired per-round COLUMN program (assignment expression +
+    * groupBy((cluster, dim)) exchange): the parity reference that
+    * licenses LloydKmeans.lloydRound. */
+  private def lloydRoundDf(pts: DataFrame,
+      cents: IndexedSeq[Array[Double]]): IndexedSeq[Array[Double]] = {
+    val k = cents.length
+    val structs = cents.indices.map { c =>
+      struct(round(graft.functions.VecOps.sqDist18(col("v"),
+        typedlit(cents(c).toSeq)), 6).as("d"), lit(c).as("cluster"))
+    }
+    val assigned = pts.withColumn("cluster",
+      element_at(array_sort(array(structs: _*)), 1).getField("cluster"))
+    val sums = assigned
+      .select(col("cluster"), posexplode(col("v")).as(Seq("j", "x")))
+      .groupBy("cluster", "j")
+      .agg((sum(col("x").cast("decimal(38,18)")).cast("double")
+        / count(lit(1))).as("y"))
+      .collect()
+    val next = Array.tabulate(k)(c => cents(c).clone())
+    sums.foreach { r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2) }
+    next.toIndexedSeq
+  }
+
   test("the RDD round is bit-identical to the retired column-program " +
       "round across chained iterations (incl. the decimal cast, the " +
       "round-6 tiebreak, null-as-NaN elements and empty-cluster carry)") {
@@ -69,31 +93,48 @@ class LloydKmeansSpec extends SparkSpec {
         concat(array(lit(null).cast("double")),
           slice(col("embedding").cast("array<double>"), 2, 1000)))
         .otherwise(col("embedding").cast("array<double>")).as("v"))
-    val ptsRdd = pts.rdd.map { r =>
-      val s = r.getSeq[Any](1)
-      val arr = new Array[Double](s.size)
-      var i = 0
-      s.foreach { x =>
-        arr(i) = x match {
-          case null => Double.NaN
-          case d: java.lang.Double => d.doubleValue
-        }
-        i += 1
+    val rounds = LloydKmeans.points(pts, 4, 4)
+    try {
+      var cents: IndexedSeq[Array[Double]] = rounds
+        .collect { case (pid, v) if pid < 4 => (pid, v) }
+        .sortBy(_._1).map(_._2.clone())
+      // k > points in some cluster on later rounds exercises the
+      // empty-cluster carry; chain 4 rounds so drift would compound
+      for (round <- 1 to 4) {
+        val viaDf = lloydRoundDf(pts, cents)
+        val viaRdd = LloydKmeans.lloydRound(rounds, round, cents)
+        assert(viaRdd.map(_.toSeq) == viaDf.map(_.toSeq),
+          s"round $round diverged")
+        cents = viaRdd
       }
-      (r.getLong(0), arr)
-    }.cache()
-    var cents: IndexedSeq[Array[Double]] = ptsRdd.filter(_._1 < 4)
-      .collect().sortBy(_._1).map(_._2.clone()).toIndexedSeq
-    // k > points in some cluster on later rounds exercises the
-    // empty-cluster carry; chain 4 rounds so drift would compound
-    for (round <- 1 to 4) {
-      val viaDf = LloydKmeans.lloydRoundDf(pts, cents)
-      val viaRdd = LloydKmeans.lloydRound(ptsRdd, cents)
-      assert(viaRdd.map(_.toSeq) == viaDf.map(_.toSeq),
-        s"round $round diverged")
-      cents = viaRdd
-    }
-    ptsRdd.unpersist()
+    } finally rounds.close()
+  }
+
+  test("spread rounds over a repartition(8) input and the driver fold " +
+      "of the same rows give bit-identical centroids") {
+    val pv = emb.repartition(8).select(col("vec_id").cast("long").as("pid"),
+      col("embedding").cast("array<double>").as("v"))
+    val spread = LloydKmeans.points(pv, 4, 6, perPart = 1L)
+    val folded = LloydKmeans.points(pv, 4, 6, perPart = Long.MaxValue)
+    try {
+      // one job per spread round, none on the driver fold
+      var a = IndexedSeq.empty[Array[Double]]
+      var b = IndexedSeq.empty[Array[Double]]
+      assert(Jobs.count(spark) {
+        a = LloydKmeans.lloydRound(spread, 1,
+          spread.collect { case (pid, v) if pid < 4 => (pid, v) }
+            .sortBy(_._1).map(_._2.clone()))
+      } == 2)
+      assert(Jobs.count(spark) {
+        b = LloydKmeans.lloydRound(folded, 1,
+          folded.collect { case (pid, v) if pid < 4 => (pid, v) }
+            .sortBy(_._1).map(_._2.clone()))
+      } == 0)
+      assert(a.map(_.toSeq) == b.map(_.toSeq))
+      val viaSpread = LloydKmeans.centroids(spread, 4, 6)
+      val viaFold = LloydKmeans.centroids(folded, 4, 6)
+      assert(viaSpread.map(_.toSeq) == viaFold.map(_.toSeq))
+    } finally { spread.close(); folded.close() }
   }
 
   test("JVM round/cast twins match the Spark expressions bit-for-bit") {
@@ -127,5 +168,31 @@ class LloydKmeansSpec extends SparkSpec {
     assert(a._2.map(_.toSeq) == b._2.map(_.toSeq))
     assert(a._1.orderBy("pid").collect().toSeq
       == b._1.orderBy("pid").collect().toSeq)
+  }
+
+  test("a one-partition Lloyd fit submits the same jobs at 5 and 20 " +
+      "rounds") {
+    // 300 vectors × 64 dims × k = 4 is one partition's budget
+    val one = emb.filter(col("vec_id") < 300).coalesce(1)
+    assert(300L * 64 * 4 <= LloydKmeans.TermsPerPart)
+    def jobs(iters: Int) = Jobs.count(spark) {
+      LloydKmeans.fit(one, "vec_id", "embedding", k = 4, iters = iters)
+    }
+    assert(jobs(5) == jobs(20))
+  }
+
+  test("Lloyd's fixed-point stop is exact: past the fixed point, 30 " +
+      "more rounds return bitwise-equal centroids and assignments") {
+    // on this input the round-21 centroids equal the round-20 ones
+    val n = 25
+    val (aAssign, aCents) = LloydKmeans.fit(emb, "vec_id", "embedding",
+      k = 4, iters = n)
+    val (bAssign, bCents) = LloydKmeans.fit(emb, "vec_id", "embedding",
+      k = 4, iters = n + 30)
+    def bits(cs: IndexedSeq[Array[Double]]) =
+      cs.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    assert(bits(aCents) == bits(bCents))
+    assert(aAssign.orderBy("pid").collect().toSeq
+      == bAssign.orderBy("pid").collect().toSeq)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import graft.ml.PowerPca
 
 /** Power-iteration PCA semantics: the dominant component must align
@@ -50,11 +52,32 @@ class PowerPcaSpec extends SparkSpec {
       s"planted 2-dim data must be fully explained: $explained")
   }
 
+  /** The retired per-round COLUMN program (vec_id-keyed matvec + join
+    * + dim-keyed roll-up, two exchanges): the parity reference that
+    * licenses PowerPca.matvecRound. */
+  private def matvecRoundDf(px: DataFrame, v: IndexedSeq[Double],
+      dims: Int): Map[Int, Double] = {
+    val vmap = map((0 until dims)
+      .flatMap(i => Seq(lit(i), lit(v(i)))): _*)
+    val y = px
+      .withColumn("xv",
+        (col("x") * element_at(vmap, col("i")))
+          .cast("decimal(38,18)"))
+      .groupBy("vec_id")
+      .agg(sum("xv").cast("double").as("y"))
+    px.join(y, Seq("vec_id"))
+      .select(col("i"), (col("x") * col("y"))
+        .cast("decimal(38,18)").as("p"))
+      .unionAll(y.select(lit(-1).as("i"),
+        col("y").cast("decimal(38,18)").as("p")))
+      .groupBy("i").agg(sum("p").cast("double").as("w"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+  }
+
   test("the RDD matvec round is bit-identical to the retired column-" +
       "program round across chained iterations (incl. the decimal " +
       "casts, null-as-NaN elements and the null-y drop), and the " +
       "setup sums match") {
-    import org.apache.spark.sql.functions._
     val dims = 8
     // plant a null element in one vector: the primitive cache carries
     // it as NaN and its terms must drop from y and w exactly like the
@@ -66,35 +89,50 @@ class PowerPcaSpec extends SparkSpec {
         .otherwise(col("embedding").cast("array<double>"))
         .as("embedding"))
     val px = PowerPca.exploded(embN).localCheckpoint()
-    val pts = embN.select(col("embedding").cast("array<double>"))
-      .rdd.map { r =>
-        val sq = r.getSeq[Any](0)
-        val arr = new Array[Double](sq.size)
-        var i = 0
-        sq.foreach { x =>
-          arr(i) = x match {
-            case null => Double.NaN
-            case d: java.lang.Double => d.doubleValue
-          }
-          i += 1
-        }
-        arr
-      }.cache()
-    // chain 4 rounds through the round-9 normalize seam so any
-    // divergence would compound
-    var v: IndexedSeq[Double] =
-      (0 until dims).map(i => if (i % 2 == 0) 0.25 else -0.125)
-    for (round <- 1 to 4) {
-      val viaDf = PowerPca.matvecRoundDf(px, v, dims)
-      val viaRdd = PowerPca.matvecRound(pts, v, dims)
-      assert(viaRdd == viaDf, s"round $round diverged")
-      val nw = math.sqrt((0 until dims)
-        .map(i => viaRdd(i) * viaRdd(i)).sum)
-      v = (0 until dims).map(i =>
-        BigDecimal(viaRdd(i) / nw)
-          .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    }
-    pts.unpersist()
+    val rounds = PowerPca.vectors(embN, dims, 4)
+    try {
+      // chain 4 rounds through the round-9 normalize seam so any
+      // divergence would compound
+      var v: IndexedSeq[Double] =
+        (0 until dims).map(i => if (i % 2 == 0) 0.25 else -0.125)
+      for (round <- 1 to 4) {
+        val viaDf = matvecRoundDf(px, v, dims)
+        val viaRdd = PowerPca.matvecRound(rounds, round, v, dims)
+        assert(viaRdd == viaDf, s"round $round diverged")
+        val nw = math.sqrt((0 until dims)
+          .map(i => viaRdd(i) * viaRdd(i)).sum)
+        v = (0 until dims).map(i =>
+          BigDecimal(viaRdd(i) / nw)
+            .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }
+      // the setup pass's per-dim decimal sums give the column
+      // program's means
+      val n = embN.count()
+      val means = px.groupBy("i")
+        .agg(sum(col("x").cast("decimal(38,18)")).cast("double"))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1) / n).toMap
+      val fit = PowerPca.fitOn(rounds, dims, 1, 1)
+      assert(fit.n == n && fit.mean == (0 until dims).map(means))
+    } finally rounds.close()
+  }
+
+  test("spread rounds over a repartition(8) input and the driver fold " +
+      "of the same rows give bit-identical loadings") {
+    val in = emb.repartition(8)
+    val spread = PowerPca.vectors(in, 8, 2 * 6, perPart = 1L)
+    val folded = PowerPca.vectors(in, 8, 2 * 6, perPart = Long.MaxValue)
+    try {
+      var a: PowerPca.Fit = null
+      var b: PowerPca.Fit = null
+      // setup pass + 2·6 power rounds, one job each when spread
+      assert(Jobs.count(spark) { a = PowerPca.fitOn(spread, 8, 2, 6) }
+        == 1 + 2 * 6)
+      assert(Jobs.count(spark) { b = PowerPca.fitOn(folded, 8, 2, 6) }
+        == 0)
+      assert(a == b, "spread and driver-folded fits must be identical")
+      assert(a.components.map(_.v) == PowerPca.fit(emb, 2, 6)
+        .components.map(_.v))
+    } finally { spread.close(); folded.close() }
   }
 
   test("fit is bit-deterministic") {

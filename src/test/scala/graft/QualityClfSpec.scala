@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.QualityClf
 
@@ -69,19 +71,58 @@ class QualityClfSpec extends SparkSpec {
     assert(w1.keySet == (-1L to B.toLong).toSet)
   }
 
+  /** The retired per-round COLUMN program (doc-window margin + bucket
+    * aggregation exchange): the parity reference that licenses
+    * QualityClf.fitRound. */
+  private def fitRoundDf(featY: DataFrame, lr: Double, nDocs: Double,
+      w: QualityClf.Weights): QualityClf.Weights = {
+    val wMap = map(w.toSeq.sortBy(_._1)
+      .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
+    val margin = sum((col("x") * element_at(wMap, col("bk")))
+      .cast("decimal(38,18)"))
+      .over(Window.partitionBy("doc_id")).cast("double")
+    val err = round(lit(1.0) / (lit(1.0) + exp(-margin)) - col("y"), 9)
+    val g = featY.withColumn("err", err)
+      .groupBy("bk")
+      .agg(sum((col("err") * col("x")).cast("decimal(38,18)"))
+        .cast("double").as("g"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    w.map { case (bk, wv) =>
+      bk -> (wv - lr * (g.getOrElse(bk, 0.0) / nDocs))
+    }
+  }
+
   test("the RDD GD round is bit-identical to the retired column-" +
       "program round across chained iterations (incl. the decimal " +
       "margin/gradient casts and the round-9 err seam)") {
-    val grouped = QualityClf.groupedRdd(featY).cache()
-    var w: QualityClf.Weights =
-      (-1L to B.toLong).map(_ -> 0.0).toMap
-    for (round <- 1 to 4) {
-      val viaDf = QualityClf.fitRoundDf(featY, 10.0, nDocs, w)
-      val viaRdd = QualityClf.fitRound(grouped, 10.0, nDocs, w)
-      assert(viaRdd == viaDf, s"round $round diverged")
-      w = viaRdd
-    }
-    grouped.unpersist()
+    val rounds = QualityClf.docs(featY, 4)
+    try {
+      var w: QualityClf.Weights =
+        (-1L to B.toLong).map(_ -> 0.0).toMap
+      for (round <- 1 to 4) {
+        val viaDf = fitRoundDf(featY, 10.0, nDocs, w)
+        val viaRdd = QualityClf.fitRound(rounds, round, 10.0, nDocs, w)
+        assert(viaRdd == viaDf, s"round $round diverged")
+        w = viaRdd
+      }
+    } finally rounds.close()
+  }
+
+  test("spread rounds over a repartition(8) input and the driver fold " +
+      "of the same rows give bit-identical weights") {
+    val in = featY.repartition(8)
+    val spread = QualityClf.docs(in, 6, perPart = 1L)
+    val folded = QualityClf.docs(in, 6, perPart = Long.MaxValue)
+    try {
+      var a: QualityClf.Weights = null
+      var b: QualityClf.Weights = null
+      assert(Jobs.count(spark) {
+        a = QualityClf.fitOn(spread, B, 10.0, 6, nDocs) } == 6)
+      assert(Jobs.count(spark) {
+        b = QualityClf.fitOn(folded, B, 10.0, 6, nDocs) } == 0)
+      assert(a == b, "spread and driver-folded fits must be identical")
+      assert(a == QualityClf.fit(featY, B, 10.0, 6, nDocs))
+    } finally { spread.close(); folded.close() }
   }
 
   test("training moves the model off the all-positive base rate and " +
