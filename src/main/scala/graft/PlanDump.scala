@@ -3,7 +3,8 @@ package graft
 /** Write `.explain("formatted")` output for named queries (or every
   * registered query with `--all`) to a directory — the round's plan
   * evidence (`plans/r15/<query>_<tag>.txt`) — and print each query's
-  * non-single-partition Exchange count. Usage:
+  * non-single-partition Exchange count and Window-operator count, so a
+  * change of operator shape shows as a one-line diff. Usage:
   *   runMain graft.PlanDump <outDir> <tag> [--all | name...]
   * Builds its session through [[Harness.session]], like Bench, so plan
   * choices (AQE, shuffle partitions, broadcast thresholds) match the
@@ -25,10 +26,12 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
         outDir.resolve(s"${n}_$tag.txt"), plan)
-      val exchanges = "Exchange (?!SinglePartition)".r
-        .findAllIn(df.queryExecution.executedPlan.toString).length
+      val executed = df.queryExecution.executedPlan.toString
+      val exchanges =
+        "Exchange (?!SinglePartition)".r.findAllIn(executed).length
+      val windows = "Window \\[".r.findAllIn(executed).length
       println(s"[plandump] $n -> ${n}_$tag.txt (${plan.length} chars, " +
-        s"$exchanges non-single-partition exchanges)")
+        s"$exchanges non-single-partition exchanges, $windows windows)")
     }
     graft.queries.Stage.clear()
     spark.stop()

@@ -12,6 +12,11 @@ import graft.ops.Wins
   * (slope+level), hold (N consecutive same-sign bars), bars-since counters,
   * rolling activity/asymmetry, and priority state coding S0..S4.
   *
+  * The windows are added in two dependency levels (see [[Silver.level]]),
+  * so the layer plans two Window operators: the lags, pivots, hold runs and
+  * one shared row number, then the bars-since counters over that row
+  * number and the rolling event sums over the hold events.
+  *
   * Tunables resolve through [[graft.Settings.eventGrammar]] (live `def`s,
   * so env/sysprop overrides of the configs/settings.yaml `event_grammar:`
   * keys take effect without recompiling); defaults are the yaml values.
@@ -26,64 +31,47 @@ object EventGrammar {
   def PersistLevel: Double =
     graft.Settings.dbl("event_grammar.persistence_level", 0.15)
 
-  import Silver.W
+  import Silver.{W, level}
+
+  /** The events with a bars-since counter (event_grammar_v1.py:32-46 helper
+    * over 8 events), in output order. */
+  private val CountedEvents = Seq("tmf_zero_up", "tmf_zero_down",
+    "tmf_respect_zero_up", "tmf_respect_zero_down", "tmf_burst_up",
+    "tmf_burst_down", "tti_zero_up", "tti_zero_down")
 
   def build(ind: DataFrame): DataFrame = {
     val tmf = col("tmf_21")
     val tti = col("tti_proxy_v1_21")
     def i(c: Column) = when(c, 1).otherwise(0)
+    val rn = col("_rn")
 
-    val ev = ind
-      .withColumn("ev_tmf_zero_up", col("tmf_zero_cross_up"))
-      .withColumn("ev_tmf_zero_down", col("tmf_zero_cross_down"))
-      .withColumn("ev_tmf_pivot_low", Wins.pivotLow(tmf, W))
-      .withColumn("ev_tmf_pivot_high", Wins.pivotHigh(tmf, W))
-      .withColumn("ev_tmf_respect_zero_up",
-        Wins.pivotLow(tmf, W) && tmf > 0
-          && abs(lag("tmf_21", 1).over(W)) < RespectBand)
-      .withColumn("ev_tmf_respect_zero_down",
-        Wins.pivotHigh(tmf, W) && tmf < 0
-          && abs(lag("tmf_21", 1).over(W)) < RespectBand)
-      .withColumn("ev_tmf_burst_up",
-        col("tmf_slope_1") > BurstSlope && tmf > BurstLevel)
-      .withColumn("ev_tmf_burst_down",
-        col("tmf_slope_1") < -BurstSlope && tmf < -BurstLevel)
-      .withColumn("tmf_pos_run",
-        Wins.rollingSum(i(tmf > 0), W, HoldBars, HoldBars))
-      .withColumn("tmf_neg_run",
-        Wins.rollingSum(i(tmf < 0), W, HoldBars, HoldBars))
-      .withColumn("ev_tmf_hold_pos", col("tmf_pos_run") === HoldBars)
-      .withColumn("ev_tmf_hold_neg", col("tmf_neg_run") === HoldBars)
-      .withColumn("ev_tti_zero_up", Wins.zeroCrossUp(tti, W))
-      .withColumn("ev_tti_zero_down", Wins.zeroCrossDown(tti, W))
-      .withColumn("ev_tti_burst_up",
-        (tti - lag(tti, 1).over(W)) > BurstSlope && tti > BurstLevel)
-      .withColumn("ev_tti_burst_down",
-        (tti - lag(tti, 1).over(W)) < -BurstSlope && tti < -BurstLevel)
+    // window level 1: lags, pivots, hold runs and the row number every
+    // bars-since counter of level 2 shares
+    val lvl1 = level(ind,
+      "ev_tmf_zero_up" -> col("tmf_zero_cross_up"),
+      "ev_tmf_zero_down" -> col("tmf_zero_cross_down"),
+      "ev_tmf_pivot_low" -> Wins.pivotLow(tmf, W),
+      "ev_tmf_pivot_high" -> Wins.pivotHigh(tmf, W),
+      "ev_tmf_respect_zero_up" -> (Wins.pivotLow(tmf, W) && tmf > 0
+        && abs(lag("tmf_21", 1).over(W)) < RespectBand),
+      "ev_tmf_respect_zero_down" -> (Wins.pivotHigh(tmf, W) && tmf < 0
+        && abs(lag("tmf_21", 1).over(W)) < RespectBand),
+      "ev_tmf_burst_up" -> (col("tmf_slope_1") > BurstSlope && tmf > BurstLevel),
+      "ev_tmf_burst_down" ->
+        (col("tmf_slope_1") < -BurstSlope && tmf < -BurstLevel),
+      "tmf_pos_run" -> Wins.rollingSum(i(tmf > 0), W, HoldBars, HoldBars),
+      "tmf_neg_run" -> Wins.rollingSum(i(tmf < 0), W, HoldBars, HoldBars),
+      "ev_tti_zero_up" -> Wins.zeroCrossUp(tti, W),
+      "ev_tti_zero_down" -> Wins.zeroCrossDown(tti, W),
+      "ev_tti_burst_up" ->
+        ((tti - lag(tti, 1).over(W)) > BurstSlope && tti > BurstLevel),
+      "ev_tti_burst_down" ->
+        ((tti - lag(tti, 1).over(W)) < -BurstSlope && tti < -BurstLevel),
+      "_rn" -> row_number().over(W))
 
-    // respect-fail: zero-cross against a respect event within lookback
-    // (event_grammar_v1.py: respect_fail block)
-    val ev2 = ev
-      .withColumn("bs_resp_up",
-        Wins.barsSince(col("ev_tmf_respect_zero_up") === true, W))
-      .withColumn("bs_resp_down",
-        Wins.barsSince(col("ev_tmf_respect_zero_down") === true, W))
-      .withColumn("ev_tmf_respect_fail_up",
-        col("ev_tmf_zero_down") === true
-          && col("bs_resp_up").between(1, RespectFailLookback))
-      .withColumn("ev_tmf_respect_fail_down",
-        col("ev_tmf_zero_up") === true
-          && col("bs_resp_down").between(1, RespectFailLookback))
-
-    // bars-since counters (event_grammar_v1.py:32-46 helper over 8 events)
-    val withBs = Seq("tmf_zero_up", "tmf_zero_down", "tmf_respect_zero_up",
-      "tmf_respect_zero_down", "tmf_burst_up", "tmf_burst_down",
-      "tti_zero_up", "tti_zero_down").foldLeft(ev2) { (df, e) =>
-      df.withColumn(s"bs_$e",
-        Wins.barsSince(col(s"ev_$e") === true, W).cast("int"))
-    }
-
-    // rolling activity / asymmetry over {5, 20} (min_samples=1)
+    // hold events, the per-bar long/short event counts the level-2 sums
+    // roll, and 5-state coding, priority persistent > early
+    // (event_grammar_v1.py:380-404)
     val longEv = i(col("ev_tmf_zero_up") === true) +
       i(col("ev_tmf_respect_zero_up") === true) +
       i(col("ev_tmf_burst_up") === true) + i(col("ev_tmf_hold_pos") === true)
@@ -94,39 +82,65 @@ object EventGrammar {
     val ttiEv = i(col("ev_tti_zero_up") === true) +
       i(col("ev_tti_zero_down") === true) +
       i(col("ev_tti_burst_up") === true) + i(col("ev_tti_burst_down") === true)
-    val act = withBs
+    val coded = lvl1
+      .withColumn("ev_tmf_hold_pos", col("tmf_pos_run") === HoldBars)
+      .withColumn("ev_tmf_hold_neg", col("tmf_neg_run") === HoldBars)
       .withColumn("le", longEv).withColumn("se", shortEv)
-      .withColumn("tmf_long_events_5",
-        Wins.rollingSum(col("le"), W, 5, 1).cast("int"))
-      .withColumn("tmf_long_events_20",
-        Wins.rollingSum(col("le"), W, 20, 1).cast("int"))
-      .withColumn("tmf_short_events_5",
-        Wins.rollingSum(col("se"), W, 5, 1).cast("int"))
-      .withColumn("tmf_short_events_20",
-        Wins.rollingSum(col("se"), W, 20, 1).cast("int"))
-      .withColumn("tmf_event_asym_5",
-        col("tmf_long_events_5") - col("tmf_short_events_5"))
-      .withColumn("tmf_event_asym_20",
-        col("tmf_long_events_20") - col("tmf_short_events_20"))
-      .withColumn("tmf_event_activity_20",
-        col("tmf_long_events_20") + col("tmf_short_events_20"))
-      .withColumn("tti_events_20",
-        Wins.rollingSum(ttiEv, W, 20, 1).cast("int"))
-
-    // 5-state coding, priority persistent > early
-    // (event_grammar_v1.py:380-404)
-    val tmfv = col("tmf_21")
-    act
       .withColumn("flow_state_code",
-        when(tmfv.isNull, 0)
-          .when(col("ev_tmf_hold_pos") === true && tmfv > PersistLevel, 2)
-          .when(col("ev_tmf_hold_neg") === true && tmfv < -PersistLevel, 4)
-          .when(tmfv > 0, 1).when(tmfv < 0, 3).otherwise(0)
+        when(tmf.isNull, 0)
+          .when(col("ev_tmf_hold_pos") === true && tmf > PersistLevel, 2)
+          .when(col("ev_tmf_hold_neg") === true && tmf < -PersistLevel, 4)
+          .when(tmf > 0, 1).when(tmf < 0, 3).otherwise(0)
           .cast("tinyint"))
-      .withColumn("flow_state_label",
-        element_at(typedLit(Map(0 -> "S0_QUIET", 1 -> "S1_EARLY_DEMAND",
-          2 -> "S2_PERSISTENT_DEMAND", 3 -> "S3_EARLY_SUPPLY",
-          4 -> "S4_PERSISTENT_SUPPLY")), col("flow_state_code").cast("int")))
+
+    // window level 2: the bars-since counters over the shared row number
+    // and the rolling activity sums over {5, 20} (min_samples=1)
+    def barsSince(e: String) = Wins.barsSince(col(s"ev_$e") === true, W, rn)
+    val lvl2 = level(coded, Seq(
+      "bs_resp_up" -> barsSince("tmf_respect_zero_up"),
+      "bs_resp_down" -> barsSince("tmf_respect_zero_down"),
+      "tmf_long_events_5" -> Wins.rollingSum(col("le"), W, 5, 1).cast("int"),
+      "tmf_long_events_20" -> Wins.rollingSum(col("le"), W, 20, 1).cast("int"),
+      "tmf_short_events_5" -> Wins.rollingSum(col("se"), W, 5, 1).cast("int"),
+      "tmf_short_events_20" ->
+        Wins.rollingSum(col("se"), W, 20, 1).cast("int"),
+      "tti_events_20" -> Wins.rollingSum(ttiEv, W, 20, 1).cast("int")) ++
+      CountedEvents.map(e => s"bs_$e" -> barsSince(e).cast("int")): _*)
+
+    // the output columns in order, with the respect-fail events: a
+    // zero-cross against a respect event within lookback
+    // (event_grammar_v1.py: respect_fail block)
+    lvl2.select(ind.columns.map(col) ++ Seq(
+      col("ev_tmf_zero_up"), col("ev_tmf_zero_down"),
+      col("ev_tmf_pivot_low"), col("ev_tmf_pivot_high"),
+      col("ev_tmf_respect_zero_up"), col("ev_tmf_respect_zero_down"),
+      col("ev_tmf_burst_up"), col("ev_tmf_burst_down"),
+      col("tmf_pos_run"), col("tmf_neg_run"),
+      col("ev_tmf_hold_pos"), col("ev_tmf_hold_neg"),
+      col("ev_tti_zero_up"), col("ev_tti_zero_down"),
+      col("ev_tti_burst_up"), col("ev_tti_burst_down"),
+      col("bs_resp_up"), col("bs_resp_down"),
+      (col("ev_tmf_zero_down") === true
+        && col("bs_resp_up").between(1, RespectFailLookback))
+        .as("ev_tmf_respect_fail_up"),
+      (col("ev_tmf_zero_up") === true
+        && col("bs_resp_down").between(1, RespectFailLookback))
+        .as("ev_tmf_respect_fail_down")) ++
+      CountedEvents.map(e => col(s"bs_$e")) ++ Seq(
+      col("le"), col("se"),
+      col("tmf_long_events_5"), col("tmf_long_events_20"),
+      col("tmf_short_events_5"), col("tmf_short_events_20"),
+      (col("tmf_long_events_5") - col("tmf_short_events_5"))
+        .as("tmf_event_asym_5"),
+      (col("tmf_long_events_20") - col("tmf_short_events_20"))
+        .as("tmf_event_asym_20"),
+      (col("tmf_long_events_20") + col("tmf_short_events_20"))
+        .as("tmf_event_activity_20"),
+      col("tti_events_20"), col("flow_state_code"),
+      element_at(typedLit(Map(0 -> "S0_QUIET", 1 -> "S1_EARLY_DEMAND",
+        2 -> "S2_PERSISTENT_DEMAND", 3 -> "S3_EARLY_SUPPLY",
+        4 -> "S4_PERSISTENT_SUPPLY")), col("flow_state_code").cast("int"))
+        .as("flow_state_label")): _*)
   }
 
   /** Oracle SQL CTE chain over `twiggs` (Indicators.twiggsSql) — but built

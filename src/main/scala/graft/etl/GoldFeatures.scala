@@ -11,6 +11,12 @@ import graft.ops.{Cols, Wins}
   * means, oscillation index, respect-fail balance, and state-run/transition
   * features — all on top of the indicator + event-grammar columns, sharing
   * the same single per-ticker window exchange.
+  *
+  * The windows are added in three dependency levels (see
+  * [[Silver.level]]), so the layer plans three Window operators: the lags,
+  * flow/burst/persistence sums, run starts and one shared row number; then
+  * the cumulative `state_island` id and `bs_state_change`; then
+  * `state_run_length` over `(ticker, state_island)`.
   */
 object GoldFeatures {
 
@@ -22,7 +28,7 @@ object GoldFeatures {
   def WHold: Double = graft.Settings.goldFeatures.wHold
   def RecClip: Int = graft.Settings.goldFeatures.recencyClipBars
 
-  import Silver.W
+  import Silver.{W, level}
 
   def build(gram: DataFrame): DataFrame = {
     def i(c: org.apache.spark.sql.Column) = when(c, 1).otherwise(0)
@@ -34,86 +40,97 @@ object GoldFeatures {
       i(col("ev_tmf_respect_zero_down") === true) * WRespect +
       i(col("ev_tmf_burst_down") === true) * WBurst +
       i(col("ev_tmf_hold_neg") === true) * WHold
+    val lagState = lag("flow_state_code", 1).over(W)
 
-    val df = gram
-      .withColumn("tmf_slope_10",
-        col("tmf_21") - lag("tmf_21", 10).over(W))
-      .withColumn("tmf_curvature_1",
-        col("tmf_slope_1") - lag("tmf_slope_1", 1).over(W))
-      .withColumn("sign_agreement",
-        col("tmf_sign").isNotNull && col("tti_proxy_sign").isNotNull
-          && col("tmf_sign") === col("tti_proxy_sign"))
-      .withColumn("sign_divergence",
-        col("tmf_sign") * col("tti_proxy_sign") < 0)
-      .withColumn("ls", longScore).withColumn("ss", shortScore)
-      .withColumn("long_flow_score_5", Wins.rollingSum(col("ls"), W, 5, 1))
-      .withColumn("long_flow_score_20", Wins.rollingSum(col("ls"), W, 20, 1))
-      .withColumn("short_flow_score_5", Wins.rollingSum(col("ss"), W, 5, 1))
-      .withColumn("short_flow_score_20", Wins.rollingSum(col("ss"), W, 20, 1))
-      .withColumn("delta_flow_5",
-        col("long_flow_score_5") - col("short_flow_score_5"))
-      .withColumn("delta_flow_20",
-        col("long_flow_score_20") - col("short_flow_score_20"))
-      .withColumn("flow_activity_20",
-        col("long_flow_score_20") + col("short_flow_score_20"))
-      .withColumn("flow_bias_20",
-        Cols.safeDiv(col("delta_flow_20"), col("flow_activity_20")))
-      // recency transforms min(bs,clip)/clip (features_v1.py:205-219);
-      // clip = gold_features.recency_clip_bars (column names pin the
-      // default-20 schema contract; the clip VALUE is the tunable)
-      .withColumn("rec_tmf_zero_up_20",
-        least(col("bs_tmf_zero_up"), lit(RecClip)).cast("double") / RecClip)
-      .withColumn("rec_tmf_zero_down_20",
-        least(col("bs_tmf_zero_down"), lit(RecClip)).cast("double") / RecClip)
-      .withColumn("rec_tmf_burst_up_20",
-        least(col("bs_tmf_burst_up"), lit(RecClip)).cast("double") / RecClip)
-      .withColumn("rec_tmf_burst_down_20",
-        least(col("bs_tmf_burst_down"), lit(RecClip)).cast("double") / RecClip)
-      .withColumn("rec_tmf_respect_up_20",
-        least(col("bs_tmf_respect_zero_up"), lit(RecClip)).cast("double") / RecClip)
-      .withColumn("rec_tmf_respect_down_20",
-        least(col("bs_tmf_respect_zero_down"), lit(RecClip)).cast("double") / RecClip)
+    // window level 1: lags, flow/burst/persistence sums, the run starts the
+    // state islands sum and the row number bs_state_change counts from
+    val lvl1 = level(gram.withColumn("ls", longScore)
+        .withColumn("ss", shortScore),
+      "tmf_slope_10" -> (col("tmf_21") - lag("tmf_21", 10).over(W)),
+      "tmf_curvature_1" ->
+        (col("tmf_slope_1") - lag("tmf_slope_1", 1).over(W)),
+      "long_flow_score_5" -> Wins.rollingSum(col("ls"), W, 5, 1),
+      "long_flow_score_20" -> Wins.rollingSum(col("ls"), W, 20, 1),
+      "short_flow_score_5" -> Wins.rollingSum(col("ss"), W, 5, 1),
+      "short_flow_score_20" -> Wins.rollingSum(col("ss"), W, 20, 1),
       // burst counts (features_v1.py:261-288)
-      .withColumn("long_burst_5",
+      "long_burst_5" ->
         Wins.rollingSum(i(col("ev_tmf_burst_up") === true), W, 5, 1)
-          .cast("int"))
-      .withColumn("long_burst_20",
+          .cast("int"),
+      "long_burst_20" ->
         Wins.rollingSum(i(col("ev_tmf_burst_up") === true), W, 20, 1)
-          .cast("int"))
-      .withColumn("short_burst_5",
+          .cast("int"),
+      "short_burst_5" ->
         Wins.rollingSum(i(col("ev_tmf_burst_down") === true), W, 5, 1)
-          .cast("int"))
-      .withColumn("short_burst_20",
+          .cast("int"),
+      "short_burst_20" ->
         Wins.rollingSum(i(col("ev_tmf_burst_down") === true), W, 20, 1)
-          .cast("int"))
+          .cast("int"),
       // persistence means + oscillation + respect-fail balance
-      .withColumn("persistence_pos_20",
-        Wins.rollingMean(i(col("tmf_21") > 0).cast("double"), W, 20, 1))
-      .withColumn("persistence_neg_20",
-        Wins.rollingMean(i(col("tmf_21") < 0).cast("double"), W, 20, 1))
-      .withColumn("oscillation_index_20",
+      "persistence_pos_20" ->
+        Wins.rollingMean(i(col("tmf_21") > 0).cast("double"), W, 20, 1),
+      "persistence_neg_20" ->
+        Wins.rollingMean(i(col("tmf_21") < 0).cast("double"), W, 20, 1),
+      "oscillation_index_20" ->
         Wins.rollingSum(i(col("ev_tmf_zero_up") === true)
-          + i(col("ev_tmf_zero_down") === true), W, 20, 1).cast("int"))
-      .withColumn("respect_fail_balance_20",
+          + i(col("ev_tmf_zero_down") === true), W, 20, 1).cast("int"),
+      "respect_fail_balance_20" ->
         Wins.rollingSum(i(col("ev_tmf_respect_fail_up") === true)
           - i(col("ev_tmf_respect_fail_down") === true), W, 20, 1)
-          .cast("int"))
-    // state run/transition features (features_v1.py:290-311)
-    df
-      .withColumn("state_island",
-        Wins.runId(col("flow_state_code"), W))
-      .withColumn("state_run_length",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("ticker"), col("state_island"))
-          .orderBy("bar_ts", "bar_id")))
-      .withColumn("state_changed",
-        coalesce(col("flow_state_code") =!=
-          lag("flow_state_code", 1).over(W), lit(true)))
-      .withColumn("bs_state_change",
-        Wins.barsSince(col("state_changed"), W).cast("int"))
-      .withColumn("state_transition_code",
-        (lag("flow_state_code", 1).over(W).cast("int") * 10
-          + col("flow_state_code").cast("int")).cast("smallint"))
+          .cast("int"),
+      // state run/transition features (features_v1.py:290-311)
+      "state_changed" ->
+        coalesce(col("flow_state_code") =!= lagState, lit(true)),
+      "state_transition_code" -> (lagState.cast("int") * 10
+        + col("flow_state_code").cast("int")).cast("smallint"),
+      "_run_start" -> Wins.runStart(col("flow_state_code"), W),
+      "_rn" -> row_number().over(W))
+    // window level 2: the state islands (Wins.runId) and bars since the
+    // last state change
+    val lvl2 = level(lvl1,
+      "state_island" -> sum(col("_run_start")).over(Wins.cum(W)),
+      "bs_state_change" ->
+        Wins.barsSince(col("state_changed"), W, col("_rn")).cast("int"))
+    // window level 3: the position of the bar in its state run
+    val lvl3 = level(lvl2, "state_run_length" ->
+      row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("ticker"), col("state_island"))
+        .orderBy("bar_ts", "bar_id")))
+
+    // the output columns in order; recency transforms min(bs,clip)/clip
+    // (features_v1.py:205-219); clip = gold_features.recency_clip_bars
+    // (column names pin the default-20 schema contract; the clip VALUE is
+    // the tunable)
+    def recency(bs: String) =
+      least(col(bs), lit(RecClip)).cast("double") / RecClip
+    val deltaFlow20 = col("long_flow_score_20") - col("short_flow_score_20")
+    val flowActivity20 =
+      col("long_flow_score_20") + col("short_flow_score_20")
+    lvl3.select(gram.columns.map(col) ++ Seq(
+      col("tmf_slope_10"), col("tmf_curvature_1"),
+      (col("tmf_sign").isNotNull && col("tti_proxy_sign").isNotNull
+        && col("tmf_sign") === col("tti_proxy_sign")).as("sign_agreement"),
+      (col("tmf_sign") * col("tti_proxy_sign") < 0).as("sign_divergence"),
+      col("ls"), col("ss"),
+      col("long_flow_score_5"), col("long_flow_score_20"),
+      col("short_flow_score_5"), col("short_flow_score_20"),
+      (col("long_flow_score_5") - col("short_flow_score_5"))
+        .as("delta_flow_5"),
+      deltaFlow20.as("delta_flow_20"),
+      flowActivity20.as("flow_activity_20"),
+      Cols.safeDiv(deltaFlow20, flowActivity20).as("flow_bias_20"),
+      recency("bs_tmf_zero_up").as("rec_tmf_zero_up_20"),
+      recency("bs_tmf_zero_down").as("rec_tmf_zero_down_20"),
+      recency("bs_tmf_burst_up").as("rec_tmf_burst_up_20"),
+      recency("bs_tmf_burst_down").as("rec_tmf_burst_down_20"),
+      recency("bs_tmf_respect_zero_up").as("rec_tmf_respect_up_20"),
+      recency("bs_tmf_respect_zero_down").as("rec_tmf_respect_down_20"),
+      col("long_burst_5"), col("long_burst_20"),
+      col("short_burst_5"), col("short_burst_20"),
+      col("persistence_pos_20"), col("persistence_neg_20"),
+      col("oscillation_index_20"), col("respect_fail_balance_20"),
+      col("state_island"), col("state_run_length"), col("state_changed"),
+      col("bs_state_change"), col("state_transition_code")): _*)
   }
 
   /** Oracle SQL on top of `grammar` + `rec5` (needs tmf_21/tti signs —

@@ -12,18 +12,31 @@ import graft.ops.{Cols, Wins}
   *
   * One hash exchange on `ticker` + one in-partition sort serves the entire
   * ~30-column program (every window shares the same spec), which is the
-  * 100 TB-scale shape: no per-column shuffles, whole-stage codegen
-  * throughout, partial-window nulls via the min_samples guard.
+  * 100 TB-scale shape: no per-column shuffles, partial-window nulls via the
+  * min_samples guard. The windows are added in two dependency levels
+  * (see [[level]]), so the layer plans two Window operators: the lags,
+  * rolling stats and `bars_seen`, then the ATR over the true range, which
+  * reads the lagged close.
   */
 object Silver {
 
   val W = Window.partitionBy("ticker").orderBy("bar_ts", "bar_id")
 
+  /** `df` plus `cols`, in one projection. Spark plans the window
+    * expressions of one projection that share a partitioning and ordering
+    * as one Window operator; a window that reads a window output of an
+    * earlier projection needs another, so a `withColumn` per column costs
+    * an operator for every window column that reads an earlier one. The
+    * feature layers add their windows one dependency level per call, each
+    * call holding every window whose inputs already exist. */
+  def level(df: DataFrame, cols: (String, Column)*): DataFrame =
+    df.select(col("*") +: cols.map { case (n, c) => c.as(n) }: _*)
+
   def baseFeatures(bars: DataFrame): DataFrame = {
     val hl = col("high") - col("low")
-    val prevClose = lag("close", 1).over(W)
-    val df = bars
-      // price geometry (features_base.py:118-133)
+    val prevClose = col("prev_close")
+    // price geometry (features_base.py:118-133)
+    val geometry = bars
       .withColumn("hl_range", hl)
       .withColumn("body", col("close") - col("open"))
       .withColumn("body_abs", abs(col("body")))
@@ -35,49 +48,56 @@ object Silver {
       .withColumn("hlc3", (col("high") + col("low") + col("close")) / 3)
       .withColumn("ohlc4",
         (col("open") + col("high") + col("low") + col("close")) / 4)
-      // returns & gaps (features_base.py:134-137)
-      .withColumn("prev_close", prevClose)
-      .withColumn("ret_1d", Cols.safeDiv(col("close"), prevClose) - 1)
-      .withColumn("ret_5d",
-        Cols.safeDiv(col("close"), lag("close", 5).over(W)) - 1)
-      .withColumn("ret_20d",
-        Cols.safeDiv(col("close"), lag("close", 20).over(W)) - 1)
-      .withColumn("gap_from_prev_close",
-        Cols.safeDiv(col("open"), prevClose) - 1)
-      // true range + ATR (features_base.py:138-150; horizontal max via
-      // greatest with null-safe prev_close fallback)
+      .withColumn("dollar_volume", col("close") * col("volume"))
+    // window level 1: lags (features_base.py:134-137), volume / liquidity
+    // (:174-198), rolling context (:193-198), cum_count of bars (:206-209)
+    val lvl1 = level(geometry,
+      "prev_close" -> lag("close", 1).over(W),
+      "ret_5d" -> (Cols.safeDiv(col("close"), lag("close", 5).over(W)) - 1),
+      "ret_20d" -> (Cols.safeDiv(col("close"), lag("close", 20).over(W)) - 1),
+      "vol_sma_20" -> Wins.rollingMean(col("volume"), W, 20, 20),
+      "_vol_std_20" -> Wins.rollingStd(col("volume"), W, 20, 20),
+      "dollar_vol_sma_20" -> Wins.rollingMean(col("dollar_volume"), W, 20, 20),
+      "high_20" -> Wins.rollingMax(col("high"), W, 20, 20),
+      "low_20" -> Wins.rollingMin(col("low"), W, 20, 20),
+      "close_sma_20" -> Wins.rollingMean(col("close"), W, 20, 20),
+      "close_sma_50" -> Wins.rollingMean(col("close"), W, 50, 50),
+      "bars_seen" -> count(lit(1)).over(Wins.cum(W)))
+      // true range (features_base.py:138-150; horizontal max via greatest
+      // with null-safe prev_close fallback)
       .withColumn("tr", greatest(hl,
         abs(col("high") - coalesce(prevClose, col("close"))),
         abs(col("low") - coalesce(prevClose, col("close")))))
-      .withColumn("atr_14", Wins.rollingMean(col("tr"), W, 14, 14))
-      .withColumn("atr_pct_14", Cols.safeDiv(col("atr_14"), col("close")))
-      .withColumn("range_pct_close", Cols.safeDiv(hl, col("close")))
-      // volume / liquidity (features_base.py:174-198)
-      .withColumn("dollar_volume", col("close") * col("volume"))
-      .withColumn("vol_sma_20", Wins.rollingMean(col("volume"), W, 20, 20))
-      .withColumn("vol_ratio_20",
-        Cols.safeDiv(col("volume"), col("vol_sma_20")))
-      .withColumn("dollar_vol_sma_20",
-        Wins.rollingMean(col("dollar_volume"), W, 20, 20))
-      .withColumn("volume_z_20",
-        Cols.safeDiv(col("volume") - col("vol_sma_20"),
-          Wins.rollingStd(col("volume"), W, 20, 20)))
-      // rolling context (features_base.py:193-198)
-      .withColumn("high_20", Wins.rollingMax(col("high"), W, 20, 20))
-      .withColumn("low_20", Wins.rollingMin(col("low"), W, 20, 20))
-      .withColumn("close_sma_20", Wins.rollingMean(col("close"), W, 20, 20))
-      .withColumn("close_sma_50", Wins.rollingMean(col("close"), W, 50, 50))
-      .withColumn("close_vs_sma20",
-        Cols.safeDiv(col("close"), col("close_sma_20")) - 1)
-      .withColumn("close_vs_sma50",
-        Cols.safeDiv(col("close"), col("close_sma_50")) - 1)
-      // warmup flags (features_base.py:206-209): cum_count of bars
-      .withColumn("bars_seen", count(lit(1)).over(Wins.cum(W)))
-      .withColumn("warmup_14_complete", col("bars_seen") >= 14)
-      .withColumn("warmup_20_complete", col("bars_seen") >= 20)
-      .withColumn("warmup_50_complete", col("bars_seen") >= 50)
-    df.withColumn("silver_ready_base",
-      col("warmup_20_complete") && col("atr_14").isNotNull)
+    // window level 2: ATR over the true range
+    level(lvl1, "atr_14" -> Wins.rollingMean(col("tr"), W, 14, 14))
+      .select(bars.columns.map(col) ++ Seq(
+        col("hl_range"), col("body"), col("body_abs"), col("body_to_range"),
+        col("close_pos_in_range"), col("open_pos_in_range"), col("hlc3"),
+        col("ohlc4"), prevClose,
+        (Cols.safeDiv(col("close"), prevClose) - 1).as("ret_1d"),
+        col("ret_5d"), col("ret_20d"),
+        (Cols.safeDiv(col("open"), prevClose) - 1).as("gap_from_prev_close"),
+        col("tr"), col("atr_14"),
+        Cols.safeDiv(col("atr_14"), col("close")).as("atr_pct_14"),
+        Cols.safeDiv(hl, col("close")).as("range_pct_close"),
+        col("dollar_volume"), col("vol_sma_20"),
+        Cols.safeDiv(col("volume"), col("vol_sma_20")).as("vol_ratio_20"),
+        col("dollar_vol_sma_20"),
+        Cols.safeDiv(col("volume") - col("vol_sma_20"), col("_vol_std_20"))
+          .as("volume_z_20"),
+        col("high_20"), col("low_20"), col("close_sma_20"),
+        col("close_sma_50"),
+        (Cols.safeDiv(col("close"), col("close_sma_20")) - 1)
+          .as("close_vs_sma20"),
+        (Cols.safeDiv(col("close"), col("close_sma_50")) - 1)
+          .as("close_vs_sma50"),
+        // warmup flags (features_base.py:206-209)
+        col("bars_seen"),
+        (col("bars_seen") >= 14).as("warmup_14_complete"),
+        (col("bars_seen") >= 20).as("warmup_20_complete"),
+        (col("bars_seen") >= 50).as("warmup_50_complete"),
+        (col("bars_seen") >= 20 && col("atr_14").isNotNull)
+          .as("silver_ready_base")): _*)
   }
 
   /** SQL mirror of baseFeatures for the DuckDB oracle (selects the feature

@@ -60,23 +60,37 @@ object Wins {
 
   /** Bars since the last row where `event` was true (inclusive of the event
     * row = 0); null before the first event.
-    * Ref: src/mf_etl/gold/event_grammar_v1.py:32-46. */
-  def barsSince(event: Column, w: WindowSpec): Column = {
-    val idx = row_number().over(w)
-    val lastEventIdx =
-      last(when(event, idx), ignoreNulls = true).over(cum(w))
-    idx - lastEventIdx
-  }
+    * Ref: src/mf_etl/gold/event_grammar_v1.py:32-46.
+    *
+    * Two window levels: the `row_number()` is nested inside the cumulative
+    * `last(...)`, so Spark plans an inner Window operator for the row number
+    * and an outer one for the `last`, wherever this is used (in a
+    * `withColumn` chain, a pair per counter). The overload below takes a
+    * row-number column computed once in an earlier projection, so all the
+    * counters of one later projection share a single level. */
+  def barsSince(event: Column, w: WindowSpec): Column =
+    barsSince(event, w, row_number().over(w))
+
+  /** [[barsSince]] over `rowNum`, the partition's 1-based row number under
+    * `w` (`row_number().over(w)`, or a column holding it). */
+  def barsSince(event: Column, w: WindowSpec, rowNum: Column): Column =
+    rowNum - last(when(event, rowNum), ignoreNulls = true).over(cum(w))
 
   /** Gaps-and-islands run id: increments whenever `value` changes (first row
     * of the partition starts run 1).
-    * Ref: src/mf_etl/gold/features_v1.py:290-313. */
-  def runId(value: Column, w: WindowSpec): Column = {
-    val changed =
-      when(lag(value, 1).over(w).isNull || value =!= lag(value, 1).over(w), 1)
-        .otherwise(0)
-    sum(changed).over(cum(w))
-  }
+    * Ref: src/mf_etl/gold/features_v1.py:290-313.
+    *
+    * Two window levels: the `lag` inside [[runStart]] is nested inside the
+    * cumulative `sum`. A caller that plans its windows by dependency level
+    * computes [[runStart]] in one projection and sums it in the next. */
+  def runId(value: Column, w: WindowSpec): Column =
+    sum(runStart(value, w)).over(cum(w))
+
+  /** 1 on the first row of a run of equal `value`s (and on the partition's
+    * first row), else 0: the flag [[runId]] sums. */
+  def runStart(value: Column, w: WindowSpec): Column =
+    when(lag(value, 1).over(w).isNull || value =!= lag(value, 1).over(w), 1)
+      .otherwise(0)
 
   /** Forward fill: last non-null value at or before the current row. */
   def forwardFill(c: Column, w: WindowSpec): Column =

@@ -89,6 +89,18 @@ class OpsSpec extends SparkSpec {
     assert(out.toSeq == Seq(-1, 0, 1, 2, 0))
   }
 
+  test("barsSince over a shared row-number column equals the nested form") {
+    val df = Seq(("t", 1L, false), ("t", 2L, true), ("t", 3L, false),
+      ("u", 1L, true), ("u", 2L, false), ("u", 3L, true)).toDF("k", "ts", "ev")
+    val w = Window.partitionBy("k").orderBy("ts")
+    val out = df.withColumn("rn", row_number().over(w))
+      .select(Wins.barsSince(col("ev"), w),
+        Wins.barsSince(col("ev"), w, col("rn")))
+      .collect()
+    assert(out.forall(r => r.get(0) == r.get(1)))
+    assert(out.count(_.isNullAt(0)) == 1)
+  }
+
   test("runId + run length reproduce gaps-and-islands") {
     val df = Seq(("t", 1L, "a"), ("t", 2L, "a"), ("t", 3L, "b"),
       ("t", 4L, "a")).toDF("k", "ts", "s")

@@ -795,4 +795,41 @@ class PlanAuditSpec extends SparkSpec {
     // fixture must request more partitions than the 8-knee
     assert(PowerPca.fitPartitions(500L * 100, 64, 2048) == 782)
   }
+
+  test("feature layers plan at most one Window operator per dependency " +
+      "level") {
+    import graft.etl._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    // each layer over its own input read back from parquet, as the
+    // medallion chain hands layers over: the count is the layer's own
+    val tmp = java.nio.file.Files.createTempDirectory("graft-levels")
+    def readBack(df: DataFrame, name: String): DataFrame = {
+      val p = tmp.resolve(name).toString
+      df.write.parquet(p)
+      spark.read.parquet(p)
+    }
+    val limits = Seq[(String, DataFrame => DataFrame, Int)](
+      ("silver", Silver.baseFeatures, 2), ("indicators", Indicators.twiggs, 3),
+      ("grammar", EventGrammar.build, 2), ("gold", GoldFeatures.build, 3),
+      ("labels", ForwardLabels.build, 2))
+    try {
+      val bars = readBack(MarketData.barsFromEvents(
+        spark.read.parquet(s"$dir/events.parquet")), "bars")
+      var in = bars
+      val counts = limits.map { case (name, build, _) =>
+        val out = build(in)
+        in = readBack(out, name)
+        name -> out.queryExecution.optimizedPlan
+          .collect { case w: Window => w }.length
+      }
+      info(s"Window operators per layer: $counts")
+      val over = counts.zip(limits).collect {
+        case ((name, n), (_, _, max)) if n > max => s"$name $n > $max" }
+      assert(over.isEmpty, s"Window operators over the layer limits: " +
+        over.mkString(", "))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+  }
 }
