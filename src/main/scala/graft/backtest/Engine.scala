@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *   e. decide entry: flat + entry signal at t → pending entry for t+1
   *   f. last bar with open position → force close at close(t)
   *
-  * Runs as one typed `flatMapGroups` per ticker — the only sequential
-  * kernel in the engine; every ticker is independent, so it scales as one
-  * shuffle on ticker with per-group linear scans.
+  * Runs as one typed `flatMapGroups` per (cell, ticker) — the only
+  * sequential kernel in the engine; every ticker of every cell is
+  * independent, so it scales as one shuffle with per-group linear scans.
   */
 object Engine {
 
@@ -97,67 +97,38 @@ object Engine {
     out.toSeq
   }
 
-  /** Distributed simulation: one shuffle on ticker, per-group sort +
-    * linear scan. Input needs columns of SimBar (signal output of
-    * Signals.generate joined with bars). */
+  /** One-cell simulation: all of `signals` (the columns of SimBar, as
+    * Signals.generate emits them) is one sim under `cfg`. */
   def simulate(signals: DataFrame, cfg: Config): Dataset[Trade] = {
     val spark = signals.sparkSession
     import spark.implicits._
-    val in = signals.select(col("ticker"), col("bar_ts"), col("bar_id"),
-      col("open"), col("high"), col("low"), col("close"),
-      col("flow_state_code").cast("int").as("state_code"),
-      coalesce(col("entry_signal"), lit(false)).as("entry_signal"),
-      coalesce(col("signal_side"), lit(0)).cast("int").as("signal_side"))
-      .as[SimBar]
-    in.groupByKey(_.ticker).flatMapGroups { (tk, it) =>
-      simulateTicker(tk, it.toIndexedSeq.sortBy(b => (b.bar_ts, b.bar_id)),
-        cfg).iterator
-    }
+    simulate(signals.withColumn("cell", lit("")), Map("" -> cfg))
+      .drop("cell").as[Trade]
   }
 
-  case class SimBarK(cell: String, hold_bars: Int, fee_bps: Double,
-    ticker: String, bar_ts: Long, bar_id: Long,
-    open: Double, high: Double, low: Double, close: Double,
-    state_code: Int, entry_signal: Boolean, signal_side: Int)
-
-  case class TradeK(cell: String, ticker: String, pos_seq: Int, side: Int,
-    entry_rn: Int, exit_rn: Int, entry_ts: Long, exit_ts: Long,
-    entry_price: Double, exit_price: Double, exit_reason: String,
-    hold_bars: Int, gross_ret: Double, net_ret: Double,
-    mfe: Double, mae: Double)
-
-  /** Batched multi-config simulation: `cell` names an independent sim
-    * whose per-row `hold_bars`/`fee_bps` config columns are constant
-    * within the cell. ONE shuffle on (cell, ticker) runs every cell's
-    * per-ticker linear scan — N grid/walk-forward sims become one
-    * distributed job instead of N separate jobs (each with its own
-    * shuffle), which is exactly how a 1000-executor cluster wants a
-    * parameter sweep delivered. Per-(cell, ticker) output is identical
-    * to [[simulate]] with that cell's config over that cell's rows. */
-  def simulateKeyed(signals: DataFrame): Dataset[TradeK] = {
+  /** Keyed simulation: each `cell` value of `signals` names an independent
+    * sim run under `cfgs(cell)`. ONE shuffle on (cell, ticker), then a
+    * per-group sort on (bar_ts, bar_id) and the [[simulateTicker]] scan,
+    * so a whole parameter sweep or walk-forward is one distributed job
+    * however many cells it has. Output: `cell` plus the Trade columns;
+    * a cell without trades has no rows. */
+  def simulate(signals: DataFrame, cfgs: Map[String, Config]): DataFrame = {
     val spark = signals.sparkSession
     import spark.implicits._
-    val in = signals.select(col("cell").cast("string").as("cell"),
-      col("hold_bars").cast("int").as("hold_bars"),
-      col("fee_bps").cast("double").as("fee_bps"),
-      col("ticker"), col("bar_ts"), col("bar_id"),
-      col("open"), col("high"), col("low"), col("close"),
-      col("flow_state_code").cast("int").as("state_code"),
-      coalesce(col("entry_signal"), lit(false)).as("entry_signal"),
-      coalesce(col("signal_side"), lit(0)).cast("int").as("signal_side"))
-      .as[SimBarK]
-    in.groupByKey(b => (b.cell, b.ticker)).flatMapGroups { (key, it) =>
-      val (cl, tk) = key
-      val bars = it.toIndexedSeq.sortBy(b => (b.bar_ts, b.bar_id))
-      val cfg = Config(bars.head.hold_bars, bars.head.fee_bps)
-      simulateTicker(tk, bars.map(b => SimBar(b.ticker, b.bar_ts, b.bar_id,
-        b.open, b.high, b.low, b.close, b.state_code, b.entry_signal,
-        b.signal_side)), cfg)
-        .iterator.map(t => TradeK(cl, t.ticker, t.pos_seq, t.side,
-          t.entry_rn, t.exit_rn, t.entry_ts, t.exit_ts, t.entry_price,
-          t.exit_price, t.exit_reason, t.hold_bars, t.gross_ret,
-          t.net_ret, t.mfe, t.mae))
-    }
+    val in = signals.select(col("cell").cast("string").as("_1"),
+      struct(col("ticker"), col("bar_ts"), col("bar_id"),
+        col("open"), col("high"), col("low"), col("close"),
+        col("flow_state_code").cast("int").as("state_code"),
+        coalesce(col("entry_signal"), lit(false)).as("entry_signal"),
+        coalesce(col("signal_side"), lit(0)).cast("int").as("signal_side"))
+        .as("_2"))
+      .as[(String, SimBar)]
+    in.groupByKey(r => (r._1, r._2.ticker)).flatMapGroups { (key, it) =>
+      val (cell, tk) = key
+      simulateTicker(tk, it.map(_._2).toIndexedSeq
+        .sortBy(b => (b.bar_ts, b.bar_id)), cfgs(cell)).iterator
+        .map(t => (cell, t))
+    }.select(col("_1").as("cell"), col("_2.*"))
   }
 
   /** Oracle SQL: the same per-bar contract as a single recursive CTE per

@@ -12,8 +12,8 @@ import graft.ops.Cols
   */
 object Metrics {
 
-  /** Per-group trade summary; groupCols empty → global (grouped by a
-    * constant). */
+  /** Per-group trade summary; groupCols empty → one global row (an empty
+    * trade frame still gives that row, with n_trades = 0). */
   def summary(trades: DataFrame, groupCols: Seq[String]): DataFrame = {
     val win = col("net_ret") > 0
     val aggs = Seq(
@@ -32,10 +32,27 @@ object Metrics {
       Cols.countIf(col("exit_reason") === "END_OF_DATA").as("n_eod"),
       round(avg(col("mfe")), 9).as("avg_mfe"),
       round(avg(col("mae")), 9).as("avg_mae"))
-    if (groupCols.isEmpty)
-      trades.agg(aggs.head, aggs.tail: _*)
-    else
-      trades.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    trades.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The counts among the per-cell metric columns: a cell without trades
+    * has 0 of each, like a global aggregate over an empty frame. */
+  private val CountCols =
+    Seq("n_trades", "n_horizon", "n_state_exit", "n_eod", "trade_count")
+
+  /** One row per row of `cells` (a `cell` id plus metadata columns):
+    * the metric columns of `byCell` (grouped on `cell`), then the
+    * metadata; the id itself is dropped. A cell with no trades is absent
+    * from `byCell`; here it keeps its row with the counts at 0 and every
+    * other metric null — exactly what the global aggregate of that
+    * cell alone returns. */
+  def perCell(cells: DataFrame, byCell: DataFrame): DataFrame = {
+    val j = cells.join(byCell, Seq("cell"), "left")
+    CountCols.filter(j.columns.contains).foldLeft(j) { (df, c) =>
+        df.withColumn(c, coalesce(col(c), lit(0L)))
+      }
+      .select((byCell.columns ++ cells.columns).filter(_ != "cell")
+        .map(col): _*)
   }
 
   /** SQL mirror over CTE `trades` with the same group-by columns. */
@@ -102,14 +119,14 @@ object Metrics {
         round(col("drawdown"), 9).as("drawdown"))
   }
 
-  /** Per-cell max drawdown over a keyed trade frame (Engine.simulateKeyed
-    * output) — the batched counterpart of `portfolio(...).agg(min(
-    * drawdown))` per cell: ONE grouped two-pass prefix scan
-    * (Wins.groupedCumSumMax) computes every cell's equity curve in a
-    * single job instead of one eager scan per cell. Identical arithmetic
-    * to [[portfolio]] (same decimal cum-log, same cast/round points), so
-    * per-cell values match the one-cell path exactly. Cells with no
-    * trades are simply absent (left-join and null-fill at the caller). */
+  /** Per-cell max drawdown over a keyed trade frame (the keyed
+    * Engine.simulate output) — the batched counterpart of
+    * `portfolio(...).agg(min(drawdown))` per cell: ONE grouped two-pass
+    * prefix scan (Wins.groupedCumSumMax) computes every cell's equity
+    * curve in a single job instead of one eager scan per cell. Identical
+    * arithmetic to [[portfolio]] (same decimal cum-log, same cast/round
+    * points), so per-cell values match the one-cell path exactly. Cells
+    * with no trades are absent ([[perCell]] fills them in). */
   def maxDrawdownByCell(trades: DataFrame): DataFrame = {
     val byBar = trades.groupBy("cell", "exit_rn")
       .agg(avg(col("net_ret")).as("mean_ret"))

@@ -13,29 +13,22 @@ import graft.etl.{EventGrammar, Indicators, MarketData}
   */
 object BacktestQueries extends QueryModule {
 
-  private val Mode = "state_entry"
-  private val Confirm = 2
-  private val Cfg = Engine.Config(holdBars = 10, feeBps = 5.0)
+  private val Default = graft.backtest.Grid.Default
 
   // signals stay uncached (wide frame; pruning beats reuse) — only the
   // small trades result is stage-cached below
   private def signalsDf(s: SparkSession, dir: String): DataFrame =
     Signals.generate(
       EventGrammar.build(Indicators.twiggs(
-        MarketData.barsFromEvents(t(s, dir, "events")))), Mode, Confirm)
-
-  // the default combo is also a grid combo: share one cached trade frame
-  // across this module and the grid/robustness/candidate family
-  private def tradesDf(s: SparkSession, dir: String): DataFrame =
-    BacktestQueries2.comboTrades(s, dir,
-      graft.backtest.Grid.Combo(Mode, Confirm, Cfg.holdBars, Cfg.feeBps))
+        MarketData.barsFromEvents(t(s, dir, "events")))),
+      Default.mode, Default.confirmBars)
 
   /** Shared oracle prelude: bars → twiggs recursion → grammar → signals. */
   private def chain: String =
     s"""${MarketData.barsSql},
       ${Indicators.twiggsSql},
       ${EventGrammar.grammarSql},
-      ${Signals.sql(Mode, Confirm)}"""
+      ${Signals.sql(Default.mode, Default.confirmBars)}"""
 
   def all: Seq[Q] = Seq(
 
@@ -52,13 +45,13 @@ object BacktestQueries extends QueryModule {
 
     Q("q_bt_trades", Some(s"""
       WITH RECURSIVE $chain,
-      ${Engine.tradesSql(Cfg)}
+      ${Engine.tradesSql(Default.config)}
       SELECT ticker, pos_seq, side, entry_rn, exit_rn, entry_ts, exit_ts,
              entry_price, exit_price, exit_reason, hold_bars,
              round(gross_ret, 9) AS gross_ret, round(net_ret, 9) AS net_ret,
              round(mfe, 9) AS mfe, round(mae, 9) AS mae
       FROM trades ORDER BY ticker, pos_seq""")) { (s, dir) =>
-      tradesDf(s, dir)
+      BacktestQueries2.defaultTrades(s, dir)
         .select(col("ticker"), col("pos_seq"), col("side"), col("entry_rn"),
           col("exit_rn"), col("entry_ts"), col("exit_ts"),
           col("entry_price"), col("exit_price"), col("exit_reason"),
@@ -71,26 +64,28 @@ object BacktestQueries extends QueryModule {
 
     Q("q_bt_summary", Some(s"""
       WITH RECURSIVE $chain,
-      ${Engine.tradesSql(Cfg)},
+      ${Engine.tradesSql(Default.config)},
       ${Metrics.summarySql(Seq.empty)}
       SELECT * FROM summary""")) { (s, dir) =>
-      Metrics.summary(tradesDf(s, dir), Seq.empty)
+      Metrics.summary(BacktestQueries2.defaultTrades(s, dir), Seq.empty)
     },
 
     Q("q_bt_summary_by_symbol", Some(s"""
       WITH RECURSIVE $chain,
-      ${Engine.tradesSql(Cfg)},
+      ${Engine.tradesSql(Default.config)},
       ${Metrics.summarySql(Seq("ticker"))}
       SELECT * FROM summary ORDER BY ticker""")) { (s, dir) =>
-      Metrics.summary(tradesDf(s, dir), Seq("ticker")).orderBy("ticker")
+      Metrics.summary(BacktestQueries2.defaultTrades(s, dir), Seq("ticker"))
+        .orderBy("ticker")
     },
 
     Q("q_bt_portfolio", Some(s"""
       WITH RECURSIVE $chain,
-      ${Engine.tradesSql(Cfg)},
+      ${Engine.tradesSql(Default.config)},
       ${Metrics.portfolioSql}
       SELECT * FROM portfolio ORDER BY exit_rn""")) { (s, dir) =>
-      Metrics.portfolio(tradesDf(s, dir)).orderBy("exit_rn")
+      Metrics.portfolio(BacktestQueries2.defaultTrades(s, dir))
+        .orderBy("exit_rn")
     }
   )
 }

@@ -7,15 +7,13 @@ import graft.etl.{EventGrammar, Indicators, MarketData}
 import graft.ops.Cols
 
 /** Backtest analytics extensions: trade-edge metrics (M12), rank-blend
-  * robustness scoring (M13), symbol-master rollup, and the sensitivity
-  * grid (driver loop over combos — rows-only, each combo re-runs the
-  * typed simulator).
+  * robustness scoring (M13), symbol-master rollup, walk-forward, and the
+  * sensitivity grid (all 8 combos as one keyed simulation, shared with
+  * the robustness and candidate family).
   */
 object BacktestQueries2 extends QueryModule {
 
-  private val Mode = "state_entry"
-  private val Confirm = 2
-  private val Cfg = Engine.Config(holdBars = 10, feeBps = 5.0)
+  private val Default = Grid.Default
 
   /** Grid combos shared by the Spark runner and the per-combo oracle. */
   val GridCombos: Seq[Grid.Combo] =
@@ -31,29 +29,23 @@ object BacktestQueries2 extends QueryModule {
           "close", "flow_state_code")
     }
 
-  /** Per-combo simulated trades, cached — q_bt_grid and
-    * q_bt_robustness_v2 share the 8 sims (trades are tiny frames). */
-  private[queries] def comboTrades(s: org.apache.spark.sql.SparkSession,
-      dir: String, c: Grid.Combo) =
-    Stage.cached(s, dir,
-      s"trades_${c.mode}_${c.confirmBars}_${c.holdBars}_${c.feeBps}") {
+  /** The default combo's trades through the one-cell simulation, cached
+    * — the single-combo consumers (trades, summaries, portfolio, edge,
+    * robustness, the sanity audit) read only this one sim. */
+  private[queries] def defaultTrades(s: org.apache.spark.sql.SparkSession,
+      dir: String) =
+    Stage.cached(s, dir, "trades_default") {
       Engine.simulate(
-        Signals.generate(gramSlim(s, dir), c.mode, c.confirmBars),
-        Engine.Config(c.holdBars, c.feeBps)).toDF()
+        Signals.generate(gramSlim(s, dir), Default.mode, Default.confirmBars),
+        Default.config).toDF()
     }
 
   private def chain: String =
     s"""${MarketData.barsSql},
       ${Indicators.twiggsSql},
       ${EventGrammar.grammarSql},
-      ${Signals.sql(Mode, Confirm)},
-      ${Engine.tradesSql(Cfg)}"""
-
-  /** The default combo IS a grid combo — share its cached trades with the
-    * grid/robustness family instead of re-running the chain under a
-    * second cache key. */
-  private def tradesDf(s: org.apache.spark.sql.SparkSession, dir: String) =
-    comboTrades(s, dir, Grid.Combo(Mode, Confirm, Cfg.holdBars, Cfg.feeBps))
+      ${Signals.sql(Default.mode, Default.confirmBars)},
+      ${Engine.tradesSql(Default.config)}"""
 
   /** Portable combo id — also the candidate pack's selection tiebreak. */
   private[queries] def comboId(c: Grid.Combo): String =
@@ -200,41 +192,21 @@ object BacktestQueries2 extends QueryModule {
            FROM ${p}v1s)"""
   }
 
-  /** Per-combo metric row (trade stats ⨯ equity max drawdown) — the `m`
-    * block of the oracle, reused per hybrid-eval run variant. */
-  private[queries] def comboMetricsRow(
-      trades: org.apache.spark.sql.DataFrame, c: Grid.Combo,
-      i: Int): org.apache.spark.sql.DataFrame = {
-    val m = trades.agg(
-      count(lit(1)).as("trade_count"),
-      avg("net_ret").as("expectancy"),
-      Cols.safeDiv(sum(when(col("net_ret") > 0, col("net_ret"))),
-        abs(sum(when(!(col("net_ret") > 0), col("net_ret")))))
-        .as("profit_factor"),
-      stddev_pop(col("net_ret")).as("return_std"),
-      stddev_pop(when(col("net_ret") < 0, col("net_ret")))
-        .as("downside_std"),
-      Cols.safeDiv(stddev_pop(col("net_ret")),
-        abs(avg(col("net_ret")))).as("ret_cv"))
-    val dd = Metrics.portfolio(trades)
-      .agg(min("drawdown").as("max_drawdown"))
-    m.crossJoin(dd)
-      .withColumn("combo_idx", lit(i))
-      .withColumn("combo_id", lit(comboId(c)))
-      .withColumn("mode", lit(c.mode))
-      .withColumn("confirm_bars", lit(c.confirmBars))
-      .withColumn("hold_bars", lit(c.holdBars))
-      .withColumn("fee_bps", lit(c.feeBps))
-  }
+  /** The grid's cell metadata: one row per combo, `cell` = its index. */
+  private[queries] def gridCells(s: org.apache.spark.sql.SparkSession) =
+    s.createDataFrame(Grid.cells(GridCombos).map { case (ci, c) =>
+        (ci, ci.toInt, comboId(c), c.mode, c.confirmBars, c.holdBars,
+          c.feeBps) })
+      .toDF("cell", "combo_idx", "combo_id", "mode", "confirm_bars",
+        "hold_bars", "fee_bps")
 
-  /** Batched [[comboMetricsRow]]: per-cell trade stats ⨯ per-cell max
-    * drawdown over an Engine.simulateKeyed trade frame — two distributed
-    * jobs TOTAL for any number of cells (one grouped aggregate, one
-    * grouped prefix scan) instead of one eager scan pair per cell.
-    * `cells` carries one row per expected cell plus its metadata
-    * columns; cells that produced no trades keep trade_count = 0 with
-    * null metrics, exactly like the per-cell agg-over-empty shape. */
-  private[queries] def comboMetricsRowsKeyed(
+  /** Per-cell combo metrics (trade stats ⨯ equity max drawdown — the `m`
+    * and `dd` blocks of the oracle) over a keyed trade frame: two
+    * distributed jobs for any number of cells (one grouped aggregate, one
+    * grouped prefix scan). `cells` carries one row per expected cell plus
+    * its metadata columns; a cell without trades keeps trade_count = 0
+    * with null metrics (Metrics.perCell). */
+  private[queries] def comboMetrics(
       trades: org.apache.spark.sql.DataFrame,
       cells: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val m = trades.groupBy("cell").agg(
@@ -248,9 +220,8 @@ object BacktestQueries2 extends QueryModule {
         .as("downside_std"),
       Cols.safeDiv(stddev_pop(col("net_ret")),
         abs(avg(col("net_ret")))).as("ret_cv"))
-    val dd = Metrics.maxDrawdownByCell(trades)
-    cells.join(m, Seq("cell"), "left").join(dd, Seq("cell"), "left")
-      .withColumn("trade_count", coalesce(col("trade_count"), lit(0L)))
+    Metrics.perCell(cells,
+      m.join(Metrics.maxDrawdownByCell(trades), Seq("cell"), "left"))
   }
 
   /** Rank-to-[0,1] v1/v2 robustness scoring over a combo metric frame —
@@ -306,17 +277,6 @@ object BacktestQueries2 extends QueryModule {
         lit(100.0)), lit(0.0)), 6).as("robustness_score_v2")): _*)
   }
 
-  /** Scored combo frame (the Spark twin of `comboScoredSql`), cached —
-    * the 8 per-combo sims come from the shared comboTrades cache; the
-    * ranking windows run over an 8-row frame. */
-  private[queries] def comboScored(
-      s: org.apache.spark.sql.SparkSession, dir: String) =
-    Stage.cached(s, dir, "combo_scored") {
-      scoreCombos(GridCombos.zipWithIndex.map { case (c, i) =>
-        comboMetricsRow(comboTrades(s, dir, c), c, i)
-      }.reduce(_.unionByName(_)))
-    }
-
   def all: Seq[Q] = Seq(
 
     // M12: per-symbol trade-edge metrics battery
@@ -342,7 +302,7 @@ object BacktestQueries2 extends QueryModule {
                / any_value(nb.n_bars), 6) AS trades_per_1000_rows
       FROM trades t JOIN nb ON t.ticker = nb.ticker
       GROUP BY t.ticker ORDER BY t.ticker""")) { (s, dir) =>
-      val trades = tradesDf(s, dir)
+      val trades = defaultTrades(s, dir)
       // signals are 1:1 with grammar rows, so the bar-count side table
       // reads the cached slim grammar stage instead of rebuilding the
       // indicators→grammar→signals chain
@@ -387,7 +347,7 @@ object BacktestQueries2 extends QueryModule {
              round(greatest(least(100 * (0.4 * pr_exp + 0.3 * pr_down
                + 0.3 * pr_act), 100.0), 0.0), 6) AS robustness
       FROM r ORDER BY ticker""")) { (s, dir) =>
-      val m = tradesDf(s, dir).groupBy("ticker")
+      val m = defaultTrades(s, dir).groupBy("ticker")
         .agg(count(lit(1)).as("n_trades"),
           avg("net_ret").as("expectancy"),
           coalesce(stddev_pop(when(col("net_ret") < 0, col("net_ret"))),
@@ -427,7 +387,7 @@ object BacktestQueries2 extends QueryModule {
                 robustness_score_v1, robustness_score_v2
          FROM combo_scored
          ORDER BY mode, confirm_bars, hold_bars""")) { (s, dir) =>
-      BacktestQueries2.comboScored(s, dir)
+      HybridQueries.runScored(s, dir, None)
         .select("mode", "confirm_bars", "hold_bars", "fee_bps",
           "trade_count", "expectancy", "profit_factor", "max_drawdown",
           "robustness_score_v1", "robustness_score_v2")
@@ -477,7 +437,7 @@ object BacktestQueries2 extends QueryModule {
            SELECT s.* FROM signals s, wb
            WHERE s.bar_ts > wb.lo + $i * wb.step
              AND s.bar_ts <= $whereEnd),
-         ${Engine.tradesSql(Cfg, src = "win")},
+         ${Engine.tradesSql(Default.config, src = "win")},
          ${Metrics.summarySql(Seq.empty)}
          SELECT $i AS split_idx,
                 (SELECT lo + $i * step FROM wb) AS test_start_ts,
@@ -488,7 +448,7 @@ object BacktestQueries2 extends QueryModule {
       s"""WITH RECURSIVE ${MarketData.barsSql},
          ${Indicators.twiggsSql},
          ${EventGrammar.grammarSql},
-         ${Signals.sql(Mode, Confirm)},
+         ${Signals.sql(Default.mode, Default.confirmBars)},
          wb AS (SELECT min(bar_ts) AS lo, max(bar_ts) AS hi,
                        (max(bar_ts) - min(bar_ts)) // $nWf AS step
                 FROM signals)
@@ -496,19 +456,19 @@ object BacktestQueries2 extends QueryModule {
          ORDER BY split_idx"""
     }) { (s, dir) =>
       import graft.backtest.WalkForward
-      // slim cached projection: 4 split sims share one chain computation
+      // slim cached projection: the split cells share one chain computation
       val sig = Stage.slimSignals(s, dir)
       val bounds = sig.agg(min("bar_ts"), max("bar_ts")).head
       val ss = WalkForward.splits(bounds.getLong(0), bounds.getLong(1),
         graft.Settings.walkForward.nSplits)
-      WalkForward.run(sig, ss, Cfg)
+      WalkForward.run(sig, ss, Default.config)
         .select(col("split_idx"), col("test_start_ts"), col("test_end_ts"),
           col("n_trades"), col("win_rate"), col("expectancy"))
         .orderBy("split_idx")
     },
 
-    // Sensitivity grid: driver loop over combos (each combo re-runs the
-    // typed simulator; caps mirror the reference's 500). Oracle: one
+    // Sensitivity grid: every combo is one cell of the shared keyed grid
+    // simulation (caps mirror the reference's 500). Oracle: one
     // recursive-CTE sim per combo, UNION'd.
     Q("q_bt_grid", Some {
       // chain hoisted once (see q_bt_walk_forward note); per-combo
@@ -531,16 +491,8 @@ object BacktestQueries2 extends QueryModule {
          SELECT * FROM (${per.mkString(" UNION ALL ")})
          ORDER BY mode, confirm_bars, hold_bars"""
     }) { (s, dir) =>
-      // slim projection cached: the 8 grid combos only need the signal
-      // machine's inputs, not the full grammar width
-      val results = BacktestQueries2.GridCombos.map { c =>
-        Metrics.summary(BacktestQueries2.comboTrades(s, dir, c), Seq.empty)
-          .withColumn("mode", lit(c.mode))
-          .withColumn("confirm_bars", lit(c.confirmBars))
-          .withColumn("hold_bars", lit(c.holdBars))
-          .withColumn("fee_bps", lit(c.feeBps))
-      }
-      results.reduce(_.unionByName(_))
+      Grid.summarize(HybridQueries.gridTrades(s, dir, None),
+          Grid.cells(GridCombos))
         .select(col("mode"), col("confirm_bars"), col("hold_bars"),
           col("fee_bps"), col("n_trades"), col("win_rate"),
           col("expectancy"), col("profit_factor"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.backtest.{Engine, Metrics, Signals}
+import graft.backtest.{Engine, Grid, Metrics, Signals}
 import graft.etl.{EventGrammar, ForwardLabels, Indicators, MarketData}
 import graft.ml.Bootstrap
 
@@ -17,8 +17,7 @@ import graft.ml.Bootstrap
   */
 object CompareQueries extends QueryModule {
 
-  private val Mode = "state_entry"
-  private val Confirm = 2
+  private val Default = Grid.Default
 
   def all: Seq[Q] = Seq(
 
@@ -141,7 +140,7 @@ object CompareQueries extends QueryModule {
       s"""WITH RECURSIVE ${MarketData.barsSql},
          ${Indicators.twiggsSql},
          ${EventGrammar.grammarSql},
-         ${Signals.sql(Mode, Confirm)},
+         ${Signals.sql(Default.mode, Default.confirmBars)},
          runs AS (${branch("a", 10)} UNION ALL ${branch("b", 5)}),
          mrows AS (
            SELECT 'avg_hold_bars' AS metric,
@@ -167,16 +166,21 @@ object CompareQueries extends QueryModule {
                 round(run_b - run_a, 9) AS delta_b_minus_a
          FROM mrows ORDER BY metric"""
     }) { (s, dir) =>
-      val sig = Stage.slimSignals(s, dir)
-      def run(tag: String, hold: Int) =
-        Metrics.summary(Engine.simulate(sig,
-          Engine.Config(hold, 5.0)).toDF(), Seq.empty)
-          .select(col("n_trades").cast("double").as(s"n_trades_$tag"),
-            col("win_rate").as(s"win_rate_$tag"),
-            col("expectancy").as(s"expectancy_$tag"),
-            col("profit_factor").as(s"profit_factor_$tag"),
-            col("avg_hold_bars").as(s"avg_hold_bars_$tag"))
-      run("a", 10).crossJoin(run("b", 5)).selectExpr(
+      // the two runs are two cells of one simulation over the default
+      // signal frame
+      val cells = Seq("a" -> Default, "b" -> Default.copy(holdBars = 5))
+      val runs = Metrics.perCell(
+        s.createDataFrame(cells.map(c => (c._1, c._1))).toDF("cell", "run"),
+        Metrics.summary(
+          Grid.trades(cells)((_, _) => Stage.slimSignals(s, dir)),
+          Seq("cell")))
+      val wide = for {
+        c <- Seq("n_trades", "win_rate", "expectancy", "profit_factor",
+          "avg_hold_bars")
+        tag <- Seq("a", "b")
+      } yield max(when(col("run") === tag, col(c).cast("double")))
+        .as(s"${c}_$tag")
+      runs.agg(wide.head, wide.tail: _*).selectExpr(
           """stack(5,
              'avg_hold_bars', avg_hold_bars_a, avg_hold_bars_b,
              'expectancy', expectancy_a, expectancy_b,

@@ -21,17 +21,17 @@ import graft.ops.Cols
   * in-engine over the deterministic synthetic policy frame that
   * q_policy_overlay already oracles, so the whole report is
   * DuckDB-checkable. The optional FLOW run is covered by the grid
-  * itself (its combos span both signal modes). Per-split robustness_v2
-  * runs the full 8-combo grid inside every (split, run) cell — 64
-  * quarter-window sims — sharing ONE signal frame per (gate, mode,
-  * confirm) variant (8 frames total, cached; the sims are concurrent
-  * and the ranking chain scores all cells in one partitioned pass).
+  * itself (its combos span both signal modes). Each run's grid is ONE
+  * keyed simulation over the 4 cached signal variants of its gate; the
+  * per-split robustness_v2 runs the full 8-combo grid inside every
+  * (split, run) cell — 64 quarter-window sims — as ONE more keyed
+  * simulation, and the ranking chain scores all cells in one
+  * partitioned pass.
   */
 object HybridQueries extends QueryModule {
 
   private val Keys = Seq("ticker", "bar_ts", "bar_id")
-  private val DefCombo = Grid.Combo("state_entry", 2, 10, 5.0)
-  private val DefCfg = Engine.Config(DefCombo.holdBars, DefCombo.feeBps)
+  private val Default = Grid.Default
 
   case class Run(label: String, mode: Option[String]) {
     def key: String = mode.getOrElse("baseline")
@@ -72,55 +72,27 @@ object HybridQueries extends QueryModule {
       .withColumn("entry_signal", col("entry_signal") && gateExpr(mode))
       .drop("overlay_covered", "policy_allowed")
 
-  /** One run's scored combo grid (8 rows, v1/v2 robustness included).
-    * The baseline IS comboScored (same sims, same scoring); an overlay
-    * run batches its 8 gated sims into ONE keyed simulation over the 4
-    * cached gated signal variants (hold/fee are per-row config, so the
-    * grid needs one shuffle, not 8 jobs) and ONE grouped prefix scan
-    * for the per-combo drawdowns. */
+  /** One gate's scored combo grid (8 rows, v1/v2 robustness included;
+    * `None` is the ungated baseline every grid consumer shares): per-cell
+    * trade stats and drawdowns over the gate's keyed grid trades. */
   private[queries] def runScored(s: SparkSession, dir: String,
-      run: Run): DataFrame = run.mode match {
-    case None => BacktestQueries2.comboScored(s, dir)
-    case Some(m) => Stage.cached(s, dir, s"hyb_scored_${run.key}") {
-      // the 4 gated signal stages build concurrently, as in wfMetrics
-      val frames = graft.ops.Pools.awaitAll(SigVariants.map {
-        case (sm, cb) => () =>
-          keyedFrame(gatedSig(s, dir, Some(m), sm, cb), sm, cb,
-            cellPrefix = Nil)
-      })
-      val trades = Engine.simulateKeyed(frames.reduce(_.unionByName(_)))
-        .toDF()
-      import s.implicits._
-      val cells = BacktestQueries2.GridCombos.zipWithIndex
-        .map { case (c, ci) => (ci.toString, ci,
-          BacktestQueries2.comboId(c), c.mode, c.confirmBars,
-          c.holdBars, c.feeBps) }
-        .toDF("cell", "combo_idx", "combo_id", "mode", "confirm_bars",
-          "hold_bars", "fee_bps")
-      BacktestQueries2.scoreCombos(
-        BacktestQueries2.comboMetricsRowsKeyed(trades, cells))
+      gate: Option[String]): DataFrame =
+    Stage.cached(s, dir, s"combo_scored_${gateKey(gate)}") {
+      BacktestQueries2.scoreCombos(BacktestQueries2.comboMetrics(
+        gridTrades(s, dir, gate), BacktestQueries2.gridCells(s)))
     }
-  }
 
-  /** Tag a signal frame with per-combo cell/config columns: each of the
-    * variant's combos (same signal chain, different hold/fee) becomes
-    * one cell via a 2-element explode. `cellPrefix`: already-computed
-    * leading cell-id columns (e.g. hybrid flag, split idx). */
-  private def keyedFrame(sig: DataFrame, m: String, cb: Int,
-      cellPrefix: Seq[Column]): DataFrame = {
-    val combos = BacktestQueries2.GridCombos.zipWithIndex
-      .filter { case (c, _) => c.mode == m && c.confirmBars == cb }
-    sig.withColumn("__c", explode(array(combos.map { case (c, ci) =>
-        struct(lit(ci).as("ci"), lit(c.holdBars).as("hb"),
-          lit(c.feeBps).as("fb")) }: _*)))
-      .select(
-        concat_ws("|", cellPrefix :+ col("__c.ci"): _*).as("cell"),
-        col("__c.hb").as("hold_bars"), col("__c.fb").as("fee_bps"),
-        col("ticker"), col("bar_ts"), col("bar_id"), col("open"),
-        col("high"), col("low"), col("close"), col("flow_state_code"),
-        col("entry_signal"), col("signal_side"))
-  }
-
+  /** One gate's 8 grid combos as ONE keyed simulation (cell = combo
+    * index) over the gate's 4 cached signal variants, which build
+    * concurrently first. */
+  private[queries] def gridTrades(s: SparkSession, dir: String,
+      gate: Option[String]): DataFrame =
+    Stage.cached(s, dir, s"grid_trades_${gateKey(gate)}") {
+      graft.ops.Pools.awaitAll(SigVariants.map { case (m, cb) =>
+        () => { gatedSig(s, dir, gate, m, cb); () } })
+      Grid.trades(Grid.cells(BacktestQueries2.GridCombos))(
+        gatedSig(s, dir, gate, _, _))
+    }
 
   /** Min-max normalization with the reference's exact null semantics
     * (_normalize_metric): no finite values → 0.5, null → 0.0,
@@ -158,7 +130,13 @@ object HybridQueries extends QueryModule {
     BacktestQueries2.GridCombos.map(c => (c.mode, c.confirmBars)).distinct
   private def variantIdx(c: Grid.Combo): Int =
     SigVariants.indexOf((c.mode, c.confirmBars))
-  private[queries] val DefIdx = BacktestQueries2.GridCombos.indexOf(DefCombo)
+  private[queries] val DefIdx = BacktestQueries2.GridCombos.indexOf(Default)
+
+  private def gateKey(gate: Option[String]): String = gate match {
+    case None => "base"
+    case Some("block_veto") => "veto"
+    case Some(_) => "allow"
+  }
 
   /** Cached slim signal frame for one (gate, variant) — the input the
     * grid and walk-forward sims of that variant filter from. The
@@ -167,19 +145,12 @@ object HybridQueries extends QueryModule {
     * duplicate. */
   private def gatedSig(s: SparkSession, dir: String, gate: Option[String],
       mode: String, cb: Int): DataFrame =
-    if (gate.isEmpty && mode == DefCombo.mode && cb == DefCombo.confirmBars)
+    if (gate.isEmpty && mode == Default.mode && cb == Default.confirmBars)
       Stage.slimSignals(s, dir)
-    else Stage.cached(s, dir, {
-      val g = gate match {
-        case None => "base"
-        case Some("block_veto") => "veto"
-        case Some(_) => "allow"
-      }
-      s"hyb_wf_sig_${g}_${mode}_$cb"
-    }) {
+    else Stage.cached(s, dir, s"hyb_wf_sig_${gateKey(gate)}_${mode}_$cb") {
       val sig = gate match {
         case Some(g) => gatedSignals(s, dir, g,
-          Grid.Combo(mode, cb, DefCombo.holdBars, DefCombo.feeBps))
+          Grid.Combo(mode, cb, Default.holdBars, Default.feeBps))
         case None =>
           Signals.generate(BacktestQueries2.gramSlim(s, dir), mode, cb)
       }
@@ -188,49 +159,43 @@ object HybridQueries extends QueryModule {
     }
 
   /** 64-row per-(split, run) combo metric frame: 8 combos × 4 splits ×
-    * {baseline, block_veto}. The splits are disjoint quarters of
-    * (minTs, maxTs], so each (gate, variant) signal frame is tagged
-    * with its split index and exploded over the variant's two hold
-    * configs — the 64 quarter-window sims then run as ONE keyed
-    * simulation (one shuffle) and the 64 drawdown curves as ONE
-    * grouped prefix scan, instead of 64 jobs + 128 eager scan jobs. */
+    * {baseline, block_veto}. Each (gate, variant) signal frame is tagged
+    * with its split index and with the variant's combo cells, so the 64
+    * quarter-window sims run as ONE keyed simulation (cell =
+    * hybrid|split|combo) and the 64 drawdown curves as ONE grouped
+    * prefix scan. */
   private[queries] def wfMetrics(s: SparkSession, dir: String): DataFrame =
     Stage.cached(s, dir, "hyb_wf_metrics") {
       graft.ops.Pools.awaitAll(for {
         g <- Seq(None, Some("block_veto")); (m, cb) <- SigVariants
-      } yield () => { gatedSig(s, dir, g, m, cb).count(); () })
+      } yield () => { gatedSig(s, dir, g, m, cb); () })
       val bounds = BacktestQueries2.gramSlim(s, dir)
         .agg(min("bar_ts"), max("bar_ts")).head
       val ss = WalkForward.splits(bounds.getLong(0), bounds.getLong(1),
         graft.Settings.walkForward.nSplits)
+      val combos = Grid.cells(BacktestQueries2.GridCombos)
       val frames = for {
-        hybrid <- Seq(false, true); (m, cb) <- SigVariants
+        hybrid <- Seq(0, 1); (m, cb) <- SigVariants
       } yield {
-        val gate = if (hybrid) Some("block_veto") else None
-        val splitIdx = ss.foldLeft(lit(null).cast("int")) { (acc, sp) =>
-          when(col("bar_ts") > sp.testStartTs
-            && col("bar_ts") <= sp.testEndTs, lit(sp.idx)).otherwise(acc)
-        }
-        keyedFrame(
-          gatedSig(s, dir, gate, m, cb)
-            .withColumn("__split", splitIdx)
-            .filter(col("__split").isNotNull),
-          m, cb,
-          cellPrefix = Seq(lit(if (hybrid) 1 else 0), col("__split")))
+        val gate = if (hybrid == 1) Some("block_veto") else None
+        Grid.tagCells(
+            WalkForward.tagSplits(gatedSig(s, dir, gate, m, cb), ss),
+            combos.filter(c => c._2.mode == m && c._2.confirmBars == cb))
+          .withColumn("cell",
+            concat_ws("|", lit(hybrid), col("split_idx"), col("cell")))
       }
-      val trades = Engine.simulateKeyed(frames.reduce(_.unionByName(_)))
-        .toDF()
+      val cells = for {
+        hybrid <- Seq(0, 1); sp <- ss; (ci, c) <- combos
+      } yield (s"$hybrid|${sp.idx}|$ci", ci.toInt, c, sp.idx, hybrid == 1)
+      val trades = Engine.simulate(frames.reduce(_.unionByName(_)),
+        cells.map(c => c._1 -> c._3.config).toMap)
       import s.implicits._
-      val cells = (for {
-        hybrid <- Seq(false, true)
-        sp <- ss
-        (c, ci) <- BacktestQueries2.GridCombos.zipWithIndex
-      } yield (s"${if (hybrid) 1 else 0}|${sp.idx}|$ci", ci,
-        BacktestQueries2.comboId(c), c.mode, c.confirmBars, c.holdBars,
-        c.feeBps, sp.idx, hybrid))
+      val meta = cells.map { case (cell, ci, c, sp, h) => (cell, ci,
+          BacktestQueries2.comboId(c), c.mode, c.confirmBars, c.holdBars,
+          c.feeBps, sp, h) }
         .toDF("cell", "combo_idx", "combo_id", "mode", "confirm_bars",
           "hold_bars", "fee_bps", "split_idx", "is_hybrid")
-      BacktestQueries2.comboMetricsRowsKeyed(trades, cells).drop("cell")
+      BacktestQueries2.comboMetrics(trades, meta)
     }
 
   /** Run-level overlay diagnostics over the default combo's signal
@@ -238,7 +203,7 @@ object HybridQueries extends QueryModule {
   private def ovlStats(s: SparkSession, dir: String): DataFrame =
     Stage.cached(s, dir, "hyb_ovl_stats") {
       val sig = Signals.generate(BacktestQueries2.gramSlim(s, dir),
-        DefCombo.mode, DefCombo.confirmBars)
+        Default.mode, Default.confirmBars)
       val withPol = Overlay.applyPolicy(
         sig.select((Keys :+ "entry_signal").map(col): _*),
         pol0(s, dir), Keys)
@@ -258,7 +223,7 @@ object HybridQueries extends QueryModule {
     * and recommendation class. */
   private[queries] def runTable(s: SparkSession, dir: String): DataFrame = {
     val rows = Runs.map { run =>
-      val ccs = comboCandidate(runScored(s, dir, run))
+      val ccs = comboCandidate(runScored(s, dir, run.mode))
       // best combo via a parallel TakeOrdered (orderBy+limit(1)) over
       // the same total order — the retired row_number==1 filter ran a
       // single-task unpartitioned window; the surviving row is
@@ -435,7 +400,7 @@ object HybridQueries extends QueryModule {
       $csCtes,
       $ccsCtes,
       ovl AS (
-        (WITH RECURSIVE ${Signals.sql(DefCombo.mode, DefCombo.confirmBars)}
+        (WITH RECURSIVE ${Signals.sql(Default.mode, Default.confirmBars)}
          SELECT
            round(CAST(count(CASE WHEN p.policy_allowed IS NOT NULL
                THEN 1 END) AS DOUBLE) / count(*), 9) AS match_rate,
@@ -645,7 +610,7 @@ object HybridQueries extends QueryModule {
               AND NOT ${gateSql("block_veto")} THEN 1 END) AS DOUBLE)
             / count(CASE WHEN s.entry_signal THEN 1 END)
           ELSE 0.0 END, 9) AS veto_share
-        FROM sigv_${variantIdx(DefCombo)} s LEFT JOIN pol p
+        FROM sigv_${variantIdx(Default)} s LEFT JOIN pol p
           ON s.ticker = p.ticker AND s.bar_ts = p.bar_ts
             AND s.bar_id = p.bar_id)
       SELECT 'hmm' AS source, 'baseline_vs_hybrid' AS comparison,

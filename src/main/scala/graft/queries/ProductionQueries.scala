@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.backtest.{Engine, Grid, Signals}
+import graft.backtest.{Engine, Grid, Metrics, Signals}
 import graft.etl.{EventGrammar, Indicators, MarketData}
 
 /** Production composition layer (ref
@@ -74,7 +74,7 @@ object ProductionQueries extends QueryModule {
   private[queries] def candidatePack(s: SparkSession,
       dir: String): DataFrame =
     Stage.cached(s, dir, "candidate_pack") {
-      val cs = BacktestQueries2.comboScored(s, dir)
+      val cs = HybridQueries.runScored(s, dir, None)
       val elig0 = cs.filter(col("trade_count") > 0)
       // global any-combo-meets-MinTrades flag via a broadcast one-row
       // aggregate instead of an unpartitioned (single-task) window max
@@ -107,10 +107,12 @@ object ProductionQueries extends QueryModule {
 
   /** Observed (fresh-window) metrics for the selected combos only: the
     * pack is a ≤2-row frame, so collecting its combo ids to prune the
-    * driver's sim loop is a bounded action — at cluster scale this is
-    * what keeps the rerun at 2 sims instead of the full grid. */
+    * sweep is a bounded action — at cluster scale this keeps the rerun
+    * at 2 cells instead of the full grid, simulated as ONE keyed
+    * simulation. An empty pack has no cells and returns no rows. */
   private def observedMetrics(s: SparkSession, dir: String,
       selected: Set[String]): DataFrame = {
+    import s.implicits._
     val gram = BacktestQueries2.gramSlim(s, dir)
     val bounds = gram.agg(min("bar_ts"), max("bar_ts")).head
     val lo = bounds.getLong(0)
@@ -118,52 +120,26 @@ object ProductionQueries extends QueryModule {
     // toLong truncation and DuckDB's round-to-nearest BIGINT cast would
     // place an odd-span boundary bar on different sides
     val cut = lo + math.floor(0.5 * (bounds.getLong(1) - lo)).toLong
-    val combos = BacktestQueries2.GridCombos
-      .filter(c => selected(BacktestQueries2.comboId(c)))
-    // the per-combo fresh-window sims are independent; cache them as
-    // stages and materialize concurrently so the rerun's wall time is
-    // one sim, not the sum
-    val trades = combos.map { c =>
-      c -> Stage.cached(s, dir,
-        s"rerun_trades_${BacktestQueries2.comboId(c)}") {
-        val sig = Signals.generate(gram, c.mode, c.confirmBars)
-          .filter(col("bar_ts") > cut)
-        Engine.simulate(sig, Engine.Config(c.holdBars, c.feeBps)).toDF()
-      }
-    }
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec = graft.ops.Pools.jobs
-      Await.result(
-        Future.traverse(trades)(t => Future { t._2.count(); () }),
-        Duration.Inf)
-    }
-    trades
-      .map { case (c, tr) =>
-        tr.agg(
-            count(lit(1)).as("observed_trades"),
-            round(avg("net_ret"), 9).as("observed_expectancy"),
-            round(graft.ops.Cols.safeDiv(
-              sum(when(col("net_ret") > 0, col("net_ret"))),
-              abs(sum(when(!(col("net_ret") > 0), col("net_ret"))))), 6)
-              .as("observed_profit_factor"),
-            round(graft.ops.Cols.safeDiv(stddev_pop(col("net_ret")),
-              abs(avg(col("net_ret")))), 6).as("observed_ret_cv"))
-          .withColumn("combo_id", lit(BacktestQueries2.comboId(c)))
-      }.reduceOption(_.unionByName(_)).getOrElse {
-        // empty pack (every combo below even the relaxed floor): the
-        // oracle returns zero rows, and NightlyOps' empty-pack handling
-        // depends on the rerun query returning empty, not throwing
-        import org.apache.spark.sql.types._
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("observed_trades", LongType),
-            StructField("observed_expectancy", DoubleType),
-            StructField("observed_profit_factor", DoubleType),
-            StructField("observed_ret_cv", DoubleType),
-            StructField("combo_id", StringType))))
-      }
+    val cells = Grid.cells(BacktestQueries2.GridCombos)
+      .filter(c => selected(BacktestQueries2.comboId(c._2)))
+    val trades =
+      if (cells.isEmpty)
+        s.emptyDataset[Engine.Trade].withColumn("cell", lit(""))
+      else Grid.trades(cells)((m, cb) =>
+        Signals.generate(gram, m, cb).filter(col("bar_ts") > cut))
+    val byCell = trades.groupBy("cell").agg(
+      count(lit(1)).as("trade_count"),
+      round(avg("net_ret"), 9).as("observed_expectancy"),
+      round(graft.ops.Cols.safeDiv(
+        sum(when(col("net_ret") > 0, col("net_ret"))),
+        abs(sum(when(!(col("net_ret") > 0), col("net_ret"))))), 6)
+        .as("observed_profit_factor"),
+      round(graft.ops.Cols.safeDiv(stddev_pop(col("net_ret")),
+        abs(avg(col("net_ret")))), 6).as("observed_ret_cv"))
+    Metrics.perCell(
+        cells.map(c => (c._1, BacktestQueries2.comboId(c._2)))
+          .toDF("cell", "combo_id"), byCell)
+      .withColumnRenamed("trade_count", "observed_trades")
   }
 
   def all: Seq[Q] = Seq(

@@ -24,15 +24,13 @@ import graft.ops.Cols
   */
 object SanityQueries extends QueryModule {
 
-  private val Mode = "state_entry"
-  private val Confirm = 2
-  private val Cfg = Engine.Config(holdBars = 10, feeBps = 5.0)
+  private val Default = graft.backtest.Grid.Default
 
   private def chain: String =
     s"""${MarketData.barsSql},
       ${Indicators.twiggsSql},
       ${EventGrammar.grammarSql},
-      ${Signals.sql(Mode, Confirm)}"""
+      ${Signals.sql(Default.mode, Default.confirmBars)}"""
 
   private def finite(c: Column): Column =
     !isnan(c) && abs(c) =!= Double.PositiveInfinity
@@ -155,7 +153,7 @@ object SanityQueries extends QueryModule {
     // PASS/FAIL verdict. One pass over the cached default-combo trades.
     Q("q_bt_sanity", Some(s"""
       WITH RECURSIVE $chain,
-      ${Engine.tradesSql(Cfg)},
+      ${Engine.tradesSql(Default.config)},
       b AS (
         SELECT CAST(count(*) AS BIGINT) AS trade_count,
                count(CASE WHEN hold_bars < 0 THEN 1 END)
@@ -179,8 +177,7 @@ object SanityQueries extends QueryModule {
                     AND n_duplicate_position_id = 0 AND n_bad_price = 0
                THEN 'PASS' ELSE 'FAIL' END AS status
       FROM b""")) { (s, dir) =>
-      val tr = BacktestQueries2.comboTrades(s, dir,
-        graft.backtest.Grid.Combo(Mode, Confirm, Cfg.holdBars, Cfg.feeBps))
+      val tr = BacktestQueries2.defaultTrades(s, dir)
       val b = tr.agg(
         count(lit(1)).as("trade_count"),
         Cols.countIf(col("hold_bars") < 0).as("n_negative_hold_bars"),
@@ -228,7 +225,7 @@ object SanityQueries extends QueryModule {
                     AND n_invalid_v2_nonzero_trades = 0
                THEN 'PASS' ELSE 'FAIL' END AS status
       FROM g""")) { (s, dir) =>
-      val cs = BacktestQueries2.comboScored(s, dir)
+      val cs = HybridQueries.runScored(s, dir, None)
       val nullCells = MetricCols
         .map(c => Cols.countIf(col(c).isNull))
         .reduce(_ + _)

@@ -112,13 +112,14 @@ object Stage {
         .select("ticker", "bar_ts", "bar_id", "fwd_ret_10")
     }
 
-  /** Slim signal frame for the default combo (state_entry, confirm 2),
-    * built over the cached slim grammar stage — shared by walk-forward
-    * and the run-compare family. */
+  /** Slim signal frame for the default combo (Grid.Default), built over
+    * the cached slim grammar stage — shared by walk-forward, the
+    * run-compare family and the default variant of the grid sweeps. */
   def slimSignals(spark: SparkSession, dir: String): DataFrame =
     cached(spark, dir, "signals_slim") {
+      val d = graft.backtest.Grid.Default
       graft.backtest.Signals.generate(
-          BacktestQueries2.gramSlim(spark, dir), "state_entry", 2)
+          BacktestQueries2.gramSlim(spark, dir), d.mode, d.confirmBars)
         .select("ticker", "bar_ts", "bar_id", "open", "high", "low",
           "close", "flow_state_code", "entry_signal", "signal_side")
     }

@@ -70,10 +70,12 @@ object Warmup {
         (() => TextQueries.bpeIncrVocab(spark, dir).count()),
       "winnowFps" -> (() => DedupStages.winnowFps(spark, dir).count()),
       "tradeEdges" -> (() => Relational.tradeEdges(spark, dir).count())) ++
-      BacktestQueries2.GridCombos.map(c =>
-        s"comboTrades:$c" ->
-          (() => BacktestQueries2.comboTrades(spark, dir, c).count())) ++
+      HybridQueries.Runs.map(r =>
+        s"gridTrades:${r.key}" ->
+          (() => HybridQueries.gridTrades(spark, dir, r.mode).count())) ++
       Seq(
+        "defaultTrades" ->
+          (() => BacktestQueries2.defaultTrades(spark, dir).count()),
         "slimSignals" -> (() => Stage.slimSignals(spark, dir).count()),
         "bootStats" -> (() => ResearchQueries.bootStats(spark, dir).count()),
         "bootPair" -> (() => ResearchQueries.bootPair(spark, dir).count()),
@@ -102,13 +104,11 @@ object Warmup {
         "lloydTop5" -> (() => AnnStages.lloydTop5(spark, dir).count()),
         "lloydAssign" -> (() => MlQueries.lloydAssign(spark, dir).count()),
         "hdbscanCoreDf" -> (() => MlQueries.hdbscanCoreDf(spark, dir).count()),
-        "comboScored" ->
-          (() => BacktestQueries2.comboScored(spark, dir).count()),
         "calGrid" -> (() => CalibrationQueries.calGrid(spark, dir).count()),
         "wfMetrics" -> (() => HybridQueries.wfMetrics(spark, dir).count())) ++
-      HybridQueries.Runs.filter(_.mode.isDefined).map(r =>
-        s"runScored:$r" ->
-          (() => HybridQueries.runScored(spark, dir, r).count()))
+      HybridQueries.Runs.map(r =>
+        s"runScored:${r.key}" ->
+          (() => HybridQueries.runScored(spark, dir, r.mode).count()))
 
     // Each build is itself a multi-job Spark program that can fill all
     // task slots; running many at once mostly contends for the same

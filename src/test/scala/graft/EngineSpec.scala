@@ -2,6 +2,7 @@ package graft
 
 import graft.backtest.Engine
 import graft.backtest.Engine.{Config, SimBar}
+import org.apache.spark.sql.functions.{col, struct}
 
 /** Trade simulator kernel unit tests — pure function, no Spark
   * (ref contract: src/mf_etl/backtest/engine.py:106-292, see Engine
@@ -114,44 +115,64 @@ class EngineSpec extends SparkSpec {
     assert(got == Engine.simulateTicker("T", bars, cfg))
   }
 
-  test("simulateKeyed matches per-cell simulate on a randomized sweep") {
+  test("keyed simulate equals the pure kernel on dirty input") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.lit
-    // 3 cells × distinct (hold, fee) configs over the SAME 4-ticker
-    // random bar series — the batched path must reproduce each cell's
-    // one-config run exactly, including fee arithmetic and exit order
+    // 3 cells × distinct (hold, fee) configs over the same random 4-ticker
+    // series, dirtied: NaN open/high/low bars, null entry_signal and
+    // null signal_side, pairs of bars sharing bar_ts (bar_id breaks the
+    // tie) fed in shuffled order; plus a single-bar ticker and a cell
+    // whose rows never signal. Each (cell, ticker) output must equal
+    // simulateTicker on that cell's sorted, null-coalesced bars.
     val rnd = new scala.util.Random(41)
-    val bars = for {
+    def nanOr(x: Double) = if (rnd.nextInt(25) == 0) Double.NaN else x
+    val series = for {
       tk <- Seq("A", "B", "C", "D"); i <- 1 to 120
     } yield {
       val open = 100 + rnd.nextDouble() * 20
       val close = open + rnd.nextDouble() * 4 - 2
-      SimBar(tk, i.toLong, i.toLong, open,
-        math.max(open, close) + rnd.nextDouble(),
-        math.min(open, close) - rnd.nextDouble(), close,
-        rnd.nextInt(5), rnd.nextInt(8) == 0, 1 - 2 * rnd.nextInt(2))
+      val signal = if (rnd.nextInt(9) == 0) None
+        else Some(rnd.nextInt(6) == 0)
+      val side = if (rnd.nextInt(9) == 0) None
+        else Some(1 - 2 * rnd.nextInt(2))
+      SimRow("", tk, (i / 2).toLong, i.toLong, nanOr(open),
+        nanOr(math.max(open, close) + rnd.nextDouble()),
+        nanOr(math.min(open, close) - rnd.nextDouble()), close,
+        rnd.nextInt(5), signal, side)
     }
-    val base = bars.toDF().withColumnRenamed("state_code",
-      "flow_state_code")
-    val cfgs = Seq("c0" -> Config(2, 5.0), "c1" -> Config(4, 10.0),
-      "c2" -> Config(7, 0.0))
-    val keyed = cfgs.map { case (cell, c) =>
-      base.withColumn("cell", lit(cell))
-        .withColumn("hold_bars", lit(c.holdBars))
-        .withColumn("fee_bps", lit(c.feeBps))
-    }.reduce(_.unionByName(_))
-    val got = Engine.simulateKeyed(keyed).collect()
-      .groupBy(_.cell).view
-      .mapValues(_.map(t => (t.ticker, t.pos_seq, t.side, t.entry_rn,
-        t.exit_rn, t.entry_price, t.exit_price, t.exit_reason,
-        t.gross_ret, t.net_ret, t.mfe, t.mae)).toSet).toMap
-    cfgs.foreach { case (cell, c) =>
-      val ref = Engine.simulate(base, c).collect()
-        .map(t => (t.ticker, t.pos_seq, t.side, t.entry_rn, t.exit_rn,
-          t.entry_price, t.exit_price, t.exit_reason, t.gross_ret,
-          t.net_ret, t.mfe, t.mae)).toSet
-      assert(got(cell) == ref, s"cell $cell diverged")
+    val single = SimRow("", "E", 1L, 1L, 100.0, 101.0, 99.0, 100.5, 2,
+      Some(true), Some(1))
+    val cfgs = Map("c0" -> Config(2, 5.0), "c1" -> Config(4, 10.0),
+      "c2" -> Config(7, 0.0), "quiet" -> Config(3, 5.0))
+    val rows = rnd.shuffle(
+      Seq("c0", "c1", "c2").flatMap(c =>
+        (series :+ single).map(_.copy(cell = c))) ++
+      series.map(_.copy(cell = "quiet", entry_signal = Some(false))))
+    val got = Engine.simulate(rows.toDF(), cfgs)
+    def bits(t: Engine.Trade) = t.productIterator.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case x => x
+    }.toList
+    val want = rows.groupBy(r => (r.cell, r.ticker)).toSeq.flatMap {
+      case ((cell, tk), rs) =>
+        Engine.simulateTicker(tk, rs.sortBy(r => (r.bar_ts, r.bar_id))
+          .map(r => SimBar(r.ticker, r.bar_ts, r.bar_id, r.open, r.high,
+            r.low, r.close, r.flow_state_code,
+            r.entry_signal.getOrElse(false), r.signal_side.getOrElse(0)))
+          .toIndexedSeq, cfgs(cell)).map(t => (cell, bits(t)))
     }
+    val gotRows = got.select(col("cell"),
+        struct(got.columns.filter(_ != "cell").map(col): _*).as("t"))
+      .as[(String, Engine.Trade)].collect().toSeq
+      .map { case (cell, t) => (cell, bits(t)) }
+    assert(want.nonEmpty && want.exists(_._1 == "c0"))
+    assert(!want.exists(_._1 == "quiet"))
+    assert(gotRows.sortBy(_.toString) == want.sortBy(_.toString))
   }
 }
+
+/** A signal row of a keyed simulation, with nullable signal columns. */
+case class SimRow(cell: String, ticker: String, bar_ts: Long, bar_id: Long,
+  open: Double, high: Double, low: Double, close: Double,
+  flow_state_code: Int, entry_signal: Option[Boolean],
+  signal_side: Option[Int])

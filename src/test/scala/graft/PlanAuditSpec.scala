@@ -657,19 +657,19 @@ class PlanAuditSpec extends SparkSpec {
     assert(df.count() == 2)
   }
 
-  test("simulateKeyed: whole sweep is ONE shuffle on (cell, ticker)") {
+  test("keyed simulate: whole sweep is ONE shuffle on (cell, ticker)") {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions.lit
-    val bars = (1 to 20).map(i => graft.backtest.Engine.SimBar(
+    import graft.backtest.Engine
+    val bars = (1 to 20).map(i => Engine.SimBar(
       "T", i.toLong, i.toLong, 100.0, 101.0, 99.0, 100.5, 2,
       i % 5 == 0, 1)).toDF()
       .withColumnRenamed("state_code", "flow_state_code")
-    val keyed = Seq(("a", 2, 5.0), ("b", 4, 0.0)).map { case (c, h, f) =>
-      bars.withColumn("cell", lit(c)).withColumn("hold_bars", lit(h))
-        .withColumn("fee_bps", lit(f))
-    }.reduce(_.unionByName(_))
-    val ds = graft.backtest.Engine.simulateKeyed(keyed)
+    val cfgs = Map("a" -> Engine.Config(2, 5.0), "b" -> Engine.Config(4, 0.0))
+    val keyed = cfgs.keys.toSeq.map(c => bars.withColumn("cell", lit(c)))
+      .reduce(_.unionByName(_))
+    val ds = Engine.simulate(keyed, cfgs)
     assert(ds.count() > 0)
     // N cells must cost exactly one exchange — per-cell jobs were the
     // pre-batching shape this audit exists to prevent regressing to
