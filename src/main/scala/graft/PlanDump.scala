@@ -26,14 +26,19 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
         outDir.resolve(s"${n}_$tag.txt"), plan)
-      val executed = df.queryExecution.executedPlan.toString
-      val exchanges =
-        "Exchange (?!SinglePartition)".r.findAllIn(executed).length
-      val windows = "Window \\[".r.findAllIn(executed).length
+      val (exchanges, windows) = counts(df)
       println(s"[plandump] $n -> ${n}_$tag.txt (${plan.length} chars, " +
         s"$exchanges non-single-partition exchanges, $windows windows)")
     }
     graft.queries.Stage.clear()
     spark.stop()
+  }
+
+  /** Non-single-partition Exchange and Window operator counts of a
+    * frame's physical plan. */
+  def counts(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val executed = df.queryExecution.executedPlan.toString
+    ("Exchange (?!SinglePartition)".r.findAllIn(executed).length,
+      "Window \\[".r.findAllIn(executed).length)
   }
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.ops.Ckpt._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -175,23 +174,18 @@ object AnnQueries extends QueryModule {
       $union
       ORDER BY dim, qid"""
     }) { (s, dir) =>
+      val spark = s
+      import spark.implicits._
       val emb = t(s, dir, "embeddings")
-      val truth = Similarity.cosineTopK(emb, col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid"))
-      MrlDims.map { d =>
-        val trunc = emb.withColumn("embedding",
-          slice(col("embedding"), 1, d))
-        val top = Similarity.cosineTopK(trunc, col("vec_id") < 8, AnnK)
-          .select(col("qid"), col("vid")).withColumn("hit", lit(1L))
-        truth.join(top, Seq("qid", "vid"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"),
-            count(lit(1)).as("n_true"))
-          .select(lit(d).as("dim"), col("qid"), col("n_hits"),
-            col("n_true"),
-            round(col("n_hits").cast("double") / col("n_true"), 9)
-              .as("recall"))
-      }.reduce(_ unionByName _).orderBy("dim", "qid")
+      val served = tagArms("dim", MrlDims.map { d =>
+        d -> Similarity.cosineTopK(emb.withColumn("embedding",
+          slice(col("embedding"), 1, d)), col("vec_id") < 8, AnnK)
+      })
+      recallHits(cosTruth(s, dir), served, MrlDims.toDF("dim"))
+        .select(col("dim"), col("qid"), col("n_hits"), col("n_true"),
+          round(col("n_hits").cast("double") / col("n_true"), 9)
+            .as("recall"))
+        .orderBy("dim", "qid")
     },
 
 
@@ -269,31 +263,21 @@ object AnnQueries extends QueryModule {
       $union
       ORDER BY method, qid"""
     }) { (s, dir) =>
-      val truth = Similarity.cosineTopK(t(s, dir, "embeddings"),
-          col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid"))
-      def armOut(m: String): DataFrame = {
-        val served = dimredArm(s, dir, m)
-        val hits = served.select(col("qid"), col("vid"))
-          .withColumn("hit", lit(1L))
-        val nc = served.groupBy("qid")
-          .agg(first(col("n_cands")).as("n_cands"))
-        truth.join(hits, Seq("qid", "vid"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"),
-            count(lit(1)).as("n_true"))
-          .join(nc, Seq("qid"))
-          .select(lit(m).as("method"), col("qid"), col("n_hits"),
-            col("n_true"),
-            round(col("n_hits").cast("double") / col("n_true"), 9)
-              .as("recall"), col("n_cands"))
-      }
+      val spark = s
+      import spark.implicits._
+      val methods = Seq("mrl", "pca", "rp")
       // the three arms are independent stage builds (guide §2.6 —
       // overlap independent jobs): build them concurrently so one
       // arm's stragglers backfill with the next arm's tasks
-      graft.ops.Pools.awaitAll(Seq(
-          () => armOut("mrl"), () => armOut("pca"), () => armOut("rp")))
-        .reduce(_ unionByName _)
+      val served = tagArms("method", methods.zip(graft.ops.Pools.awaitAll(
+        methods.map(m => () => dimredArm(s, dir, m)))), "n_cands")
+      val nc = served.groupBy("method", "qid")
+        .agg(first(col("n_cands")).as("n_cands"))
+      recallHits(cosTruth(s, dir), served, methods.toDF("method"))
+        .join(nc, Seq("method", "qid"))
+        .select(col("method"), col("qid"), col("n_hits"), col("n_true"),
+          round(col("n_hits").cast("double") / col("n_true"), 9)
+            .as("recall"), col("n_cands"))
         .orderBy("method", "qid")
     },
 
@@ -337,14 +321,10 @@ object AnnQueries extends QueryModule {
       SELECT node, n_hits, n_true,
              round(CAST(n_hits AS DOUBLE) / n_true, 9) AS recall
       FROM ndh ORDER BY node""")) { (s, dir) =>
-      val truth = nndTruth(s, dir)
-      val g = nndGraph(s, dir).select("node", "nbr")
-        .withColumn("hit", lit(1L))
-      truth.join(g, Seq("node", "nbr"), "left")
-        .groupBy("node")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"),
-          count(lit(1)).as("n_true"))
-        .select(col("node"), col("n_hits"), col("n_true"),
+      def edges(g: DataFrame) =
+        g.select(col("node").as("qid"), col("nbr").as("vid"))
+      recallHits(edges(nndTruth(s, dir)), edges(nndGraph(s, dir)))
+        .select(col("qid").as("node"), col("n_hits"), col("n_true"),
           round(col("n_hits").cast("double") / col("n_true"), 9)
             .as("recall"))
         .orderBy("node")
@@ -402,18 +382,10 @@ object AnnQueries extends QueryModule {
       LEFT JOIN nsrv s ON s.qid = t.qid AND s.vid = t.vid
       JOIN nsall a ON a.qid = t.qid
       GROUP BY 1 ORDER BY t.qid""")) { (s, dir) =>
-      val truth = Similarity.cosineTopK(t(s, dir, "embeddings"),
-          col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid"))
       val served = nndServed(s, dir)
-      val hits = served.select(col("qid"), col("vid"))
-        .withColumn("hit", lit(1L))
       val nsc = served.groupBy("qid")
         .agg(first(col("n_scored")).as("n_scored"))
-      truth.join(hits, Seq("qid", "vid"), "left")
-        .groupBy("qid")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"),
-          count(lit(1)).as("n_true"))
+      recallHits(cosTruth(s, dir), served)
         .join(nsc, Seq("qid"))
         .select(col("qid"), col("n_hits"), col("n_true"),
           round(col("n_hits").cast("double") / col("n_true"), 9)
@@ -551,18 +523,10 @@ object AnnQueries extends QueryModule {
       LEFT JOIN hsrv s ON s.qid = t.qid AND s.vid = t.vid
       JOIN hsall a ON a.qid = t.qid
       GROUP BY 1 ORDER BY t.qid""")) { (s, dir) =>
-      val truth = Similarity.cosineTopK(t(s, dir, "embeddings"),
-          col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid"))
       val served = hnswServed(s, dir)
-      val hits = served.select(col("qid"), col("vid"))
-        .withColumn("hit", lit(1L))
       val nsc = served.groupBy("qid")
         .agg(first(col("n_scored")).as("n_scored"))
-      truth.join(hits, Seq("qid", "vid"), "left")
-        .groupBy("qid")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"),
-          count(lit(1)).as("n_true"))
+      recallHits(cosTruth(s, dir), served)
         .join(nsc, Seq("qid"))
         .select(col("qid"), col("n_hits"), col("n_true"),
           round(col("n_hits").cast("double") / col("n_true"), 9)
@@ -627,27 +591,18 @@ object AnnQueries extends QueryModule {
              round(avg(CAST(n_scored AS DOUBLE)), 9) AS avg_scored,
              CAST(sum(n_scored) AS BIGINT) AS total_scored
       FROM abarm GROUP BY 1 ORDER BY arm""")) { (s, dir) =>
-      val truth = Similarity.cosineTopK(t(s, dir, "embeddings"),
-          col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid"))
-      def arm(name: String, served: DataFrame): DataFrame = {
-        val hits = served.select(col("qid"), col("vid"))
-          .withColumn("hit", lit(1L))
-        val nsc = served.groupBy("qid")
-          .agg(first(col("n_scored")).as("n_scored"))
-        truth.join(hits, Seq("qid", "vid"), "left")
-          .groupBy("qid")
-          .agg((sum(coalesce(col("hit"), lit(0L))).cast("double")
-            / count(lit(1))).as("recall"))
-          .join(nsc, Seq("qid"))
-          .select(lit(name).as("arm"), col("qid"), col("recall"),
-            col("n_scored"))
-      }
-      arm("flat", nndServed(s, dir))
-        .unionByName(arm("hier", hnswServed(s, dir)))
+      val spark = s
+      import spark.implicits._
+      val served = tagArms("arm", Seq("flat" -> nndServed(s, dir),
+        "hier" -> hnswServed(s, dir)), "n_scored")
+      val nsc = served.groupBy("arm", "qid")
+        .agg(first(col("n_scored")).as("n_scored"))
+      recallHits(cosTruth(s, dir), served, Seq("flat", "hier").toDF("arm"))
+        .join(nsc, Seq("arm", "qid"))
         .groupBy("arm")
         .agg(count(lit(1)).as("n_queries"),
-          round(avg("recall"), 9).as("avg_recall"),
+          round(avg(col("n_hits").cast("double") / col("n_true")), 9)
+            .as("avg_recall"),
           round(avg(col("n_scored").cast("double")), 9)
             .as("avg_scored"),
           sum("n_scored").cast("long").as("total_scored"))
@@ -714,35 +669,23 @@ object AnnQueries extends QueryModule {
       FROM ($armRows)
       GROUP BY 1 ORDER BY variant"""
     }) { (s, dir) =>
-      val truth = Similarity.cosineTopK(t(s, dir, "embeddings"),
-          col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid"))
-      def arm(name: String, served: DataFrame): DataFrame = {
-        val hits = served.select(col("qid"), col("vid"))
-          .withColumn("hit", lit(1L))
-        val nsc = served.groupBy("qid")
-          .agg(first(col("n_scored")).as("n_scored"))
-        truth.join(hits, Seq("qid", "vid"), "left")
-          .groupBy("qid")
-          .agg((sum(coalesce(col("hit"), lit(0L))).cast("double")
-            / count(lit(1))).as("recall"))
-          .join(nsc, Seq("qid"))
-          .select(lit(name).as("variant"), col("qid"), col("recall"),
-            col("n_scored"))
-      }
-      // pre-touch the SHARED stages once (base graph + layers), then
-      // build the independent rung serves concurrently (guide §2.6;
-      // pre-touching avoids a racy double-build of the shared deps)
-      nndGraph(s, dir); hnswLayers(s, dir)
-      graft.ops.Pools.awaitAll(
-        (() => arm("flat", nndServed(s, dir))) +:
-          HnswFrontierRungs.map { case (ub, uh) =>
-            () => arm(s"ub${ub}_uh$uh", hnswServedAt(s, dir, ub, uh))
-          })
-        .reduce(_ unionByName _)
+      val spark = s
+      import spark.implicits._
+      val variants = ("flat", () => nndServed(s, dir)) +:
+        HnswFrontierRungs.map { case (ub, uh) =>
+          (s"ub${ub}_uh$uh", () => hnswServedAt(s, dir, ub, uh)) }
+      // build the independent rung serves concurrently (guide §2.6)
+      val served = tagArms("variant", variants.map(_._1).zip(
+        graft.ops.Pools.awaitAll(variants.map(_._2))), "n_scored")
+      val nsc = served.groupBy("variant", "qid")
+        .agg(first(col("n_scored")).as("n_scored"))
+      recallHits(cosTruth(s, dir), served,
+          variants.map(_._1).toDF("variant"))
+        .join(nsc, Seq("variant", "qid"))
         .groupBy("variant")
         .agg(count(lit(1)).as("n_queries"),
-          round(avg("recall"), 9).as("avg_recall"),
+          round(avg(col("n_hits").cast("double") / col("n_true")), 9)
+            .as("avg_recall"),
           round(avg(col("n_scored").cast("double")), 9)
             .as("avg_scored"),
           sum("n_scored").cast("long").as("total_scored"))
@@ -829,31 +772,23 @@ object AnnQueries extends QueryModule {
              round(avg(CAST(n_exact AS DOUBLE)), 9) AS avg_exact,
              CAST(sum(n_exact) AS BIGINT) AS total_exact
       FROM pqarm GROUP BY 1 ORDER BY arm""")) { (s, dir) =>
-      val truth = Similarity.cosineTopK(t(s, dir, "embeddings"),
-          col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid"))
-      def arm(name: String, served: DataFrame, hasExact: Boolean)
-          : DataFrame = {
-        val hits = served.select(col("qid"), col("vid"))
-          .withColumn("hit", lit(1L))
-        val nsc = served.groupBy("qid")
-          .agg(first(col("n_scored")).as("n_scored"),
-            (if (hasExact) first(col("n_exact"))
-             else first(col("n_scored"))).as("n_exact"))
-        truth.join(hits, Seq("qid", "vid"), "left")
-          .groupBy("qid")
-          .agg((sum(coalesce(col("hit"), lit(0L))).cast("double")
-            / count(lit(1))).as("recall"))
-          .join(nsc, Seq("qid"))
-          .select(lit(name).as("arm"), col("qid"), col("recall"),
-            col("n_scored"), col("n_exact"))
-      }
-      arm("hier_float", hnswServed(s, dir), hasExact = false)
-        .unionByName(arm("hier_pq", hnswPqServed(s, dir),
-          hasExact = true))
+      val spark = s
+      import spark.implicits._
+      // the float arm reads full floats for every scored candidate
+      val served = tagArms("arm", Seq(
+        "hier_float" ->
+          hnswServed(s, dir).withColumn("n_exact", col("n_scored")),
+        "hier_pq" -> hnswPqServed(s, dir)), "n_scored", "n_exact")
+      val nsc = served.groupBy("arm", "qid")
+        .agg(first(col("n_scored")).as("n_scored"),
+          first(col("n_exact")).as("n_exact"))
+      recallHits(cosTruth(s, dir), served,
+          Seq("hier_float", "hier_pq").toDF("arm"))
+        .join(nsc, Seq("arm", "qid"))
         .groupBy("arm")
         .agg(count(lit(1)).as("n_queries"),
-          round(avg("recall"), 9).as("avg_recall"),
+          round(avg(col("n_hits").cast("double") / col("n_true")), 9)
+            .as("avg_recall"),
           round(avg(col("n_scored").cast("double")), 9)
             .as("avg_scored"),
           sum("n_scored").cast("long").as("total_scored"),
@@ -920,38 +855,25 @@ object AnnQueries extends QueryModule {
       FROM ($armRows)
       GROUP BY 1 ORDER BY rerank_r"""
     }) { (s, dir) =>
-      // checkpoint the (fixture-scale, 8-query) brute-force truth
-      // ONCE — each rung arm reads the materialized frame instead of
-      // re-planning the broadcast ≠-join per arm
-      val truth = Similarity.cosineTopK(t(s, dir, "embeddings"),
-          col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid")).graftCheckpoint()
+      val spark = s
+      import spark.implicits._
       val served = hnswPqFrontierServed(s, dir)
-      val hits = served.select(col("rerank_r"), col("qid"),
-        col("vid")).withColumn("hit", lit(1L))
       val costs = served.groupBy("rerank_r", "qid")
         .agg(first(col("n_scored")).as("n_scored"),
           first(col("n_exact")).as("n_exact"))
-      HnswPqRerankRungs.map { r =>
-        truth
-          .join(hits.filter(col("rerank_r") === r)
-            .drop("rerank_r"), Seq("qid", "vid"), "left")
-          .groupBy("qid")
-          .agg((sum(coalesce(col("hit"), lit(0L))).cast("double")
-            / count(lit(1))).as("recall"))
-          .join(costs.filter(col("rerank_r") === r)
-            .drop("rerank_r"), Seq("qid"))
-          .agg(count(lit(1)).as("n_queries"),
-            round(avg("recall"), 9).as("avg_recall"),
-            round(avg(col("n_scored").cast("double")), 9)
-              .as("avg_scored"),
-            round(avg(col("n_exact").cast("double")), 9)
-              .as("avg_exact"),
-            sum("n_exact").cast("long").as("total_exact"))
-          .select(lit(r).as("rerank_r"), col("n_queries"),
-            col("avg_recall"), col("avg_scored"), col("avg_exact"),
-            col("total_exact"))
-      }.reduce(_ unionByName _).orderBy("rerank_r")
+      recallHits(cosTruth(s, dir), served,
+          HnswPqRerankRungs.toDF("rerank_r"))
+        .join(costs, Seq("rerank_r", "qid"))
+        .groupBy("rerank_r")
+        .agg(count(lit(1)).as("n_queries"),
+          round(avg(col("n_hits").cast("double") / col("n_true")), 9)
+            .as("avg_recall"),
+          round(avg(col("n_scored").cast("double")), 9)
+            .as("avg_scored"),
+          round(avg(col("n_exact").cast("double")), 9)
+            .as("avg_exact"),
+          sum("n_exact").cast("long").as("total_exact"))
+        .orderBy("rerank_r")
     },
 
 
@@ -1023,34 +945,22 @@ object AnnQueries extends QueryModule {
       FROM ($armRows)
       GROUP BY 1 ORDER BY arm"""
     }) { (s, dir) =>
-      val truth = Similarity.cosineTopK(t(s, dir, "embeddings"),
-          col("vec_id") < 8, AnnK)
-        .select(col("qid"), col("vid")).graftCheckpoint()
-      def arm(name: String, served: DataFrame): DataFrame = {
-        val hits = served.select(col("qid"), col("vid"))
-          .withColumn("hit", lit(1L))
-        val nsc = served.groupBy("qid")
-          .agg(first(col("n_scored")).as("n_scored"),
-            first(col("n_exact")).as("n_exact"))
-        truth.join(hits, Seq("qid", "vid"), "left")
-          .groupBy("qid")
-          .agg((sum(coalesce(col("hit"), lit(0L))).cast("double")
-            / count(lit(1))).as("recall"))
-          .join(nsc, Seq("qid"))
-          .select(lit(name).as("arm"), col("recall"),
-            col("n_scored"), col("n_exact"))
-      }
-      // pre-touch the SHARED stages once (base graph + layers), then
+      val spark = s
+      import spark.implicits._
+      val arms = Seq("pq_base", "pq_opq_rot", "pq_m_wide")
       // run the three arm serves concurrently (guide §2.6)
-      nndGraph(s, dir); hnswLayers(s, dir)
-      graft.ops.Pools.awaitAll(Seq(
-          () => arm("pq_base", hnswPqServed(s, dir)),
-          () => arm("pq_opq_rot", hnswPqRotServed(s, dir)),
-          () => arm("pq_m_wide", hnswPqWideServed(s, dir))))
-        .reduce(_ unionByName _)
+      val served = tagArms("arm", arms.zip(graft.ops.Pools.awaitAll(Seq(
+        () => hnswPqServed(s, dir), () => hnswPqRotServed(s, dir),
+        () => hnswPqWideServed(s, dir)))), "n_scored", "n_exact")
+      val nsc = served.groupBy("arm", "qid")
+        .agg(first(col("n_scored")).as("n_scored"),
+          first(col("n_exact")).as("n_exact"))
+      recallHits(cosTruth(s, dir), served, arms.toDF("arm"))
+        .join(nsc, Seq("arm", "qid"))
         .groupBy("arm")
         .agg(count(lit(1)).as("n_queries"),
-          round(avg("recall"), 9).as("avg_recall"),
+          round(avg(col("n_hits").cast("double") / col("n_true")), 9)
+            .as("avg_recall"),
           round(avg(col("n_scored").cast("double")), 9)
             .as("avg_scored"),
           round(avg(col("n_exact").cast("double")), 9)
@@ -1441,18 +1351,17 @@ object AnnQueries extends QueryModule {
         FROM gexact5 e LEFT JOIN rer5 p
           ON e.qid = p.qid AND e.vid = p.vid)
       ORDER BY variant""")) { (s, dir) =>
-      val exact5 = exactTop5(s, dir)
-      val adc5 = ivfPqCands(s, dir).filter(col("rnk") <= AnnK)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))
-      val rer5 = rerankTop5(s, dir)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))
-      def row(v: String, hits: DataFrame) =
-        exact5.join(hits, Seq("qid", "vid"), "left")
-          .agg(lit(v).as("variant"),
-            countDistinct(col("qid")).as("n_queries"),
-            round(count(col("hit")).cast("double") / count(lit(1)), 6)
-              .as("recall_at_5"))
-      row("ivfpq_adc", adc5).unionByName(row("ivfpq_rerank", rer5))
+      val spark = s
+      import spark.implicits._
+      val variants = Seq(
+        "ivfpq_adc" -> ivfPqCands(s, dir).filter(col("rnk") <= AnnK),
+        "ivfpq_rerank" -> rerankTop5(s, dir))
+      recallHits(exactTop5(s, dir), tagArms("variant", variants),
+          variants.map(_._1).toDF("variant"))
+        .groupBy("variant")
+        .agg(countDistinct(col("qid")).as("n_queries"),
+          round(sum("n_hits").cast("double") / sum("n_true"), 6)
+            .as("recall_at_5"))
         .orderBy("variant")
     },
 
@@ -1619,24 +1528,22 @@ object AnnQueries extends QueryModule {
         FROM ggexact e LEFT JOIN v4 p
           ON e.qid = p.qid AND e.vid = p.vid)
       ORDER BY variant""")) { (s, dir) =>
+      val spark = s
+      import spark.implicits._
       val emb = t(s, dir, "embeddings")
-      val exact5 = exactTop5(s, dir)
       val (cells, _) = residArtifacts(s, dir)
-      def row(v: String, hits: DataFrame) =
-        exact5.join(hits.select(col("qid"), col("vid"),
-            lit(1).as("hit")), Seq("qid", "vid"), "left")
-          .agg(lit(v).as("variant"),
-            countDistinct(col("qid")).as("n_queries"),
-            round(count(col("hit")).cast("double") / count(lit(1)), 6)
-              .as("recall_at_5"))
-      row("1_seed_nonres_adc",
-          ivfPqCands(s, dir).filter(col("rnk") <= AnnK))
-        .unionByName(row("2_fitted_nonres_adc",
-          Similarity.ivfPqFittedTopK(emb, col("vec_id") < AnnQ,
-            AnnK, IvfNProbe, cells, lloydCb(s, dir))))
-        .unionByName(row("3_fitted_res_adc",
-          residCands(s, dir).filter(col("rnk") <= AnnK)))
-        .unionByName(row("4_fitted_res_rerank", residRerankTop5(s, dir)))
+      val variants = Seq(
+        "1_seed_nonres_adc" -> ivfPqCands(s, dir).filter(col("rnk") <= AnnK),
+        "2_fitted_nonres_adc" -> Similarity.ivfPqFittedTopK(emb,
+          col("vec_id") < AnnQ, AnnK, IvfNProbe, cells, lloydCb(s, dir)),
+        "3_fitted_res_adc" -> residCands(s, dir).filter(col("rnk") <= AnnK),
+        "4_fitted_res_rerank" -> residRerankTop5(s, dir))
+      recallHits(exactTop5(s, dir), tagArms("variant", variants),
+          variants.map(_._1).toDF("variant"))
+        .groupBy("variant")
+        .agg(countDistinct(col("qid")).as("n_queries"),
+          round(sum("n_hits").cast("double") / sum("n_true"), 6)
+            .as("recall_at_5"))
         .orderBy("variant")
     },
 
@@ -1700,28 +1607,33 @@ object AnnQueries extends QueryModule {
       ORDER BY variant"""
     }) { (s, dir) =>
       import graft.streaming.StreamingAnnServe
+      val spark = s
+      import spark.implicits._
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < AnnQ)
       val (cells, cb) = residArtifacts(s, dir)
-      val exact5 = exactTop5(s, dir)
-      val byNp = FrontierRungs.map(_._1).distinct.map { np =>
-        np -> StreamingAnnServe.scoreCandidatesResidual(
-          queries, annServeResIndex(s, dir), cells, cb, nProbe = np)
-      }.toMap
-      FrontierRungs.map { case (np, rr) =>
-        val cand = byNp(np)
-        val scanned = cand.agg(count(lit(1)).as("total_scanned"))
-        val hits = Similarity.rerankServe(cand, queries, emb,
-            rerankR = rr, k = AnnK)
-          .select(col("qid"), col("vid"), lit(1).as("hit"))
-        exact5.join(hits, Seq("qid", "vid"), "left")
-          .agg(lit(s"np${np}_r$rr").as("variant"),
-            countDistinct(col("qid")).as("n_queries"),
-            round(count(col("hit")).cast("double") / count(lit(1)), 6)
-              .as("recall_at_5"))
-          .crossJoin(broadcast(scanned))
-          .select("variant", "n_queries", "total_scanned", "recall_at_5")
-      }.reduce(_ unionByName _).orderBy("variant")
+      val rungs = FrontierRungs.map { case (np, rr) =>
+        (s"np${np}_r$rr", np, rr) }.toDF("variant", "n_probe", "rerank_r")
+      // one scoring pass at the widest nProbe: a rung's candidates are
+      // the rows whose cell ranks among its first n_probe probes
+      val cand = StreamingAnnServe.probedCandidatesResidual(queries,
+          annServeResIndex(s, dir), cells, cb,
+          nProbe = FrontierRungs.map(_._1).max)
+        .join(broadcast(rungs), col("probe") < col("n_probe"))
+      val scanned = cand.groupBy("variant")
+        .agg(count(lit(1)).as("total_scanned"))
+      val served = Similarity.rerankServeBy(cand, queries, emb,
+        Seq("variant"), col("rerank_r"), k = AnnK)
+      recallHits(exactTop5(s, dir), served, rungs.select("variant"))
+        .groupBy("variant")
+        .agg(countDistinct(col("qid")).as("n_queries"),
+          round(sum("n_hits").cast("double") / sum("n_true"), 6)
+            .as("recall_at_5"))
+        .join(scanned, Seq("variant"), "left")
+        .select(col("variant"), col("n_queries"),
+          coalesce(col("total_scanned"), lit(0L)).as("total_scanned"),
+          col("recall_at_5"))
+        .orderBy("variant")
     },
 
 
@@ -1790,10 +1702,9 @@ object AnnQueries extends QueryModule {
       val w = Window.partitionBy("qid").orderBy(col("adc"), col("vid"))
       val i5 = cand.withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= AnnK)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))
-      exactTop5(s, dir).join(i5, Seq("qid", "vid"), "left")
+      recallHits(exactTop5(s, dir), i5)
         .agg(countDistinct(col("qid")).as("n_queries"),
-          round(count(col("hit")).cast("double") / count(lit(1)), 6)
+          round(sum("n_hits").cast("double") / sum("n_true"), 6)
             .as("recall_at_5"))
     },
 
@@ -1869,13 +1780,9 @@ object AnnQueries extends QueryModule {
                AS recall_at_5
       FROM exact5 e LEFT JOIN pq5 p ON e.qid = p.qid AND e.vid = p.vid
       GROUP BY 1 ORDER BY 1""")) { (s, dir) =>
-      val exact5 = exactTop5(s, dir)
-      val pq5 = pqTop5(s, dir)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))
-      exact5.join(pq5, Seq("qid", "vid"), "left")
-        .groupBy("qid")
-        .agg(count(col("hit")).as("n_hits"),
-          round(count(col("hit")).cast("double") / count(lit(1)), 6)
+      recallHits(exactTop5(s, dir), pqTop5(s, dir))
+        .select(col("qid"), col("n_hits"),
+          round(col("n_hits").cast("double") / col("n_true"), 6)
             .as("recall_at_5"))
         .orderBy("qid")
     },
@@ -1921,9 +1828,16 @@ object AnnQueries extends QueryModule {
         FROM exact5 e LEFT JOIN lloyd5 p
           ON e.qid = p.qid AND e.vid = p.vid)
       ORDER BY codebook""")) { (s, dir) =>
-      val exact5 = exactTop5(s, dir)
-      recallRow(exact5, pqTop5(s, dir), "seed_slice")
-        .unionByName(recallRow(exact5, lloydTop5(s, dir), "lloyd_fit"))
+      val spark = s
+      import spark.implicits._
+      val codebooks = Seq("seed_slice" -> pqTop5(s, dir),
+        "lloyd_fit" -> lloydTop5(s, dir))
+      recallHits(exactTop5(s, dir), tagArms("codebook", codebooks),
+          codebooks.map(_._1).toDF("codebook"))
+        .groupBy("codebook")
+        .agg(countDistinct(col("qid")).as("n_queries"),
+          round(sum("n_hits").cast("double") / sum("n_true"), 6)
+            .as("recall_at_5"))
         .orderBy("codebook")
     },
 
@@ -1934,7 +1848,11 @@ object AnnQueries extends QueryModule {
     // by nature). Its "must not trail the seed codebook" invariant is
     // spec-locked; its DETERMINISTIC twin above is fully hash-checked.
     Q("q_e_pq_recall_mllib", None) { (s, dir) =>
-      recallRow(exactTop5(s, dir), kmTop5(s, dir), "mllib_kmeans")
+      recallHits(exactTop5(s, dir), kmTop5(s, dir))
+        .agg(lit("mllib_kmeans").as("codebook"),
+          countDistinct(col("qid")).as("n_queries"),
+          round(sum("n_hits").cast("double") / sum("n_true"), 6)
+            .as("recall_at_5"))
     },
 
 
@@ -2236,11 +2154,9 @@ object AnnQueries extends QueryModule {
       val rp5 = d2.withColumn("rn", row_number().over(
           Window.partitionBy("qid").orderBy(col("d2"), col("vid"))))
         .filter(col("rn") <= AnnK)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))
-      exactTop5(s, dir).join(rp5, Seq("qid", "vid"), "left")
-        .groupBy("qid")
-        .agg(count(col("hit")).as("n_hits"),
-          round(count(col("hit")).cast("double") / count(lit(1)), 6)
+      recallHits(exactTop5(s, dir), rp5)
+        .select(col("qid"), col("n_hits"),
+          round(col("n_hits").cast("double") / col("n_true"), 6)
             .as("recall_at_5"))
         .orderBy("qid")
     },
@@ -2316,11 +2232,9 @@ object AnnQueries extends QueryModule {
       val rr5 = exact.withColumn("rn", row_number().over(
           Window.partitionBy("qid").orderBy(col("d2"), col("vid"))))
         .filter(col("rn") <= AnnK)
-        .select(col("qid"), col("vid"), lit(1).as("hit"))
-      exactTop5(s, dir).join(rr5, Seq("qid", "vid"), "left")
-        .groupBy("qid")
-        .agg(count(col("hit")).as("n_hits"),
-          round(count(col("hit")).cast("double") / count(lit(1)), 6)
+      recallHits(exactTop5(s, dir), rr5)
+        .select(col("qid"), col("n_hits"),
+          round(col("n_hits").cast("double") / col("n_true"), 6)
             .as("recall_at_5"))
         .orderBy("qid")
     }

@@ -516,6 +516,48 @@ object AnnStages {
         .filter(col("rn") <= AnnK).select("qid", "vid")
     }
 
+  /** Exact cosine top-k of the 8 query vectors (vec_id < 8) — the
+    * ground-truth side of the graph, HNSW and dimred recall rows,
+    * cached like [[exactTop5]] (the squared-L2 truth of the PQ/IVF/RP
+    * rows). */
+  private[queries] def cosTruth(s: SparkSession, dir: String): DataFrame =
+    Stage.cached(s, dir, "ann_cos_truth") {
+      Similarity.cosineTopK(t(s, dir, "embeddings"), col("vec_id") < 8,
+        AnnK).select("qid", "vid")
+    }
+
+  /** The one recall count: per (arm keys…, qid), `n_hits` = truth
+    * (qid, vid) rows the arm served and `n_true` = truth rows. `arms`
+    * is the full arm-key list (its columns are the keys `served`
+    * carries besides qid and vid), so an arm that served nothing keeps
+    * its truth rows at n_hits = 0. A plain left join: a duplicated
+    * served pair counts twice in both columns. */
+  private[queries] def recallHits(truth: DataFrame, served: DataFrame,
+      arms: DataFrame): DataFrame =
+    hitCounts(truth.crossJoin(broadcast(arms)), served,
+      arms.columns.toSeq)
+
+  /** [[recallHits]] of one served table: per qid. */
+  private[queries] def recallHits(truth: DataFrame, served: DataFrame)
+      : DataFrame = hitCounts(truth, served, Nil)
+
+  private def hitCounts(truth: DataFrame, served: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val on = keys ++ Seq("qid", "vid")
+    truth.join(served.select(on.map(col) :+ lit(1).as("hit"): _*), on,
+        "left")
+      .groupBy((keys :+ "qid").map(col): _*)
+      .agg(count(col("hit")).as("n_hits"), count(lit(1)).as("n_true"))
+  }
+
+  /** Several arms' served rows as one frame: each arm's (qid, vid,
+    * `carry`…) columns, tagged with its arm value in column `key`. */
+  private[queries] def tagArms(key: String, arms: Seq[(Any, DataFrame)],
+      carry: String*): DataFrame =
+    arms.map { case (a, df) =>
+      df.select(lit(a).as(key) +: (Seq("qid", "vid") ++ carry).map(col): _*)
+    }.reduce(_ unionByName _)
+
   /** Fitted per-subspace KMeans PQ codebook, one per sf dir — a stored
     * production artifact (codebooks are trained offline and shipped to
     * every encoder/server), memoized driver-side like the index
@@ -533,17 +575,6 @@ object AnnStages {
       Similarity.pqTopKCodebook(t(s, dir, "embeddings"),
         col("vec_id") < AnnQ, k = AnnK, kmCodebook(s, dir))
     }
-
-  /** One mean-recall@5 summary row for a PQ ranking vs the exact-L2
-    * ground truth (shared by the codebook A/B queries). */
-  private[queries] def recallRow(exact5: DataFrame, pq5: DataFrame,
-      variant: String): DataFrame =
-    exact5.join(pq5.select(col("qid"), col("vid"), lit(1).as("hit")),
-        Seq("qid", "vid"), "left")
-      .agg(lit(variant).as("codebook"),
-        countDistinct(col("qid")).as("n_queries"),
-        round(count(col("hit")).cast("double")
-          / count(lit(1)), 6).as("recall_at_5"))
 
   /** Lloyd iterations for the deterministic fitted codebook — small
     * because the oracle unrolls m × iters CTE chains, and 4 rounds from

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.backtest.{Engine, Grid, Metrics, Overlay, Signals, WalkForward}
 import graft.etl.{EventGrammar, Indicators, MarketData}
 import graft.ops.Cols
@@ -94,34 +93,51 @@ object HybridQueries extends QueryModule {
         gatedSig(s, dir, gate, _, _))
     }
 
-  /** Min-max normalization with the reference's exact null semantics
-    * (_normalize_metric): no finite values → 0.5, null → 0.0,
-    * max ≈ min (np.isclose: atol 1e-8, rtol 1e-5 vs min) → 0.5. */
-  private def norm(c: Column, higher: Boolean): Column = {
-    val W = Window.partitionBy()
-    val mn = min(c).over(W)
-    val mx = max(c).over(W)
-    val scaled = (c - mn) / (mx - mn)
-    when(count(c).over(W) === 0, 0.5)
-      .when(c.isNull, 0.0)
-      .when(abs(mx - mn) <= lit(1e-8) + lit(1e-5) * abs(mn), 0.5)
-      .otherwise(if (higher) scaled else lit(1.0) - scaled)
+  /** `df` plus column `out` = Σ weight · norm(c) over `terms`
+    * (weight, c, higher), norm being min-max normalization with the
+    * reference's exact null semantics (_normalize_metric): no finite
+    * values → 0.5, null → 0.0, max ≈ min (np.isclose: atol 1e-8,
+    * rtol 1e-5 vs min) → 0.5. Each column's min, max and count come
+    * from one global aggregate broadcast back to every row — exact,
+    * without an unpartitioned window. The `attach` aggregates ride the
+    * same pass and stay on every row. */
+  private def withNormSum(df: DataFrame, out: String,
+      terms: Seq[(Double, Column, Boolean)], attach: Column*)
+      : DataFrame = {
+    val names = terms.indices.map(i => (s"__mn$i", s"__mx$i", s"__n$i"))
+    val aggs = terms.zip(names).flatMap { case ((_, c, _), (mn, mx, n)) =>
+      Seq(min(c).as(mn), max(c).as(mx), count(c).as(n))
+    }
+    val normed = terms.zip(names).map { case ((w, c, higher), (a, b, n)) =>
+      val (mn, mx) = (col(a), col(b))
+      val scaled = (c - mn) / (mx - mn)
+      lit(w) * when(col(n) === 0, 0.5)
+        .when(c.isNull, 0.0)
+        .when(abs(mx - mn) <= lit(1e-8) + lit(1e-5) * abs(mn), 0.5)
+        .otherwise(if (higher) scaled else lit(1.0) - scaled)
+    }
+    df.crossJoin(broadcast(df.agg(aggs.head, aggs.tail ++ attach: _*)))
+      .withColumn(out, normed.reduce(_ + _))
+      .drop(names.flatMap { case (a, b, n) => Seq(a, b, n) }: _*)
   }
 
   /** Combo candidate score within one run's grid (_score_combo_rows:
-    * weights .32/.20/.24/.13/.06/.05, −20 zero-trade, clip 0-100). */
-  private def comboCandidate(scored: DataFrame): DataFrame =
-    scored.withColumn("combo_candidate_score",
-      greatest(least(
-        lit(100.0) * (lit(0.32) * norm(col("expectancy"), higher = true)
-          + lit(0.20) * norm(col("profit_factor"), higher = true)
-          + lit(0.24) * norm(col("robustness_score_v2"), higher = true)
-          + lit(0.13) * norm(col("ret_cv"), higher = false)
-          + lit(0.06) * norm(col("downside_std"), higher = false)
-          + lit(0.05) * norm(col("trade_count").cast("double"),
-              higher = true))
+    * weights .32/.20/.24/.13/.06/.05, −20 zero-trade, clip 0-100), with
+    * the grid's global `attach` aggregates on every row. */
+  private def comboCandidate(scored: DataFrame, attach: Column*)
+      : DataFrame =
+    withNormSum(scored, "__norm", Seq(
+        (0.32, col("expectancy"), true),
+        (0.20, col("profit_factor"), true),
+        (0.24, col("robustness_score_v2"), true),
+        (0.13, col("ret_cv"), false),
+        (0.06, col("downside_std"), false),
+        (0.05, col("trade_count").cast("double"), true)), attach: _*)
+      .withColumn("combo_candidate_score",
+        greatest(least(lit(100.0) * col("__norm")
           - when(col("trade_count") === 0, 20.0).otherwise(0.0),
-        lit(100.0)), lit(0.0)))
+          lit(100.0)), lit(0.0)))
+      .drop("__norm")
 
   /** The 4 distinct (mode, confirmBars) signal variants behind the
     * 8-combo grid — hold/fee don't change the signal frame, so the
@@ -223,7 +239,9 @@ object HybridQueries extends QueryModule {
     * and recommendation class. */
   private[queries] def runTable(s: SparkSession, dir: String): DataFrame = {
     val rows = Runs.map { run =>
-      val ccs = comboCandidate(runScored(s, dir, run.mode))
+      val ccs = comboCandidate(runScored(s, dir, run.mode),
+        round(avg(when(col("trade_count") === 0, 1.0).otherwise(0.0)), 9)
+          .as("best_zero_trade_share"))
       // best combo via a parallel TakeOrdered (orderBy+limit(1)) over
       // the same total order — the retired row_number==1 filter ran a
       // single-task unpartitioned window; the surviving row is
@@ -234,8 +252,6 @@ object HybridQueries extends QueryModule {
           col("profit_factor").desc_nulls_last,
           col("combo_id"))
         .limit(1)
-      val zs = ccs.agg(round(avg(when(col("trade_count") === 0, 1.0)
-        .otherwise(0.0)), 9).as("best_zero_trade_share"))
       val ovl = ovlStats(s, dir)
       val (mRate, uRate, vShare) = run.mode match {
         case None => (lit(null).cast("double"), lit(null).cast("double"),
@@ -245,7 +261,7 @@ object HybridQueries extends QueryModule {
         case _ => (col("match_rate"),
           round(lit(1.0) - col("match_rate"), 9), col("veto_share_veto"))
       }
-      top.crossJoin(zs).crossJoin(ovl).select(
+      top.crossJoin(ovl).select(
         lit(run.label).as("run_label"),
         run.mode.map(m => lit(m).cast("string"))
           .getOrElse(lit(null).cast("string")).as("overlay_mode"),
@@ -265,21 +281,19 @@ object HybridQueries extends QueryModule {
         round(col("combo_candidate_score"), 6)
           .as("combo_candidate_score"))
     }
-    val rt = rows.reduce(_.unionByName(_))
-    val single = lit(100.0) *
-      (lit(0.30) * norm(col("best_expectancy"), higher = true)
-        + lit(0.20) * norm(col("best_pf"), higher = true)
-        + lit(0.25) * norm(col("best_robustness_v2"), higher = true)
-        + lit(0.15) * norm(col("best_ret_cv"), higher = false)
-        + lit(0.07) * norm(col("best_downside_std"), higher = false)
-        + lit(0.03) * norm(col("best_zero_trade_share"), higher = false))
-    val scored = rt.withColumn("single_raw",
-      greatest(least(single
-        - when(col("overlay_vetoed_signal_share") > 0.80, 5.0)
-          .otherwise(0.0), lit(100.0)), lit(0.0)))
-    val baseTc = max(when(col("run_label") === "HMM baseline",
-      col("best_trade_count"))).over(Window.partitionBy())
-    scored
+    withNormSum(rows.reduce(_.unionByName(_)), "__norm", Seq(
+        (0.30, col("best_expectancy"), true),
+        (0.20, col("best_pf"), true),
+        (0.25, col("best_robustness_v2"), true),
+        (0.15, col("best_ret_cv"), false),
+        (0.07, col("best_downside_std"), false),
+        (0.03, col("best_zero_trade_share"), false)),
+        max(when(col("run_label") === "HMM baseline",
+          col("best_trade_count"))).as("__base_tc"))
+      .withColumn("single_raw",
+        greatest(least(lit(100.0) * col("__norm")
+          - when(col("overlay_vetoed_signal_share") > 0.80, 5.0)
+            .otherwise(0.0), lit(100.0)), lit(0.0)))
       .withColumn("recommendation_label",
         when(col("single_raw") >= 72.0
           && col("best_zero_trade_share") <= 0.25
@@ -290,11 +304,11 @@ object HybridQueries extends QueryModule {
           .when(col("overlay_enabled") && col("status") === "OK"
             && (coalesce(col("overlay_vetoed_signal_share"), lit(0.0))
                 >= 0.50
-              || col("best_trade_count") < lit(0.60) * baseTc),
+              || col("best_trade_count") < lit(0.60) * col("__base_tc")),
             "NICHE_FILTER")
           .otherwise("RESEARCH_ONLY"))
       .withColumn("single_candidate_score", round(col("single_raw"), 6))
-      .drop("single_raw")
+      .drop("__norm", "__base_tc", "single_raw")
       .orderBy("run_label")
   }
 

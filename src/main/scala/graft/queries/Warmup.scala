@@ -33,6 +33,7 @@ object Warmup {
       "annPairs" -> (() => TextQueries.annPairs(spark, dir).count()),
       "pqTop5" -> (() => AnnStages.pqTop5(spark, dir).count()),
       "exactTop5" -> (() => AnnStages.exactTop5(spark, dir).count()),
+      "cosTruth" -> (() => AnnStages.cosTruth(spark, dir).count()),
       "annServeIndex" ->
         (() => AnnStages.annServeIndex(spark, dir).count()),
       "ivfPqCands" -> (() => AnnStages.ivfPqCands(spark, dir).count()),

@@ -179,6 +179,16 @@ object StreamingAnnServe {
     * residual convention pays. */
   def scoreCandidatesResidual(queries: DataFrame, index: DataFrame,
       cells: Cells, codebook: StreamingEncode.Codebook, nProbe: Int)
+      : DataFrame =
+    probedCandidatesResidual(queries, index, cells, codebook, nProbe)
+      .select("qid", "vid", "adc")
+
+  /** [[scoreCandidatesResidual]] plus each candidate's `probe`: the
+    * 0-based rank of its cell among the query's probed cells. The
+    * rank does not depend on `nProbe`, so the candidates at the widest
+    * nProbe hold those of every narrower one as `probe < nProbe`. */
+  def probedCandidatesResidual(queries: DataFrame, index: DataFrame,
+      cells: Cells, codebook: StreamingEncode.Codebook, nProbe: Int)
       : DataFrame = {
     require(nProbe >= 1 && nProbe <= cells.length)
     val m = codebook.length
@@ -201,12 +211,12 @@ object StreamingAnnServe {
     }
     val qProj = queries
       .select(col("vec_id").cast("long").as("qid"),
-        explode(probes).as("pc"), v.as("qv"))
+        posexplode(probes).as(Seq("probe", "pc")), v.as("qv"))
       .withColumn("cell", col("pc.cell")).drop("pc")
       .withColumn("qres",
         zip_with(col("qv"), element_at(centLit, col("cell") + 1),
           (x, y) => x - y))
-      .select(col("qid") +: col("cell") +: qd2Cols: _*)
+      .select(col("qid") +: col("cell") +: col("probe") +: qd2Cols: _*)
     // same broadcast-boundary rationale as scoreCandidates
     val q = if (queries.isStreaming) qProj else broadcast(qProj)
     val adcTerms = (0 until m).map(mi =>
@@ -215,7 +225,8 @@ object StreamingAnnServe {
     q.join(index, Seq("cell"))
       .filter(col("vid") =!= col("qid"))
       .select(col("qid"), col("vid"),
-        round(adcTerms.reduce(_ + _).cast("double"), 6).as("adc"))
+        round(adcTerms.reduce(_ + _).cast("double"), 6).as("adc"),
+        col("probe"))
   }
 
   /** Streaming top-k: per-query best `k` candidates by (adc, vid). The

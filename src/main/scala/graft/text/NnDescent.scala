@@ -275,8 +275,8 @@ object NnDescent {
     * query-local joins against the k-bounded edge list, never a pass
     * over the corpus. */
   def serve(emb: DataFrame, graph: DataFrame, queryPred: Column,
-      k: Int, beam: Int, hops: Int): DataFrame =
-    serveFrame(emb, graph, emb.filter(queryPred), k, beam, hops)
+      k: Int, beam: Int, hops: Int, fuse: Int = 2): DataFrame =
+    serveFrame(emb, graph, emb.filter(queryPred), k, beam, hops, fuse)
 
   /** [[serve]] with an EXPLICIT (vec_id, embedding) query frame — the
     * serving seam a stream plugs into ([[graft.streaming
@@ -285,10 +285,10 @@ object NnDescent {
     * n_scored) is query-local, so serving queries in any batching
     * yields identical per-query rows. */
   def serveFrame(emb: DataFrame, graph: DataFrame, queries: DataFrame,
-      k: Int, beam: Int, hops: Int): DataFrame = {
+      k: Int, beam: Int, hops: Int, fuse: Int = 2): DataFrame = {
     val n = denseCount(emb)
     serveImpl(emb, graph, queries, k, beam, hops, entryMod = n,
-      salt = "sv", vecsIn = Some(vecsMemo(emb)))
+      salt = "sv", vecsIn = Some(vecsMemo(emb)), fuse = fuse)
   }
 
   // --- shared serve plumbing: ONE definition each for the flat,
@@ -343,33 +343,26 @@ object NnDescent {
       .filter(col("node") =!= col("qid"))
       .distinct()
 
-  /** How many beam hops fuse into one eagerly-checkpointed job
-    * (default 2 — halves the per-serve eager-job count; the
-    * `graft.serve.fuse` system property exists ONLY so the parity
-    * spec can run the retired one-checkpoint-per-hop shape at 1). */
-  private def serveFuse: Int =
-    sys.props.get("graft.serve.fuse").flatMap(_.toIntOption)
-      .getOrElse(2)
-
   /** The shared beam-expansion hop loop of the flat / hierarchical /
     * incremental-seed serves: runs `specs` (edges, beamWidth) hops
-    * from `state0`, checkpointing every [[serveFuse]]-th state — hop
-    * i+1's candidates derive from hop i's LAZY beam inside the same
-    * job (guide §2.4/§5: the per-hop states are purely sequential,
-    * so materializing every one of them bought nothing but an eager
-    * job per hop). The (state, cands) FRAME SEQUENCE is unchanged —
-    * every hop's topB window has a total (cos_sim desc, node asc)
-    * order over round-6 sims, so the fused rounds are bit-identical
-    * to the retired per-hop shape (NnDescentSpec locks fuse=2 ≡
-    * fuse=1). The intermediate lazy state appears twice in the next
-    * hop's plan (union + join side) — bounded at fuse=2, and its
-    * window exchange is physically reused. `onCands` observes each
-    * hop's candidate set (the lazily-accumulated serve cost set). */
+    * from `state0`, checkpointing every `fuse`-th state — hop i+1's
+    * candidates derive from hop i's LAZY beam inside the same job
+    * (guide §2.4/§5: the per-hop states are purely sequential, so
+    * materializing every one of them bought nothing but an eager job
+    * per hop; the default 2 halves the serve's eager-job count). The
+    * (state, cands) FRAME SEQUENCE does not depend on `fuse` — every
+    * hop's topB window has a total (cos_sim desc, node asc) order
+    * over round-6 sims, so fuse = 2 is bit-identical to checkpointing
+    * every hop at fuse = 1 (NnDescentSpec locks it). The intermediate
+    * lazy state appears twice in the next hop's plan (union + join
+    * side) — bounded at fuse=2, and its window exchange is physically
+    * reused. `onCands` observes each hop's candidate set (the
+    * lazily-accumulated serve cost set). */
   private def beamHops(state0: DataFrame, specs: Seq[(DataFrame, Int)],
       score: (DataFrame, Int) => DataFrame,
-      onCands: DataFrame => Unit = _ => ()): DataFrame = {
+      onCands: DataFrame => Unit = _ => (), fuse: Int = 2): DataFrame = {
     import graft.ops.Ckpt._
-    val fuse = math.max(1, serveFuse)
+    require(fuse >= 1, s"fuse $fuse must be >= 1")
     var state = state0
     var pending = 0
     for (((edges, b), i) <- specs.zipWithIndex) {
@@ -409,7 +402,8 @@ object NnDescent {
     * is a (vec_id, embedding) frame (corpus slice or external). */
   private def serveImpl(emb: DataFrame, graph: DataFrame,
       queries: DataFrame, k: Int, beam: Int, hops: Int, entryMod: Long,
-      salt: String, vecsIn: Option[DataFrame]): DataFrame = {
+      salt: String, vecsIn: Option[DataFrame], fuse: Int = 2)
+      : DataFrame = {
     val vecs = vecsIn.getOrElse(vecsOf(emb))
     val q = vecsOf(queries)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
@@ -433,7 +427,7 @@ object NnDescent {
     var scoredSet = entries
     val state = beamHops(state0, Seq.fill(hops)((edges, beam)),
       (cands, b) => topB(scoreQ(cands, q, vecs), b),
-      cands => scoredSet = scoredSet.unionByName(cands))
+      cands => scoredSet = scoredSet.unionByName(cands), fuse)
     finishServe(state, scoredSet.distinct(), k)
   }
 
@@ -606,10 +600,10 @@ object NnDescent {
     * arrive near the query instead of md5-random). */
   def serveHier(emb: DataFrame, baseGraph: DataFrame,
       layerGraphs: Seq[DataFrame], queryPred: Column, k: Int,
-      upBeam: Int, upHops: Int, beam: Int, hops: Int, ratio: Int)
-      : DataFrame =
+      upBeam: Int, upHops: Int, beam: Int, hops: Int, ratio: Int,
+      fuse: Int = 2): DataFrame =
     serveHierFrame(emb, baseGraph, layerGraphs, emb.filter(queryPred),
-      k, upBeam, upHops, beam, hops, ratio)
+      k, upBeam, upHops, beam, hops, ratio, fuse)
 
   /** [[serveHier]] with an EXPLICIT (vec_id, embedding) query frame —
     * the streaming seam ([[serveFrame]]'s hierarchical twin; per-query
@@ -617,8 +611,8 @@ object NnDescent {
     * identical per-query rows). */
   def serveHierFrame(emb: DataFrame, baseGraph: DataFrame,
       layerGraphs: Seq[DataFrame], queries: DataFrame, k: Int,
-      upBeam: Int, upHops: Int, beam: Int, hops: Int, ratio: Int)
-      : DataFrame = {
+      upBeam: Int, upHops: Int, beam: Int, hops: Int, ratio: Int,
+      fuse: Int = 2): DataFrame = {
     val levels = layerGraphs.length
     val vecs = vecsMemo(emb)
     val q = vecsOf(queries)
@@ -656,7 +650,7 @@ object NnDescent {
       }
     val state = beamHops(state0, specs,
       (cands, b) => topB(scoreQ(cands, q, vecs), b),
-      cands => scoredSet = scoredSet.unionByName(cands))
+      cands => scoredSet = scoredSet.unionByName(cands), fuse)
     finishServe(state, scoredSet.distinct(), k)
   }
 

@@ -807,20 +807,30 @@ object Similarity {
     * inside `foreachBatch` (the standard multi-stage streaming-serving
     * shape — StreamingSpec locks streamed == batch). */
   def rerankServe(cands: DataFrame, queryVecs: DataFrame,
-      vectors: DataFrame, rerankR: Int, k: Int): DataFrame = {
-    val wAdc = Window.partitionBy("qid").orderBy(col("adc"), col("vid"))
-    val topR = cands.select("qid", "vid", "adc")
-      .withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= rerankR).drop("rn")
+      vectors: DataFrame, rerankR: Int, k: Int): DataFrame =
+    rerankServeBy(cands, queryVecs, vectors, Nil, lit(rerankR), k)
+
+  /** [[rerankServe]] over several keyed candidate sets in one plan:
+    * the top-R short list, the exact re-score and the top-k run per
+    * (`keys`…, qid), with R read per row from `rerankR`. Returns the
+    * keys, then (qid, vid, adc, d2, rnk). */
+  def rerankServeBy(cands: DataFrame, queryVecs: DataFrame,
+      vectors: DataFrame, keys: Seq[String], rerankR: Column, k: Int)
+      : DataFrame = {
+    val part = (keys :+ "qid").map(col)
+    val wAdc = Window.partitionBy(part: _*).orderBy(col("adc"), col("vid"))
+    val topR = cands.withColumn("rn", row_number().over(wAdc))
+      .filter(col("rn") <= rerankR)
+      .select(part ++ Seq(col("vid"), col("adc")): _*)
     val q = queryVecs.select(col("vec_id").cast("long").as("qid"),
       asDouble(col("embedding")).as("qv"))
     val x = vectors.select(col("vec_id").cast("long").as("vid"),
       asDouble(col("embedding")).as("v"))
     val exact = topR.join(x, Seq("vid")).join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("vid"), col("adc"),
+      .select(part ++ Seq(col("vid"), col("adc"),
         round(graft.functions.VecOps.sqDist18(col("qv"), col("v")), 6)
-          .as("d2"))
-    val w = Window.partitionBy("qid").orderBy(col("d2"), col("vid"))
+          .as("d2")): _*)
+    val w = Window.partitionBy(part: _*).orderBy(col("d2"), col("vid"))
     exact.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
   }

@@ -257,39 +257,26 @@ class NnDescentSpec extends SparkSpec {
 
   test("fused hop rounds (default) ≡ the retired one-checkpoint-" +
       "per-hop serve, flat and hierarchical") {
-    // r16: beamHops checkpoints every 2nd beam state (halves the
-    // serve's eager-job count); fuse=1 IS the retired per-hop shape,
-    // kept reachable via the graft.serve.fuse property purely for
-    // this parity lock — the (state, cands) frame sequence must be
-    // bit-identical either way.
-    def withFuse[T](fuse: String)(body: => T): T = {
-      val prev = sys.props.get("graft.serve.fuse")
-      sys.props("graft.serve.fuse") = fuse
-      try body
-      finally prev match {
-        case Some(p) => sys.props("graft.serve.fuse") = p
-        case None => sys.props.remove("graft.serve.fuse"); ()
-      }
-    }
+    // beamHops checkpoints every 2nd beam state (halves the serve's
+    // eager-job count); fuse = 1 checkpoints every hop — the
+    // (state, cands) frame sequence must be bit-identical either way.
     val graph = NnDescent.build(emb, k = 5, rounds = 2)
-    def flat(fuse: String) = withFuse(fuse) {
+    def flat(fuse: Int) =
       NnDescent.serve(emb, graph, col("vec_id") < 8, k = 3, beam = 6,
-          hops = 3)
+          hops = 3, fuse = fuse)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getDouble(2), r.getInt(3), r.getLong(4))).sorted.toSeq
-    }
-    assert(flat("2") == flat("1"),
+    assert(flat(2) == flat(1),
       "flat serve: fused rounds moved a value")
     val layers = NnDescent.buildLayers(emb, 5, 2, ratio = 4,
       levels = 1)
-    def hier(fuse: String) = withFuse(fuse) {
+    def hier(fuse: Int) =
       NnDescent.serveHier(emb, graph, layers, col("vec_id") < 8,
           k = 3, upBeam = 4, upHops = 1, beam = 6, hops = 3,
-          ratio = 4)
+          ratio = 4, fuse = fuse)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getDouble(2), r.getInt(3), r.getLong(4))).sorted.toSeq
-    }
-    assert(hier("2") == hier("1"),
+    assert(hier(2) == hier(1),
       "hier serve: fused rounds moved a value (layer-boundary fusion)")
   }
 }
