@@ -30,6 +30,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[VecSqDist18].getName, "vec_sqdist18"),
       GraftExtensions.vecSqDist18Builder))
     ext.injectFunction((
+      new FunctionIdentifier("vec_sqdist18_r6"),
+      new ExpressionInfo(classOf[VecSqDist18R6].getName, "vec_sqdist18_r6"),
+      GraftExtensions.vecSqDist18R6Builder))
+    ext.injectFunction((
       new FunctionIdentifier("marker_count"),
       new ExpressionInfo(classOf[MarkerCount].getName, "marker_count"),
       GraftExtensions.markerCountBuilder))
@@ -62,6 +66,13 @@ object GraftExtensions {
       s"vec_sqdist18(a, b) — got ${other.size} args")
   }
 
+  private[functions] val vecSqDist18R6Builder
+      : Seq[Expression] => Expression = {
+    case Seq(a, b) => VecSqDist18R6(a, b)
+    case other => throw new IllegalArgumentException(
+      s"vec_sqdist18_r6(a, b) — got ${other.size} args")
+  }
+
   /** marker_count(tokens, 'm1', 'm2', …): the marker set must be
     * string literals — it becomes the expression's broadcast hash set,
     * not a per-row argument. */
@@ -89,6 +100,8 @@ object GraftExtensions {
       spark, "vec_sqdist", vecSqDistBuilder)
     org.apache.spark.sql.graftinternal.Bridge.registerFunction(
       spark, "vec_sqdist18", vecSqDist18Builder)
+    org.apache.spark.sql.graftinternal.Bridge.registerFunction(
+      spark, "vec_sqdist18_r6", vecSqDist18R6Builder)
     org.apache.spark.sql.graftinternal.Bridge.registerFunction(
       spark, "marker_count", markerCountBuilder)
   }

@@ -20,26 +20,12 @@ import org.apache.spark.sql.types._
   * inputs differ in length (zip_with would null-pad) or any element is
   * null.
   */
-abstract class VecFold extends BinaryExpression {
+abstract class VecFold extends VecPair {
 
   /** Per-element contribution, e.g. x*y for dot. */
   protected def combine(x: Double, y: Double): Double
   /** Java source of the contribution over element vars `x`/`y`. */
   protected def combineJava(x: String, y: String): String
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<double> inputs, got $l / $r")
-    }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -124,35 +110,38 @@ case class VecSqDist(left: Expression, right: Expression) extends VecFold {
   *    mismatch (zip_with would null-pad);
   *  - accumulation is exact; the result is BigDecimal.doubleValue
   *    (= Decimal.toDouble).
+  *
+  * `sqDist18r6` is exactly `roundD(sqDist18(x, y), 6)` — Spark's
+  * `round(vec_sqdist18(a, b), 6)` — with null as NaN (the rounded
+  * distance is never NaN otherwise). It certifies a double-double
+  * estimate instead of running the BigDecimal fold:
+  *  - it keeps the fold's double terms `dd = (x−y)²` and its null rule,
+  *    and sums them exactly-rounded in double-double (TwoSum) into X;
+  *  - each decimal term is within ½ulp(dd) of dd (Double.toString
+  *    round-trips) plus ½e-18 (the scale-18 HALF_UP), the double-double
+  *    sum is within ½ulp(X) + n²·2⁻¹⁰⁶·X of Σdd, and the decimal string
+  *    `roundD` reads is within ½ulp(r) of r = the fold's double, itself
+  *    within ½ulp of the exact decimal sum; so the string lies within
+  *    B = Σ(ulp(dd) + 1e-18) + 4·ulp(X) of X, with at least
+  *    n·½e-18 to spare for the rounding of B and of the test below;
+  *  - if [X−B, X+B]·1e6, widened by 4·ulp of the product, holds no
+  *    half point k+½, every decimal in it rounds HALF_UP to k, and
+  *    `k / 1e6` is the correctly rounded double of k·10⁻⁶, which is
+  *    what `BigDecimal(k, 6).doubleValue` returns;
+  *  - otherwise (distance within ~1e-15 of a half point, product ≥
+  *    1e15, or ≥ 2²⁴ terms) it runs the exact fold: that stays the one
+  *    reference path, and VecOpsSpec drives half points through it.
   */
 object VecDecimal {
-  def sqDist18(x: ArrayData, y: ArrayData): java.lang.Double = {
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = java.math.BigDecimal.ZERO
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val d = x.getDouble(i) - y.getDouble(i)
-      val dd = d * d
-      if (!(dd < 1e6)) return null // NaN / Inf / (24,18) overflow
-      acc = acc.add(new java.math.BigDecimal(
-          java.lang.Double.toString(dd))
-        .setScale(18, java.math.RoundingMode.HALF_UP))
-      i += 1
-    }
-    java.lang.Double.valueOf(acc.doubleValue)
-  }
+  def sqDist18(x: ArrayData, y: ArrayData): java.lang.Double =
+    sqDist18(doubles(x), doubles(y))
 
   /** [[sqDist18]] over plain PRIMITIVE arrays — the RDD twin of an
     * `array<double>` column with containsNull, with null elements
     * carried as NaN (the fit-loop cache sentinel: a null element and a
     * NaN element are indistinguishable to every decimal fold — both
     * null the whole distance here, via the `!(dd < 1e6)` guard, and
-    * both drop out of [[dec18]] sums). Same null/overflow contract as
-    * the ArrayData form. Used by the driver-iterated fit loops
-    * (LloydKmeans) whose per-round math must stay bit-identical to the
-    * column program. */
+    * both drop out of [[dec18]] sums). */
   def sqDist18(x: Array[Double], y: Array[Double])
       : java.lang.Double = {
     if (x == null || y == null || x.length != y.length) return null
@@ -168,6 +157,65 @@ object VecDecimal {
       i += 1
     }
     java.lang.Double.valueOf(acc.doubleValue)
+  }
+
+  /** `round(vec_sqdist18(x, y), 6)`, null as NaN (see the object doc). */
+  def sqDist18r6(x: ArrayData, y: ArrayData): Double =
+    sqDist18r6(doubles(x), doubles(y))
+
+  /** [[sqDist18r6]] over primitive arrays, null elements as NaN. */
+  def sqDist18r6(x: Array[Double], y: Array[Double]): Double = {
+    val r = fastR6(x, y)
+    if (r != Uncertain) r
+    else {
+      val sq = sqDist18(x, y)
+      if (sq == null) Double.NaN else roundD(sq.doubleValue, 6)
+    }
+  }
+
+  /** An `array<double>` value as a primitive array, null elements as
+    * NaN (which every fold here treats as null). */
+  private def doubles(a: ArrayData): Array[Double] = {
+    val out = new Array[Double](a.numElements())
+    var i = 0
+    while (i < out.length) {
+      out(i) = if (a.isNullAt(i)) Double.NaN else a.getDouble(i)
+      i += 1
+    }
+    out
+  }
+
+  /** [[fastR6]]'s answer when it cannot certify the rounding. */
+  private[graft] final val Uncertain = -1.0
+
+  /** The certified fast path of [[sqDist18r6]]: the rounded distance,
+    * NaN for null, or [[Uncertain]] when its band holds a half point. */
+  private[graft] def fastR6(x: Array[Double], y: Array[Double]): Double = {
+    if (x == null || y == null || x.length != y.length) return Double.NaN
+    var hi = 0.0
+    var lo = 0.0
+    var b = 0.0
+    var i = 0
+    while (i < x.length) {
+      val d = x(i) - y(i)
+      val dd = d * d
+      if (!(dd < 1e6)) return Double.NaN
+      val s = hi + dd // TwoSum: hi + dd == s + err exactly
+      val bv = s - hi
+      lo += (hi - (s - bv)) + (dd - bv)
+      hi = s
+      b += Math.ulp(dd) + 1e-18
+      i += 1
+    }
+    // k / 1e6 when every decimal within b + 4·ulp(X) of X rounds
+    // HALF_UP at scale 6 to k; p − k is exact (Sterbenz) and k is an
+    // exact integer below 1e15
+    val sum = hi + lo
+    val p = sum * 1e6
+    val k = Math.rint(p)
+    if (x.length < (1 << 24) && p < 1e15 && Math.abs(p - k)
+        + (b + 4 * Math.ulp(sum)) * 1e6 + 4 * Math.ulp(p) < 0.5) k / 1e6
+    else Uncertain
   }
 
   /** JVM twin of Spark's `CAST(double AS DECIMAL(38,18))`: canonical
@@ -192,11 +240,9 @@ object VecDecimal {
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
 }
 
-/** Exact scale-18 Σ (aᵢ−bᵢ)² as a native expression — the PQ/Lloyd
-  * encode hot path (one tight JIT loop instead of an interpreted HOF
-  * chain; see [[VecDecimal.sqDist18]] for the bit-parity contract). */
-case class VecSqDist18(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** Two `array<double>` inputs, a nullable double out: the shape every
+  * vector expression here shares. */
+trait VecPair extends BinaryExpression {
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -206,10 +252,18 @@ case class VecSqDist18(left: Expression, right: Expression)
       case (l, r) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult
           .TypeCheckFailure(
-            s"vec_sqdist18 requires array<double> inputs, got $l / $r")
+            s"$prettyName requires array<double> inputs, got $l / $r")
     }
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
+}
+
+/** Exact scale-18 Σ (aᵢ−bᵢ)² as a native expression — the distance
+  * sums and d2 columns that keep the unrounded value (one tight JIT
+  * loop instead of an interpreted HOF chain; see
+  * [[VecDecimal.sqDist18]] for the bit-parity contract). */
+case class VecSqDist18(left: Expression, right: Expression)
+    extends VecPair {
   override def prettyName: String = "vec_sqdist18"
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -235,6 +289,37 @@ case class VecSqDist18(left: Expression, right: Expression)
       newRight: Expression): VecSqDist18 = copy(newLeft, newRight)
 }
 
+/** `round(vec_sqdist18(a, b), 6)` fused into one expression — the
+  * nearest-centroid, PQ-code and re-rank distance wherever only the
+  * rounded value is used ([[VecDecimal.sqDist18r6]]). */
+case class VecSqDist18R6(left: Expression, right: Expression)
+    extends VecPair {
+  override def prettyName: String = "vec_sqdist18_r6"
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val r = VecDecimal.sqDist18r6(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
+    if (java.lang.Double.isNaN(r)) null else r
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val r = ctx.freshName("r")
+      s"""
+        final double $r = graft.functions.VecDecimal.sqDist18r6($a, $b);
+        if (java.lang.Double.isNaN($r)) {
+          ${ev.isNull} = true;
+        } else {
+          ${ev.value} = $r;
+        }
+      """
+    })
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): VecSqDist18R6 = copy(newLeft, newRight)
+}
+
 object VecOps {
   def dot(a: Column, b: Column): Column =
     Bridge.col(VecDot(Bridge.expr(a), Bridge.expr(b)))
@@ -244,4 +329,8 @@ object VecOps {
 
   def sqDist18(a: Column, b: Column): Column =
     Bridge.col(VecSqDist18(Bridge.expr(a), Bridge.expr(b)))
+
+  /** `round(sqDist18(a, b), 6)` as one fused expression. */
+  def sqDist18r6(a: Column, b: Column): Column =
+    Bridge.col(VecSqDist18R6(Bridge.expr(a), Bridge.expr(b)))
 }

@@ -31,20 +31,15 @@ import org.apache.spark.sql.functions._
   */
 object LloydKmeans {
 
-  /** Exact squared L2 distance of an array column to a literal centroid
-    * (per-term scale-18 decimal accumulation, unrounded double out) —
-    * the native codegen'd fold, bit-identical to the interpreted HOF
-    * formulation (graft.functions.VecDecimal contract). */
-  private def sqDistExact(vec: Column, centroid: Array[Double]): Column =
-    graft.functions.VecOps.sqDist18(vec, typedlit(centroid.toSeq))
-
   /** Nearest-centroid `(d, cluster)` struct for a vector column:
-    * (round-6 distance, lowest id) tiebreak — the shared cross-engine
-    * convention. */
+    * (round-6 exact-decimal distance, lowest id) tiebreak — the shared
+    * cross-engine convention, one fused `vec_sqdist18_r6` per centroid
+    * (graft.functions.VecDecimal contract). */
   private def assignStruct(vec: Column, cents: IndexedSeq[Array[Double]])
       : Column = {
     val structs = cents.indices.map { c =>
-      struct(round(sqDistExact(vec, cents(c)), 6).as("d"),
+      struct(graft.functions.VecOps.sqDist18r6(vec,
+        typedlit(cents(c).toSeq)).as("d"),
         lit(c).as("cluster"))
     }
     element_at(array_sort(array(structs: _*)), 1)
@@ -82,31 +77,119 @@ object LloydKmeans {
 
   /** Decimal distance terms (row length × k) in one partition of a
     * spread fit, and the most a fit folds on the driver. A Lloyd round
-    * costs 1.07 µs per term (measured at k = 4 over 6- and 64-dim rows,
-    * 4-core host) against J ≈ 40–60 ms for the job a spread round rides
-    * in ([[Hmm.PointsPerPart]] has the job measurements), so two tasks
-    * beat the driver fold only above 2J/c ≈ 75–110k terms; 96k terms is
-    * ~100 ms of arithmetic per partition. */
-  private[graft] val TermsPerPart = 98304L
+    * costs 7–13 ns per term with the certified round-6 kernel and the
+    * pre-split decimal points (warm driver rounds at k = 4 over 64-dim
+    * sf0.01 embeddings and 6-dim rows, 4-core host; the per-point
+    * BigDecimal terms they replace cost 0.6–1.1 µs) against J ≈ 20–60
+    * ms for the job a spread round rides in (21.5 ms median for a warm
+    * one-task job on that host; [[Hmm.PointsPerPart]] has the earlier
+    * job measurements), so two tasks beat the driver fold only above
+    * 2J/c ≈ 3–16 M terms; 4 M terms is ≤ 55 ms of arithmetic per
+    * partition and ~24 MB of cached points at k = 4. */
+  private[graft] val TermsPerPart = 1L << 22
 
-  /** The `(pid, v)` rows of a fit as its rounds, vectors as primitive
-    * arrays ([[FitRounds.doubles]]), weighed in decimal terms (row
-    * length × k). */
+  /** One fit row: the vector, null elements as NaN
+    * ([[FitRounds.doubles]]), and each coordinate's `dec18` split once
+    * into exact scale-18 integer parts: `whole(j)` = floor(x) and
+    * `frac(j)` = (x − floor(x))·10¹⁸ ∈ [0, 10¹⁸). `frac(j)` is
+    * [[NullTerm]] where `dec18` is null (NaN, ±Inf, a null element,
+    * more than 38 digits) and [[WideTerm]] where floor(x) does not fit
+    * a long (the round then re-derives `dec18(v(j))`). */
+  private[graft] final case class Point(pid: Long, v: Array[Double],
+      whole: Array[Long], frac: Array[Long])
+
+  private val NullTerm = -1L
+  private val WideTerm = -2L
+  private val One18 = 1000000000000000000L
+
+  private[graft] object Point {
+    def apply(pid: Long, v: Array[Double]): Point = {
+      val whole = new Array[Long](v.length)
+      val frac = new Array[Long](v.length)
+      var j = 0
+      while (j < v.length) {
+        val b = graft.functions.VecDecimal.dec18(v(j))
+        if (b == null) frac(j) = NullTerm
+        else {
+          val w = b.setScale(0, java.math.RoundingMode.FLOOR)
+          if (w.unscaledValue.bitLength < 64) {
+            whole(j) = w.longValueExact
+            frac(j) = b.subtract(w).unscaledValue.longValueExact
+          } else frac(j) = WideTerm
+        }
+        j += 1
+      }
+      Point(pid, v, whole, frac)
+    }
+  }
+
+  /** An exact Σ of scale-18 decimals as integer parts (Σ whole, Σ frac
+    * with carries past 10¹⁸), plus a BigDecimal for wide terms and
+    * long overflow; `terms` counts the non-null terms added. */
+  private final class DecSum extends Serializable {
+    private var whole = 0L
+    private var frac = 0L
+    private var wide: java.math.BigDecimal = null
+    private var terms = 0L
+
+    def add(w: Long, f: Long): Unit = { terms += 1; addParts(w, f) }
+
+    def addWide(b: java.math.BigDecimal): Unit = { terms += 1; addBig(b) }
+
+    def merge(o: DecSum): Unit = {
+      terms += o.terms
+      addParts(o.whole, o.frac)
+      if (o.wide != null) addBig(o.wide)
+    }
+
+    /** The sum (null without terms) at scale 18. */
+    def value: java.math.BigDecimal =
+      if (terms == 0) null
+      else {
+        val v = java.math.BigDecimal.valueOf(whole)
+          .add(java.math.BigDecimal.valueOf(frac, 18))
+        if (wide == null) v else v.add(wide)
+      }
+
+    private def addParts(w: Long, f: Long): Unit = {
+      frac += f // both < 10¹⁸: no long overflow before the carry
+      if (frac >= One18) { frac -= One18; addWhole(1L) }
+      addWhole(w)
+    }
+
+    private def addWhole(w: Long): Unit = {
+      val r = whole + w
+      if (((whole ^ r) & (w ^ r)) < 0) { // long overflow: spill exactly
+        addBig(new java.math.BigDecimal(w))
+      } else whole = r
+    }
+
+    private def addBig(b: java.math.BigDecimal): Unit =
+      wide = if (wide == null) b.setScale(18) else wide.add(b)
+  }
+
+  /** The `(pid, v)` rows of a fit as its rounds ([[Point]]s), weighed in
+    * decimal terms (row length × k). */
   private[graft] def points(pv: DataFrame, k: Int, iters: Int,
-      perPart: Long = TermsPerPart): FitRounds[(Long, Array[Double])] =
+      perPart: Long = TermsPerPart): FitRounds[Point] =
     FitRounds("lloyd", iters,
-      pv.rdd.map(r => (r.getLong(0), FitRounds.doubles(r.getSeq[Any](1)))),
-      (p: (Long, Array[Double])) => p._2.length.toLong * k, perPart)
+      pv.rdd.map(r => Point(r.getLong(0),
+        FitRounds.doubles(r.getSeq[Any](1)))),
+      (p: Point) => p.v.length.toLong * k, perPart)
+
+  /** The seed centroids: the vectors with pid < k, by pid. */
+  private[graft] def seeds(rounds: FitRounds[Point], k: Int)
+      : IndexedSeq[Array[Double]] =
+    rounds.collect { case p if p.pid < k => (p.pid, p.v) }
+      .sortBy(_._1).map(_._2.clone())
 
   /** Up to `iters` Lloyd rounds from the seed slice (first `k` ids). A
     * round is a pure function of (points, centroids), so once a round
     * returns its input centroids bitwise every later round would too:
     * the loop stops there with the same result `iters` rounds give. */
-  private[graft] def centroids(rounds: FitRounds[(Long, Array[Double])],
+  private[graft] def centroids(rounds: FitRounds[Point],
       k: Int, iters: Int): IndexedSeq[Array[Double]] = {
-    var cents: IndexedSeq[Array[Double]] = rounds
-      .collect { case (pid, v) if pid < k => (pid, v) }
-      .sortBy(_._1).map(_._2.clone())
+    var cents = seeds(rounds, k)
     require(cents.length == k, s"need $k seed vectors with pid < $k")
     var i = 0
     var fixed = false
@@ -123,52 +206,50 @@ object LloydKmeans {
     * retired per-round column program, bit-identical by construction
     * (LloydKmeansSpec locks the full fit against the unrolled oracle
     * and the column-program round):
-    *  - assignment: argmin over clusters of round-6
-    *    [[graft.functions.VecDecimal.sqDist18]] with the
-    *    array_sort struct convention — a NULL distance (overflow /
-    *    null element / length mismatch) sorts FIRST (InterpretedOrdering
-    *    nulls-first within struct fields), ties break on lowest
-    *    cluster id;
+    *  - assignment: argmin over clusters of
+    *    [[graft.functions.VecDecimal.sqDist18r6]] (the round-6 exact
+    *    distance) with the array_sort struct convention — a NULL
+    *    distance (overflow / null element / length mismatch) sorts
+    *    FIRST (InterpretedOrdering nulls-first within struct fields),
+    *    ties break on lowest cluster id;
     *  - update: per (cluster, dim) mean = CAST(Σ CAST(x AS
-    *    DECIMAL(38,18)) AS DOUBLE) / count — decimal sums are exact and
-    *    order-free, so partials merge without drift; a group's
-    *    count includes null elements (they just add nothing), and an
+    *    DECIMAL(38,18)) AS DOUBLE) / count — the points carry each
+    *    cast as exact integer parts, so the sums are exact and
+    *    order-free and partials merge without drift; a group's count
+    *    includes null elements (they just add nothing), and an
     *    all-null or precision-overflowed sum leaves the previous
     *    centroid coordinate in place (the column program would have
     *    NPE'd on that null cell — reachable only at |sum| ≥ 1e20,
     *    outside what the parity specs can cover; the graceful carry is
     *    intentional);
     *  - empty clusters keep their previous centroid. */
-  private[graft] def lloydRound(rounds: FitRounds[(Long, Array[Double])],
+  private[graft] def lloydRound(rounds: FitRounds[Point],
       i: Int, cents: IndexedSeq[Array[Double]]): IndexedSeq[Array[Double]] = {
     val k = cents.length
     val dim = cents.head.length
     val cArr = cents.map(_.clone).toArray
     val (sums, counts) = rounds.round(i)(() =>
-      (Array.fill[java.math.BigDecimal](k, dim)(null),
-        Array.ofDim[Long](k, dim))) { case (acc @ (s, n), (_, v)) =>
-      val c = assignJvm(v, cArr)
-      var j = 0
-      val len = math.min(v.length, dim)
-      while (j < len) {
-        n(c)(j) += 1
-        // a null element rides as NaN; dec18(NaN) is null, exactly
-        // like the column program's non-ANSI decimal cast of a null
-        val b = graft.functions.VecDecimal.dec18(v(j))
-        if (b != null)
-          s(c)(j) = if (s(c)(j) == null) b else s(c)(j).add(b)
-        j += 1
-      }
-      acc
+      (Array.fill(k, dim)(new DecSum), Array.ofDim[Long](k, dim))) {
+      case (acc @ (s, n), p) =>
+        val c = assignJvm(p.v, cArr)
+        var j = 0
+        val len = math.min(p.v.length, dim)
+        while (j < len) {
+          n(c)(j) += 1
+          val f = p.frac(j)
+          if (f >= 0) s(c)(j).add(p.whole(j), f)
+          else if (f == WideTerm)
+            s(c)(j).addWide(graft.functions.VecDecimal.dec18(p.v(j)))
+          j += 1
+        }
+        acc
     } { case ((s1, n1), (s2, n2)) =>
       var c = 0
       while (c < k) {
         var j = 0
         while (j < dim) {
           n1(c)(j) += n2(c)(j)
-          if (s2(c)(j) != null)
-            s1(c)(j) =
-              if (s1(c)(j) == null) s2(c)(j) else s1(c)(j).add(s2(c)(j))
+          s1(c)(j).merge(s2(c)(j))
           j += 1
         }
         c += 1
@@ -181,9 +262,9 @@ object LloydKmeans {
       while (j < dim) {
         // the column program's sum(decimal(38,18)) nulls on precision
         // overflow (non-ANSI); mirror it before the double cast
-        if (counts(c)(j) > 0 && sums(c)(j) != null
-            && sums(c)(j).precision <= 38)
-          next(j) = sums(c)(j).doubleValue / counts(c)(j).toDouble
+        val sum = sums(c)(j).value
+        if (counts(c)(j) > 0 && sum != null && sum.precision <= 38)
+          next(j) = sum.doubleValue / counts(c)(j).toDouble
         j += 1
       }
       next
@@ -191,31 +272,22 @@ object LloydKmeans {
   }
 
   /** Nearest-centroid index under the column program's exact tiebreak
-    * (see [[lloydRound]]). */
-  private[ml] def assignJvm(v: Array[Double],
+    * (see [[lloydRound]]); the distance is the struct's `d` field, null
+    * as NaN. */
+  private def assignJvm(v: Array[Double],
       cents: Array[Array[Double]]): Int = {
     var best = 0
-    var bestD: java.lang.Double = distJvm(v, cents(0))
+    var bestD = graft.functions.VecDecimal.sqDist18r6(v, cents(0))
     var c = 1
     while (c < cents.length) {
-      val d = distJvm(v, cents(c))
+      val d = graft.functions.VecDecimal.sqDist18r6(v, cents(c))
       val better =
-        if (d == null) bestD != null // null distance sorts first
-        else bestD != null && d.doubleValue < bestD.doubleValue
+        if (d.isNaN) !bestD.isNaN // null distance sorts first
+        else !bestD.isNaN && d < bestD
       if (better) { best = c; bestD = d }
       c += 1
     }
     best
-  }
-
-  /** round-6 exact-decimal squared distance (the struct's `d` field):
-    * null (carried as NaN) propagates. */
-  private[ml] def distJvm(v: Array[Double],
-      cent: Array[Double]): java.lang.Double = {
-    val sq = graft.functions.VecDecimal.sqDist18(v, cent)
-    if (sq == null) null
-    else java.lang.Double.valueOf(
-      graft.functions.VecDecimal.roundD(sq.doubleValue, 6))
   }
 
   /** Unrolled DuckDB oracle for [[fit]] over the `embeddings` table:

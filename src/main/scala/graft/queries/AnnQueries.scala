@@ -2149,8 +2149,7 @@ object AnnQueries extends QueryModule {
         .select(col("vec_id").as("qid"), col("yr").as("qy"))
       val d2 = base.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("vid"),
-          round(graft.functions.VecOps.sqDist18(col("yr"), col("qy")), 6)
-            .as("d2"))
+          graft.functions.VecOps.sqDist18r6(col("yr"), col("qy")).as("d2"))
       val rp5 = d2.withColumn("rn", row_number().over(
           Window.partitionBy("qid").orderBy(col("d2"), col("vid"))))
         .filter(col("rn") <= AnnK)
@@ -2216,8 +2215,7 @@ object AnnQueries extends QueryModule {
         .select(col("vec_id").as("qid"), col("yr").as("qy"))
       val d2rp = base.join(broadcast(q), col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("vid"),
-          round(graft.functions.VecOps.sqDist18(col("yr"), col("qy")), 6)
-            .as("d2"))
+          graft.functions.VecOps.sqDist18r6(col("yr"), col("qy")).as("d2"))
       val short = d2rp.withColumn("rn", row_number().over(
           Window.partitionBy("qid").orderBy(col("d2"), col("vid"))))
         .filter(col("rn") <= RerankR).select("qid", "vid")
@@ -2227,8 +2225,7 @@ object AnnQueries extends QueryModule {
         .join(broadcast(emb.filter(col("vec_id") < AnnQ)
           .select(col("vec_id").as("qid"), col("v").as("qv"))), "qid")
         .select(col("qid"), col("vid"),
-          round(graft.functions.VecOps.sqDist18(col("cv"), col("qv")), 6)
-            .as("d2"))
+          graft.functions.VecOps.sqDist18r6(col("cv"), col("qv")).as("d2"))
       val rr5 = exact.withColumn("rn", row_number().over(
           Window.partitionBy("qid").orderBy(col("d2"), col("vid"))))
         .filter(col("rn") <= AnnK)

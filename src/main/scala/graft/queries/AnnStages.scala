@@ -138,10 +138,9 @@ object AnnStages {
         .select(col("vec_id").as("qid"), col("rv").as("qrv"),
           col("nrm").as("qnrm"))
       val probe = q.crossJoin(broadcast(centDf))
-        .withColumn("d2", graft.functions.VecOps.sqDist18(col("qrv"),
-          col("cv")))
         .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(round(col("d2"), 6), col("cell"))))
+          .orderBy(graft.functions.VecOps.sqDist18r6(col("qrv"),
+            col("cv")), col("cell"))))
         .filter(col("rn") <= IvfNProbe)
         .select("qid", "qrv", "qnrm", "cell")
       val cands = probe.join(
@@ -490,21 +489,21 @@ object AnnStages {
   private[queries] def exactTop5(s: SparkSession, dir: String): DataFrame =
     Stage.cached(s, dir, "exact_l2_top5") {
       // the cosineTopK shape: broadcast the bounded query slice and
-      // fold each pair with the native exact-decimal VecSqDist18
-      // expression — N×AnnQ codegen'd rows instead of exploding to
-      // N×d×AnnQ rows through a per-dim join + hash aggregate. The
-      // per-pair d2 is the same Σ CAST((x−qx)² AS DECIMAL(38,18))
-      // (the VecDecimal contract the Lloyd/PQ encode chains already
-      // hash-match), so every rounded value is bit-identical.
+      // fold each pair with the fused round-6 exact-decimal
+      // VecSqDist18R6 expression — N×AnnQ codegen'd rows instead of
+      // exploding to N×d×AnnQ rows through a per-dim join + hash
+      // aggregate. The per-pair d2 is round-6 of the same Σ CAST((x−qx)²
+      // AS DECIMAL(38,18)) (the VecDecimal contract the Lloyd/PQ encode
+      // chains already hash-match), so every rounded value is
+      // bit-identical.
       val e = t(s, dir, "embeddings").select(col("vec_id"),
         Similarity.asDouble(col("embedding")).as("v"))
       val q = e.filter(col("vec_id") < AnnQ)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
       val d2full = e.join(broadcast(q), col("qid") =!= col("vec_id"))
         .select(col("qid"), col("vec_id").as("vid"),
-          round(graft.functions.VecOps.sqDist18(col("v"), col("qv")),
-            6).as("d2"))
-      // nulls LAST: VecSqDist18 yields null on dirty embeddings
+          graft.functions.VecOps.sqDist18r6(col("v"), col("qv")).as("d2"))
+      // nulls LAST: the distance is null on dirty embeddings
       // (null element / length mismatch / per-term overflow), and an
       // ascending-nulls-first window would let such a pair into the
       // TRUTH set. Unreachable on clean fixtures (oracle hash

@@ -646,20 +646,16 @@ object MlQueries extends QueryModule {
         .filter(col("vec_id") < cap).select("vec_id", "cluster")
       def decSum(c: org.apache.spark.sql.Column) =
         sum(c.cast("decimal(38,18)")).cast("double")
-      // exact per-pair euclidean distance: decimal per-term sum over
-      // dims (order-free; every Add keeps scale 18 exactly — 24,18 +
-      // 32,18 → 33,18 — so this equals DuckDB's SUM(DECIMAL(38,18))
-      // bit-for-bit), sqrt of the identical double on both sides
-      val sqd = aggregate(
-        zip_with(col("va"), col("vb"), (x, y) => (x - y) * (x - y)),
-        lit(java.math.BigDecimal.ZERO).cast("decimal(32,18)"),
-        (acc, t) => (acc + t.cast("decimal(24,18)"))
-          .cast("decimal(32,18)"))
+      // exact per-pair euclidean distance: the native scale-18
+      // per-term fold over dims (order-free, so it equals DuckDB's
+      // SUM(DECIMAL(38,18)) bit-for-bit; graft.functions.VecDecimal
+      // contract), sqrt of the identical double on both sides
       val pairs = ev.select(col("vec_id").as("ia"), col("v").as("va"))
         .join(broadcast(ev.select(col("vec_id").as("ib"),
           col("v").as("vb"))), col("ia") =!= col("ib"))
         .select(col("ia"), col("ib"),
-          sqrt(sqd.cast("double")).as("dist"))
+          sqrt(graft.functions.VecOps.sqDist18(col("va"), col("vb")))
+            .as("dist"))
       val pc = pairs
         .join(a.select(col("vec_id").as("ib"), col("cluster").as("cj")),
           Seq("ib"))

@@ -200,10 +200,13 @@ object Relational extends QueryModule {
       SELECT o_orderstatus, count(*) AS n,
              CAST(count(*) AS DOUBLE) / SUM(count(*)) OVER () AS share
       FROM orders GROUP BY 1 ORDER BY 1""")) { (s, dir) =>
-      t(s, dir, "orders")
+      val byStatus = t(s, dir, "orders")
         .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
-        .withColumn("share",
-          col("n").cast("double") / sum(col("n")).over(Window.partitionBy()))
+      // the total is one exact long sum attached by broadcast (an
+      // unpartitioned window would pull every group into one task)
+      byStatus.crossJoin(broadcast(byStatus.agg(sum(col("n")).as("total"))))
+        .select(col("o_orderstatus"), col("n"),
+          (col("n").cast("double") / col("total")).as("share"))
         .orderBy("o_orderstatus")
     },
 

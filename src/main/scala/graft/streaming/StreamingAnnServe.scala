@@ -67,6 +67,12 @@ object StreamingAnnServe {
   private def sqDistExact(vec: Column, centroid: Array[Double]): Column =
     graft.functions.VecOps.sqDist18(vec, typedlit(centroid.toSeq))
 
+  /** `round(sqDistExact(vec, centroid), 6)` as the fused
+    * [[graft.functions.VecOps.sqDist18r6]] — the cell assignment and
+    * probe-order distance. */
+  private def sqDistR6(vec: Column, centroid: Array[Double]): Column =
+    graft.functions.VecOps.sqDist18r6(vec, typedlit(centroid.toSeq))
+
   /** Batch index build: `(vid, cell, code_0..code_{m-1})` per corpus
     * vector — coarse cell by round-6 + lowest-id tiebreak (identical to
     * `Similarity.ivfPqTopK`'s assignment), PQ codes via
@@ -77,8 +83,7 @@ object StreamingAnnServe {
       codebook: StreamingEncode.Codebook): DataFrame = {
     val v = col("embedding").cast("array<double>")
     val cellStructs = cells.indices.map { c =>
-      struct(round(sqDistExact(v, cells(c)), 6).as("d"),
-        lit(c).as("cell"))
+      struct(sqDistR6(v, cells(c)).as("d"), lit(c).as("cell"))
     }
     // array_sort on (d, cell) structs IS the (round-6 distance,
     // lowest-id) tiebreak ordering
@@ -103,8 +108,7 @@ object StreamingAnnServe {
     val v = col("embedding").cast("array<double>")
     // probe order: nProbe nearest cells by (round-6 d2, cell id)
     val cellStructs = cells.indices.map { c =>
-      struct(round(sqDistExact(v, cells(c)), 6).as("d"),
-        lit(c).as("cell"))
+      struct(sqDistR6(v, cells(c)).as("d"), lit(c).as("cell"))
     }
     val probes = slice(array_sort(array(cellStructs: _*)), 1, nProbe)
     // ADC tables: qd2_mi[c] = exact d2 of the query's mi-slice to
@@ -154,8 +158,7 @@ object StreamingAnnServe {
       codebook: StreamingEncode.Codebook): DataFrame = {
     val v = col("embedding").cast("array<double>")
     val cellStructs = cells.indices.map { c =>
-      struct(round(sqDistExact(v, cells(c)), 6).as("d"),
-        lit(c).as("cell"))
+      struct(sqDistR6(v, cells(c)).as("d"), lit(c).as("cell"))
     }
     val centLit = typedlit(cells.map(_.toSeq))
     val resid = emb
@@ -195,8 +198,7 @@ object StreamingAnnServe {
     val subDim = codebook.head.head.length
     val v = col("embedding").cast("array<double>")
     val cellStructs = cells.indices.map { c =>
-      struct(round(sqDistExact(v, cells(c)), 6).as("d"),
-        lit(c).as("cell"))
+      struct(sqDistR6(v, cells(c)).as("d"), lit(c).as("cell"))
     }
     val probes = slice(array_sort(array(cellStructs: _*)), 1, nProbe)
     val centLit = typedlit(cells.map(_.toSeq))

@@ -60,14 +60,14 @@ object StreamingEncode {
       val slice = org.apache.spark.sql.functions.slice(
         v, mi * subDim + 1, subDim)
       val dists = codebook(mi).indices.map { c =>
-        // per-term exact scale-18 sum == batch pqParts' formulation
-        // (sum(cast((x-y)² as decimal(38,18)))), run as the native
-        // codegen'd fold (graft.functions.VecDecimal contract: term
-        // rounding, overflow→null, and exact accumulation are
-        // bit-identical to the interpreted HOF chain this replaced) —
-        // no rounding anywhere before the shared round-6 tiebreak
-        round(graft.functions.VecOps.sqDist18(slice,
-          typedlit(codebook(mi)(c).toSeq)), 6)
+        // round-6 of the per-term exact scale-18 sum == batch
+        // pqParts' formulation (round(sum(cast((x-y)² as
+        // decimal(38,18))), 6)), run as the fused certified kernel
+        // (graft.functions.VecDecimal contract: term rounding,
+        // overflow→null and exact accumulation are bit-identical to the
+        // interpreted HOF chain, then the shared round-6 tiebreak)
+        graft.functions.VecOps.sqDist18r6(slice,
+          typedlit(codebook(mi)(c).toSeq))
       }
       val best = dists.reduce((a, b) => least(a, b))
       // first centroid attaining the min wins (id tiebreak)

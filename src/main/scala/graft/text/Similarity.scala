@@ -622,8 +622,8 @@ object Similarity {
     val v = asDouble(col("embedding"))
     val cellStructs = cells.indices.map { c =>
       struct(
-        round(graft.functions.VecOps.sqDist18(v,
-          typedlit(cells(c).toSeq)), 6).as("d"),
+        graft.functions.VecOps.sqDist18r6(v,
+          typedlit(cells(c).toSeq)).as("d"),
         lit(c).as("cell"))
     }
     val centLit = typedlit(cells.map(_.toSeq))
@@ -774,9 +774,10 @@ object Similarity {
     * production IVF-PQ server runs to buy back the recall quantization
     * costs: the top-R candidates per query (already ADC-ranked, R ≈
     * 2–10×k) join their STORED full vectors, exact squared-L2 re-scores
-    * them (the `VecSqDist18` exact-decimal fold — bit-identical to the
-    * per-term DECIMAL(38,18) sums the ground-truth oracle uses), and
-    * the best k by (round-6 d2, id) survive. Scale shape: the join
+    * them (the fused round-6 `VecSqDist18R6` exact-decimal fold —
+    * bit-identical to round-6 of the per-term DECIMAL(38,18) sums the
+    * ground-truth oracle uses), and the best k by (round-6 d2, id)
+    * survive. Scale shape: the join
     * touches only queries×R full vectors (candidate-keyed equi-join
     * against the vector store), never the corpus — ADC pruned the scan,
     * re-rank pays full-vector cost only on the short list.
@@ -790,8 +791,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("vid"), col("v")), Seq("vid"))
       .join(broadcast(q), Seq("qid"))
       .select(col("qid"), col("vid"), col("adc"),
-        round(graft.functions.VecOps.sqDist18(col("qv"), col("v")), 6)
-          .as("d2"))
+        graft.functions.VecOps.sqDist18r6(col("qv"), col("v")).as("d2"))
     val w = Window.partitionBy("qid").orderBy(col("d2"), col("vid"))
     exact.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
@@ -828,8 +828,7 @@ object Similarity {
       asDouble(col("embedding")).as("v"))
     val exact = topR.join(x, Seq("vid")).join(broadcast(q), Seq("qid"))
       .select(part ++ Seq(col("vid"), col("adc"),
-        round(graft.functions.VecOps.sqDist18(col("qv"), col("v")), 6)
-          .as("d2")): _*)
+        graft.functions.VecOps.sqDist18r6(col("qv"), col("v")).as("d2")): _*)
     val w = Window.partitionBy(part: _*).orderBy(col("d2"), col("vid"))
     exact.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)

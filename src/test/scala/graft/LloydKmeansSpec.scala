@@ -95,9 +95,7 @@ class LloydKmeansSpec extends SparkSpec {
         .otherwise(col("embedding").cast("array<double>")).as("v"))
     val rounds = LloydKmeans.points(pts, 4, 4)
     try {
-      var cents: IndexedSeq[Array[Double]] = rounds
-        .collect { case (pid, v) if pid < 4 => (pid, v) }
-        .sortBy(_._1).map(_._2.clone())
+      var cents = LloydKmeans.seeds(rounds, 4)
       // k > points in some cluster on later rounds exercises the
       // empty-cluster carry; chain 4 rounds so drift would compound
       for (round <- 1 to 4) {
@@ -121,20 +119,135 @@ class LloydKmeansSpec extends SparkSpec {
       var a = IndexedSeq.empty[Array[Double]]
       var b = IndexedSeq.empty[Array[Double]]
       assert(Jobs.count(spark) {
-        a = LloydKmeans.lloydRound(spread, 1,
-          spread.collect { case (pid, v) if pid < 4 => (pid, v) }
-            .sortBy(_._1).map(_._2.clone()))
+        a = LloydKmeans.lloydRound(spread, 1, LloydKmeans.seeds(spread, 4))
       } == 2)
       assert(Jobs.count(spark) {
-        b = LloydKmeans.lloydRound(folded, 1,
-          folded.collect { case (pid, v) if pid < 4 => (pid, v) }
-            .sortBy(_._1).map(_._2.clone()))
+        b = LloydKmeans.lloydRound(folded, 1, LloydKmeans.seeds(folded, 4))
       } == 0)
       assert(a.map(_.toSeq) == b.map(_.toSeq))
       val viaSpread = LloydKmeans.centroids(spread, 4, 6)
       val viaFold = LloydKmeans.centroids(folded, 4, 6)
       assert(viaSpread.map(_.toSeq) == viaFold.map(_.toSeq))
     } finally { spread.close(); folded.close() }
+  }
+
+  /** The Lloyd fit as it ran before the certified kernel: per-point,
+    * per-round BigDecimal terms for both the round-6 distance and the
+    * coordinate sums, on plain `(pid, v)` rows (null elements as NaN).
+    * Returns the centroids after every round and the final
+    * assignments. The parity reference for the kernel and the
+    * pre-split decimal points. */
+  private def referenceFit(pts: IndexedSeq[(Long, Array[Double])], k: Int,
+      iters: Int): (Seq[IndexedSeq[Array[Double]]], Seq[(Long, Int)]) = {
+    import graft.functions.VecDecimal
+    def dist(v: Array[Double], c: Array[Double]): java.lang.Double = {
+      val sq = VecDecimal.sqDist18(v, c)
+      if (sq == null) null
+      else java.lang.Double.valueOf(VecDecimal.roundD(sq.doubleValue, 6))
+    }
+    def assign(v: Array[Double], cents: IndexedSeq[Array[Double]]): Int = {
+      var best = 0
+      var bestD = dist(v, cents(0))
+      for (c <- 1 until cents.length) {
+        val d = dist(v, cents(c))
+        val better =
+          if (d == null) bestD != null
+          else bestD != null && d.doubleValue < bestD.doubleValue
+        if (better) { best = c; bestD = d }
+      }
+      best
+    }
+    var cents = pts.filter(_._1 < k).sortBy(_._1).map(_._2.clone())
+    val history = (1 to iters).map { _ =>
+      val dim = cents.head.length
+      val sums = Array.fill[java.math.BigDecimal](k, dim)(null)
+      val counts = Array.ofDim[Long](k, dim)
+      pts.foreach { case (_, v) =>
+        val c = assign(v, cents)
+        for (j <- 0 until math.min(v.length, dim)) {
+          counts(c)(j) += 1
+          val b = VecDecimal.dec18(v(j))
+          if (b != null)
+            sums(c)(j) = if (sums(c)(j) == null) b else sums(c)(j).add(b)
+        }
+      }
+      cents = IndexedSeq.tabulate(k) { c =>
+        val next = cents(c).clone()
+        for (j <- 0 until dim)
+          if (counts(c)(j) > 0 && sums(c)(j) != null
+              && sums(c)(j).precision <= 38)
+            next(j) = sums(c)(j).doubleValue / counts(c)(j).toDouble
+        next
+      }
+      cents
+    }
+    (history, pts.map { case (pid, v) => (pid, assign(v, cents)) })
+  }
+
+  private def bitsOf(cs: IndexedSeq[Array[Double]]) =
+    cs.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq)
+
+  /** Every round of [[LloydKmeans.lloydRound]] and the final
+    * assignment of [[LloydKmeans.fit]] against [[referenceFit]]. */
+  private def assertMatchesReference(pts: IndexedSeq[(Long, Array[Double])],
+      k: Int, iters: Int): Unit = {
+    val (history, refAssign) = referenceFit(pts, k, iters)
+    val rounds = graft.ml.FitRounds.local("lloyd", iters,
+      pts.map { case (pid, v) => LloydKmeans.Point(pid, v) })
+    var cents = LloydKmeans.seeds(rounds, k)
+    history.zipWithIndex.foreach { case (want, i) =>
+      cents = LloydKmeans.lloydRound(rounds, i + 1, cents)
+      assert(bitsOf(cents) == bitsOf(want), s"round ${i + 1} diverged")
+    }
+    val df = pts.map { case (pid, v) =>
+      (pid, v.toSeq.map(x => if (x.isNaN) None else Some(x)))
+    }.toDF("pid", "v")
+    val (assign, fitted) = LloydKmeans.fit(df, "pid", "v", k, iters)
+    assert(bitsOf(fitted) == bitsOf(history.last))
+    val got = assign.as[(Long, Int)].collect().sorted.toSeq
+    assert(got == refAssign.sorted, "final assignments diverged")
+  }
+
+  test("the certified kernel and pre-split decimal sums reproduce the " +
+      "per-point BigDecimal fit bit for bit on sf0.001 embeddings") {
+    val pts = emb.select(col("vec_id"),
+        col("embedding").cast("array<double>"))
+      .as[(Long, Seq[Double])].collect()
+      .map { case (pid, v) => (pid, v.toArray) }.toIndexedSeq
+    assertMatchesReference(pts, k = 4, iters = 6)
+  }
+
+  test("the certified kernel and pre-split decimal sums reproduce the " +
+      "per-point BigDecimal fit on dirty points: a NaN element, " +
+      "duplicates, exact ties, half-point distances, wide and " +
+      "overflowing coordinate sums") {
+    val rnd = new scala.util.Random(5)
+    val grid = (0 until 60).map { i =>
+      (10L + i, Array.fill(3)((rnd.nextInt(41) - 20) / 10.0))
+    }
+    val dirty = IndexedSeq(
+      0L -> Array(0.0, 0.0, 0.0), 1L -> Array(2.0, 0.0, 0.0),
+      2L -> Array(0.0, 2.0, 0.0), 3L -> Array(2.0, 2.0, 12.5),
+      100L -> Array(1.0, 0.0, 0.0),      // exact tie between 0 and 1
+      101L -> Array(1.0, 1.0, 0.0),      // tie between 0..2
+      102L -> Array(1.0, 1.0, 0.0),      // duplicate point
+      102L -> Array(1.0, 1.0, 0.0),      // duplicate row
+      103L -> Array(Double.NaN, 1.0, 0.0), // null element
+      104L -> Array(0.0005, 0.0, 0.0),   // d² = 2.5e-7: a half point
+      105L -> Array(math.sqrt(1.5e-6), 0.0, 0.0),
+      106L -> Array(-9.75, 31.0, 12.5),
+      107L -> Array(0.1, 0.2, 0.3),
+      108L -> Array(2.0, 2.0, 1e-19))
+    assertMatchesReference(dirty ++ grid, k = 4, iters = 5)
+    // coordinates whose decimal needs more than a long (|x| ≥ 2⁶³),
+    // sums that overflow a long or 38 digits, and a null term: every
+    // distance to them is null, so the sums are what is compared
+    val wide = IndexedSeq(
+      0L -> Array(1.0, 5e18), 1L -> Array(2.0, 1.0),
+      2L -> Array(3.0, 6e18), 3L -> Array(4.0, 1e19),
+      4L -> Array(5e19, -7e18), 5L -> Array(-9.5e19, 1e20),
+      6L -> Array(Double.PositiveInfinity, 2.5), 7L -> Array(1.5, 9.9e18))
+    assertMatchesReference(wide, k = 2, iters = 3)
   }
 
   test("JVM round/cast twins match the Spark expressions bit-for-bit") {
@@ -189,9 +302,7 @@ class LloydKmeansSpec extends SparkSpec {
       k = 4, iters = n)
     val (bAssign, bCents) = LloydKmeans.fit(emb, "vec_id", "embedding",
       k = 4, iters = n + 30)
-    def bits(cs: IndexedSeq[Array[Double]]) =
-      cs.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq)
-    assert(bits(aCents) == bits(bCents))
+    assert(bitsOf(aCents) == bitsOf(bCents))
     assert(aAssign.orderBy("pid").collect().toSeq
       == bAssign.orderBy("pid").collect().toSeq)
   }

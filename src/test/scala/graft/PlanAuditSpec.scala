@@ -833,4 +833,32 @@ class PlanAuditSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
     }
   }
+
+  test("round-6 centroid distances plan as the fused vec_sqdist18_r6: " +
+      "q_kmeans_lloyd's final assignment, q_e_ivfpq_res_gain's residual " +
+      "assignment and the residual index's PQ encode (audited on the " +
+      "stage builds — the registered queries read checkpointed stages)") {
+    import org.apache.spark.sql.functions.col
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val vecs = emb.filter(col("vec_id") < 8).orderBy("vec_id")
+      .select(col("embedding").cast("array<double>"))
+      .collect().map(_.getSeq[Double](0).toArray).toIndexedSeq
+    val cells = vecs.take(4)
+    val subDim = vecs.head.length / 4
+    val codebook = IndexedSeq.tabulate(4)(mi =>
+      vecs.map(_.slice(mi * subDim, (mi + 1) * subDim)))
+    val plans = Seq(
+      "lloyd final assignment" -> graft.ml.LloydKmeans.fitWithDist(emb,
+        "vec_id", "embedding", k = 4, iters = 2)._1,
+      "residual frame" -> graft.text.Similarity.residualFrame(emb, cells),
+      "residual PQ encode" -> graft.streaming.StreamingAnnServe
+        .indexOfResidual(emb, cells, codebook))
+    plans.foreach { case (name, df) =>
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("vec_sqdist18_r6("),
+        s"$name has no fused distance:\n$p")
+      assert(raw"round\(vec_sqdist18\(".r.findFirstIn(p).isEmpty,
+        s"$name still rounds an unfused vec_sqdist18:\n$p")
+    }
+  }
 }
