@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.CaseMap
 import graft.ops.{Cols, Wins}
 import org.apache.spark.sql.expressions.Window
 
@@ -28,31 +29,36 @@ object Bronze {
     * ticker hint from the filename, size/mtime for the fingerprint.
     * Driver-side Hadoop FS listing — the manifest is small (one row per
     * file); the heavy read happens later in one spark.read over the
-    * selected paths. */
+    * selected paths. The walk is `listStatus`, depth first in listing
+    * order (the order `listFiles(root, true)` yields): `listFiles`
+    * builds a `LocatedFileStatus` per entry, which reads the entry's
+    * permissions, and without native Hadoop IO that forks one `ls -ld`
+    * per file and directory. */
   def discoverFiles(spark: org.apache.spark.sql.SparkSession,
       root: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.{FileStatus, Path}
     import spark.implicits._
     val fs = new Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new Path(root), true)
     val rows = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, String, String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      val p = f.getPath.toString
-      if (p.endsWith(".txt")) {
-        val name = f.getPath.getName
-        val lower = p.toLowerCase
-        val exchange =
-          if (lower.contains("nasdaq")) "NASDAQ"
-          else if (lower.contains("nyse")) "NYSE"
-          else "UNKNOWN"
-        val tickerHint = name.stripSuffix(".txt").toUpperCase
-        rows += ((p, name, exchange, tickerHint, f.getLen,
-          f.getModificationTime))
+    def walk(st: FileStatus): Unit =
+      if (st.isDirectory) fs.listStatus(st.getPath).foreach(walk)
+      else {
+        val p = st.getPath.toString
+        if (p.endsWith(".txt")) {
+          val name = st.getPath.getName
+          val lower = p.toLowerCase
+          val exchange =
+            if (lower.contains("nasdaq")) "NASDAQ"
+            else if (lower.contains("nyse")) "NYSE"
+            else "UNKNOWN"
+          val tickerHint = name.stripSuffix(".txt").toUpperCase
+          rows += ((p, name, exchange, tickerHint, st.getLen,
+            st.getModificationTime))
+        }
       }
-    }
+    walk(fs.getFileStatus(new Path(root)))
     rows.toSeq.toDF("source_file", "source_file_name", "exchange",
         "ticker_hint", "file_size_bytes", "file_mtime_ms")
       .withColumn("fingerprint",
@@ -75,11 +81,12 @@ object Bronze {
       // normalize (transform/normalize.py:100-132): strip <>, upper,
       // non-strict casts → null on failure. translate (a char-map scan)
       // instead of regexp_replace: same semantics for fixed chars,
-      // ~2× cheaper in the hot parse path
+      // ~2× cheaper in the hot parse path. CaseMap.upper keeps ASCII
+      // values off ICU's title-case table build (its scaladoc)
       .withColumn("ticker",
-        upper(trim(translate(f(0), "<>", ""))))
+        CaseMap.upper(trim(translate(f(0), "<>", ""))))
       .withColumn("timeframe",
-        when(upper(f(1)) === "D", "D1").otherwise("UNKNOWN"))
+        when(CaseMap.upper(f(1)) === "D", "D1").otherwise("UNKNOWN"))
       .withColumn("trade_date", to_date(f(2), "yyyyMMdd"))
       .withColumn("trade_dt",
         to_timestamp(concat(f(2), lpad(coalesce(f(3), lit("0")), 6, "0")),

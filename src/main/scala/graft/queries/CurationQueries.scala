@@ -831,7 +831,8 @@ object CurationQueries extends QueryModule {
     // hash of the doc id — deterministic, so the paper's stochastic
     // resampling step is itself hash-checked. The engine plan is
     // TakeOrdered(k) over the shared weight stage (no global sort
-    // materializes); the rank window runs on the k survivors only.
+    // materializes); the k survivors are ranked by a broadcast rank
+    // join, with no unpartitioned window.
     Q("q_t_dsir_sample", Some(s"""
       WITH $dsirCtes,
       dsc AS (
@@ -855,9 +856,13 @@ object CurationQueries extends QueryModule {
         .select(col("doc_id"), col("lang"), col("logw"),
           graft.text.Dsir.gumbel(col("doc_id")).as("gk"))
         .withColumn("score", round(col("logw") + col("gk"), 6))
+      // doc_id is unique in the weight stage (one group per doc), so
+      // (score desc, doc_id) is a total order and boundedRanks'
+      // row_number equals the window's
       sc.orderBy(col("score").desc, col("doc_id")).limit(DsirK)
-        .withColumn("smp_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id"))))
+        .transform(df => graft.ops.Wins.boundedRanks(df,
+          Seq((col("score"), false), (col("doc_id"), true)),
+          outRow = Some("smp_rank")))
         .select(col("smp_rank"), col("doc_id"), col("lang"),
           round(col("logw"), 6).as("logw"),
           round(col("gk"), 6).as("gumbel"), col("score"))

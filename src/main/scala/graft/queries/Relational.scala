@@ -574,7 +574,7 @@ object Relational extends QueryModule {
           .as("price_per_size"),
         greatest(col("p_size"), lit(10)).as("size_floor"),
         least(col("p_size"), lit(40)).as("size_cap"),
-        upper(col("p_brand")).as("brand_u"),
+        graft.functions.CaseMap.upper(col("p_brand")).as("brand_u"),
         lpad(col("p_size").cast("string"), 6, "0").as("size_pad"),
         concat_ws("|", col("p_brand"), col("p_type")).as("brand_type"),
         format_string("P_%d", col("p_partkey")).as("part_tag"),

@@ -439,7 +439,7 @@ class PlanAuditSpec extends SparkSpec {
     for (q <- Seq("q_rank_norm", "q_bt_robustness", "q_t_source_kl",
         "q_w_dense_rank", "q_t_bm25", "q_e_sim_hist", "q_pagerank_trade",
         "q_cluster_hardening_full", "q_t_vocab", "q_hybrid_eval",
-        "q_hybrid_key_deltas", "q_hybrid_wf")) {
+        "q_hybrid_key_deltas", "q_hybrid_wf", "q_t_dsir_sample")) {
       val plan = SparkEntry.queries(q)(spark, dir)
         .queryExecution.optimizedPlan
       val wins = plan.collect {

@@ -25,6 +25,37 @@ class SourcesSpec extends SparkSpec {
     assert(got.forall(_.getAs[String]("fingerprint").contains("|")))
   }
 
+  test("S1: the listStatus walk lists what listFiles(root, true) lists, " +
+      "in the same order") {
+    import org.apache.hadoop.fs.Path
+    val root = Files.createTempDirectory("graft-disc-walk")
+    for ((d, f, body) <- Seq(("nyse stocks/1", "ibm.us.txt", "a\n"),
+        ("nyse stocks/1", "ge.us.txt", "bb\n"), ("nasdaq/x/y", "msft.txt",
+          "ccc\n"), ("nasdaq", "aapl.us.txt", ""), ("other", "x.txt", "d"),
+        ("nasdaq/x", "decoy.csv", "z\n"), (".", "top.txt", "t\n"))) {
+      val dir = root.resolve(d); Files.createDirectories(dir)
+      Files.writeString(dir.resolve(f), body)
+    }
+    Files.createDirectories(root.resolve("empty/deeper"))
+    val fs = new Path(root.toString)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(new Path(root.toString), true)
+    val want = scala.collection.mutable.ArrayBuffer
+      .empty[(String, String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.getPath.toString.endsWith(".txt"))
+        want += ((f.getPath.toString, f.getPath.getName, f.getLen,
+          f.getModificationTime))
+    }
+    val got = Bronze.discoverFiles(spark, root.toString)
+      .select("source_file", "source_file_name", "file_size_bytes",
+        "file_mtime_ms")
+      .as[(String, String, Long, Long)].collect().toSeq
+    assert(want.length == 6)
+    assert(got == want.toSeq)
+  }
+
   test("J1 lifecycle: selection filters, promote gating, rerun unchanged") {
     val cur = Seq(("a", 1.0), ("b", 2.0), ("c", 3.0))
       .toDF("source_file", "fingerprint")
