@@ -2,7 +2,7 @@ package graft.backtest
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Cols
+import graft.ops.{Cols, Wins}
 
 /** Trade metrics (ref: src/mf_etl/backtest/metrics.py:26-204): headline
   * summary, per-state/per-symbol breakdowns, exit-reason distribution —
@@ -92,52 +92,47 @@ object Metrics {
         FROM trades $grp)"""
   }
 
-  /** Portfolio equity curve keyed by exit bar index: mean net return per
-    * exit_rn across tickers, compounded equity, running peak, drawdown.
-    * (ref: backtest/portfolio.py:33-112; cum-product via exp·sum·log1p) */
-  def portfolio(trades: DataFrame): DataFrame = {
-    val byBar = trades.groupBy("exit_rn")
+  /** The equity curve of every cell of a keyed trade frame (the keyed
+    * Engine.simulate output), one row per (cell, exit_rn): `n_exits`,
+    * `mean_ret` (mean net return of the trades exiting on that bar),
+    * compounded `equity`, running `peak` and rounded `drawdown`.
+    * (ref: backtest/portfolio.py:33-112; cum-product via exp·sum·log1p)
+    *
+    * Returns are clamped at -99%: synthetic bars can move >100% in one
+    * step, and a real equity curve is undefined past total loss (same
+    * guard in the SQL). The log-space prefix sum and its running peak are
+    * ONE keyed distributed scan over all cells (Wins.prefixScan), never an
+    * unpartitioned window; exact DECIMAL accumulation keeps the result
+    * independent of the partition layout, and exp is monotone, so the
+    * running max of cum_log IS the running equity peak. */
+  private def curve(trades: DataFrame): DataFrame = {
+    val byBar = trades.groupBy("cell", "exit_rn")
       .agg(count(lit(1)).as("n_exits"), avg(col("net_ret")).as("mean_ret"))
-    // clamp at -99%: synthetic bars can move >100% in one step; a real
-    // equity curve is undefined past total loss (same guard in the SQL).
-    // The log-space prefix sum + running peak run as the distributed
-    // two-pass scan (Wins.globalCumSumMax), never an unpartitioned
-    // window — exact DECIMAL accumulation keeps the result independent
-    // of the partition layout; exp is monotone, so the running max of
-    // cum_log IS the running equity peak.
     val logRet = log(lit(1) + greatest(col("mean_ret"), lit(-0.99)))
-    graft.ops.Wins
-      .globalCumSumMax(byBar, Seq(col("exit_rn")), logRet,
-        "cum_log", "peak_log")
+    Wins.prefixScan(byBar, Seq("cell"), Seq(col("exit_rn")), logRet,
+        "cum_log", outPeak = Some("peak_log"))
       .withColumn("equity", exp(col("cum_log").cast("double")))
       .withColumn("peak", exp(col("peak_log").cast("double")))
-      .withColumn("drawdown", col("equity") / col("peak") - 1)
+      .withColumn("drawdown", round(col("equity") / col("peak") - 1, 9))
+  }
+
+  /** Portfolio equity curve keyed by exit bar index: the one-cell
+    * [[curve]] of all trades. */
+  def portfolio(trades: DataFrame): DataFrame =
+    curve(trades.withColumn("cell", lit("")))
       .select(col("exit_rn"), col("n_exits"),
         round(col("mean_ret"), 9).as("mean_ret"),
         round(col("equity"), 9).as("equity"),
         round(col("peak"), 9).as("peak"),
-        round(col("drawdown"), 9).as("drawdown"))
-  }
+        col("drawdown"))
 
-  /** Per-cell max drawdown over a keyed trade frame (the keyed
-    * Engine.simulate output) — the batched counterpart of
-    * `portfolio(...).agg(min(drawdown))` per cell: ONE grouped two-pass
-    * prefix scan (Wins.groupedCumSumMax) computes every cell's equity
-    * curve in a single job instead of one eager scan per cell. Identical
-    * arithmetic to [[portfolio]] (same decimal cum-log, same cast/round
-    * points), so per-cell values match the one-cell path exactly. Cells
-    * with no trades are absent ([[perCell]] fills them in). */
-  def maxDrawdownByCell(trades: DataFrame): DataFrame = {
-    val byBar = trades.groupBy("cell", "exit_rn")
-      .agg(avg(col("net_ret")).as("mean_ret"))
-    val logRet = log(lit(1) + greatest(col("mean_ret"), lit(-0.99)))
-    graft.ops.Wins
-      .groupedCumSumMax(byBar, "cell", Seq(col("exit_rn")), logRet,
-        "cum_log", "peak_log")
-      .withColumn("drawdown", round(exp(col("cum_log").cast("double"))
-        / exp(col("peak_log").cast("double")) - 1, 9))
-      .groupBy("cell").agg(min("drawdown").as("max_drawdown"))
-  }
+  /** Per-cell max drawdown over a keyed trade frame: the minimum of each
+    * cell's [[curve]] drawdown, so per-cell values match [[portfolio]] of
+    * that cell's trades exactly. All cells share one scan (its jobs do
+    * not grow with the number of cells). Cells with no trades are absent
+    * ([[perCell]] fills them in). */
+  def maxDrawdownByCell(trades: DataFrame): DataFrame =
+    curve(trades).groupBy("cell").agg(min("drawdown").as("max_drawdown"))
 
   /** SQL mirror over CTE `trades` → CTE `portfolio`. The cum sum runs in
     * DECIMAL(38,18) exactly like the Spark side, so both engines compute

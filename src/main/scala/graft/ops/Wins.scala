@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.ops.Ckpt._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Window combinators — SURVEY.md §2.5. The dominant operator family of the
   * reference: every feature builder is `expr.over(partitionBy(key) orderBy
@@ -127,10 +129,10 @@ object Wins {
     * what sorts strictly before it, so a groupBy over the order key +
     * one broadcast inequality self-join of the key table computes
     * every rank fully in parallel, with no global sort, no single
-    * partition and no eager job (unlike the two-pass [[globalCumSum]],
+    * partition and no eager job (unlike the two-pass [[prefixScan]],
     * this stays a lazy plan). O(k²) key pairs — for post-aggregation
     * report frames only (≤ a few thousand rows, the callers' shape);
-    * corpus-sized inputs should use [[globalCumSum]].
+    * corpus-sized inputs should use [[prefixScan]].
     *
     * `order` is the total-order spec as (valueColumn, ascending?)
     * pairs with Spark's default null placement (asc → nulls first,
@@ -195,195 +197,114 @@ object Wins {
       :+ "__br_kb" :+ "__br_vb" :+ "__br_n"): _*)
   }
 
-  /** Distributed global cumulative sum (and optional global rank) over a
-    * total order — the scale-safe replacement for an unpartitioned
-    * `Window.orderBy(...)`, which Spark executes as ONE task holding the
-    * entire input. Two-pass distributed prefix sum instead:
+  /** Distributed ordered prefix scan per key — the scale-safe form of
+    * `sum(value)`, its running `max` and `row_number()` over
+    * `Window.partitionBy(keys).orderBy(order)` with a cumulative ROWS
+    * frame. With `keys = Nil` that window is unpartitioned, and Spark runs
+    * it as ONE task holding the entire input. Local partials per range
+    * partition, then one global merge instead:
     *
-    *   1. range-partition on the order columns (the same parallel exchange
-    *      a global sort uses) and stamp `spark_partition_id()`;
-    *   2. aggregate per-partition value sums + row counts — ONE tiny row
-    *      per partition — and scan them on the driver into exclusive
-    *      prefix offsets (bounded by the partition count, not the data);
-    *   3. broadcast the offsets back and add a partition-LOCAL cumulative
-    *      window (`partitionBy(pid)` — embarrassingly parallel).
+    *   1. range-partition on `keys ++ order` (the same parallel exchange
+    *      a global sort uses), stamp `spark_partition_id()` and
+    *      checkpoint, so the totals job and the output pass read the same
+    *      materialized partitioning (range sampling would otherwise re-run
+    *      per job and the pid↔offset pairing could drift);
+    *   2. one window stage over `partitionBy(keys :+ pid)` computes the
+    *      local cumulative sum, its running max and the row number;
+    *   3. one collect of per-(key, partition) totals — bounded by
+    *      #keys × #partitions, not the data — is scanned on the driver
+    *      into each key's exclusive sum, peak and row-count offsets;
+    *   4. one broadcast join attaches the offsets.
     *
-    * Output is identical to the single-task window for any total order
-    * (range partition ids are monotone in the order columns). The
-    * repartitioned input is localCheckpoint'ed so the offsets job and the
-    * downstream consumer read the SAME materialized partitioning —
-    * range-partition sampling is otherwise re-evaluated per job and the
-    * pid↔offset pairing could drift between the two passes.
+    * Output equals the reference window for any total order within a key
+    * (range partition ids are monotone in `keys ++ order`), whatever the
+    * layout, because every sum is exact: an integral value sums as LONG,
+    * any other numeric as DECIMAL(38,18) (a double sum would re-associate
+    * across partition boundaries). Nulls follow the window: a null adds
+    * nothing, and `outCum` (and `outPeak`) is null only until the key's
+    * first non-null value. `outPeak` is the running max of `outCum`,
+    * `outRank` the 1-based row number within the key (LONG).
     *
-    * `valueCol` is summed as LONG (the callers accumulate token counts);
-    * `outRank` additionally emits the 1-based global row number.
-    */
-  def globalCumSum(df: DataFrame, orderCols: Seq[Column], valueCol: Column,
-      outCum: String, outRank: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pid = "__gcs_pid"
-    val v = "__gcs_v"
-    val parts = df
-      .withColumn(v, valueCol.cast("long"))
-      .repartitionByRange(orderCols: _*)
-      .withColumn(pid, spark_partition_id())
-      .graftCheckpoint()
-    val totals = parts.groupBy(col(pid))
-      .agg(coalesce(sum(v), lit(0L)).as("s"), count(lit(1)).as("c"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    var accS = 0L
-    var accC = 0L
-    val offsets = totals.map { case (p, s, c) =>
-      val row = (p, accS, accC); accS += s; accC += c; row
-    }.toSeq
-    val offsDf = offsets.toDF(pid, "__gcs_soff", "__gcs_roff")
-    val wLoc = Window.partitionBy(col(pid)).orderBy(orderCols: _*)
-    val withCum = parts.join(broadcast(offsDf), Seq(pid))
-      .withColumn(outCum, sum(col(v)).over(cum(wLoc)) + col("__gcs_soff"))
-    outRank.fold(withCum) { rn =>
-      withCum.withColumn(rn,
-        row_number().over(wLoc).cast("long") + col("__gcs_roff"))
-    }.drop(pid, v, "__gcs_soff", "__gcs_roff")
-  }
-
-  /** Distributed global cumulative sum PLUS running maximum of that sum,
-    * exact in DECIMAL(38,18) — the scale-safe replacement for the
-    * equity-curve shape `sum(x) over (order by t)` + `max(cum) over
-    * (order by t)` (both single-task as unpartitioned windows). Same
-    * two-pass structure as [[globalCumSum]]; decimal arithmetic makes the
-    * result independent of the partition layout (double summation would
-    * re-associate across partition boundaries).
-    *
-    * `valueCol` must be non-null (cast to DECIMAL(38,18) internally);
-    * `outCum` is the global prefix sum, `outPeak` its running max.
-    *
-    * NOTE: like [[globalCumSum]] this is EAGER — the checkpoint and the
-    * per-partition-totals collect run at DataFrame-construction time
-    * (inherent to the two-pass shape). Callers constructing many of
-    * these (per-combo metrics) pay one small distributed job pair each.
-    */
-  def globalCumSumMax(df: DataFrame, orderCols: Seq[Column],
-      valueCol: Column, outCum: String, outPeak: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pid = "__gcs_pid"
-    val v = "__gcs_v"
-    val lc = "__gcs_lc"
-    val dec = org.apache.spark.sql.types.DecimalType(38, 18)
-    val zero = java.math.BigDecimal.ZERO.setScale(18)
-    val mlc = "__gcs_mlc"
-    val wLoc = Window.partitionBy(col(pid)).orderBy(orderCols: _*)
-    // checkpoint AFTER the local windows so (a) the offsets job and the
-    // output pass read the same materialized range partitioning and
-    // (b) the per-partition sort+scan runs exactly once. The local
-    // running max rides the same window stage: running-max(lc + soff)
-    // = running-max(lc) + soff, so no post-checkpoint window is needed.
-    val local = df
-      .withColumn(v, coalesce(valueCol.cast(dec), lit(zero).cast(dec)))
-      .repartitionByRange(orderCols: _*)
-      .withColumn(pid, spark_partition_id())
-      .withColumn(lc, sum(col(v)).over(cum(wLoc)))
-      .withColumn(mlc, max(col(lc)).over(cum(wLoc)))
-      .graftCheckpoint()
-    val totals = local.groupBy(col(pid))
-      .agg(sum(col(v)).as("s"), max(col(lc)).as("m"))
-      .collect()
-      .map(r => (r.getInt(0), r.getDecimal(1), r.getDecimal(2)))
-      .sortBy(_._1)
-    // driver prefix scan over one tiny row per partition: exclusive sum
-    // offset + exclusive peak (max completed cum over earlier partitions)
-    var accS = java.math.BigDecimal.ZERO
-    var peak: java.math.BigDecimal = null
-    val offsets = totals.map { case (p, s, m) =>
-      val row = (p, accS, peak)
-      val partPeak = accS.add(m)
-      if (peak == null || partPeak.compareTo(peak) > 0) peak = partPeak
-      accS = accS.add(s)
-      row
-    }.toSeq
-    val offsDf = offsets.toDF(pid, "__gcs_soff", "__gcs_poff")
-    // adding two DECIMAL(38,18)s would need precision 39, so Spark
-    // rounds the sum to (38,17) — a real 1e-18-level error. Cast the
-    // operands down to (37,18) (18 integer digits of headroom is far
-    // beyond any accumulated magnitude here) so the addition is exact
-    // in (38,18).
-    val dec37 = org.apache.spark.sql.types.DecimalType(37, 18)
-    def plus(a: Column, b: Column): Column =
-      (a.cast(dec37) + b.cast(dec37)).cast(dec)
-    val withCum = local.join(broadcast(offsDf), Seq(pid))
-      .withColumn(outCum, plus(col(lc), col("__gcs_soff")))
-      .withColumn(outPeak,
-        when(col("__gcs_poff").isNull,
-          plus(col(mlc), col("__gcs_soff")))
-          .otherwise(greatest(plus(col(mlc), col("__gcs_soff")),
-            col("__gcs_poff").cast(dec)))
-          .cast(dec))
-    withCum.drop(pid, v, lc, mlc, "__gcs_soff", "__gcs_poff")
-  }
-
-  /** Grouped [[globalCumSumMax]]: an independent exact DECIMAL(38,18)
-    * prefix sum + running max per `groupCol` value, with ALL groups
-    * computed in ONE two-pass distributed job — the batched replacement
-    * for constructing many single-group scans (which cost one eager
-    * checkpoint + offsets collect EACH). Range-partitions on
-    * (group, order) so a large group still spans many partitions; the
-    * per-(group, partition) totals collected to the driver stay bounded
-    * by #groups × #partitions, and each group's offsets are scanned
-    * independently. Output values are bit-identical to running
-    * [[globalCumSumMax]] once per group (same decimal arithmetic, same
-    * cast points). */
-  def groupedCumSumMax(df: DataFrame, groupCol: String,
-      orderCols: Seq[Column], valueCol: Column, outCum: String,
-      outPeak: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pid = "__gcs_pid"
-    val v = "__gcs_v"
-    val lc = "__gcs_lc"
-    val mlc = "__gcs_mlc"
-    val dec = org.apache.spark.sql.types.DecimalType(38, 18)
-    val zero = java.math.BigDecimal.ZERO.setScale(18)
-    val wLoc = Window.partitionBy(col(groupCol), col(pid))
-      .orderBy(orderCols: _*)
-    val local = df
-      .withColumn(v, coalesce(valueCol.cast(dec), lit(zero).cast(dec)))
-      .repartitionByRange(col(groupCol) +: orderCols: _*)
-      .withColumn(pid, spark_partition_id())
-      .withColumn(lc, sum(col(v)).over(cum(wLoc)))
-      .withColumn(mlc, max(col(lc)).over(cum(wLoc)))
-      .graftCheckpoint()
-    val totals = local.groupBy(col(groupCol), col(pid))
-      .agg(sum(col(v)).as("s"), max(col(lc)).as("m"))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getDecimal(2),
-        r.getDecimal(3)))
-    val offsets = totals.groupBy(_._1).toSeq.flatMap { case (g, rows) =>
-      var accS = java.math.BigDecimal.ZERO
-      var peak: java.math.BigDecimal = null
-      rows.sortBy(_._2).map { case (_, p, s, m) =>
-        val row = (g, p, accS, peak)
-        val partPeak = accS.add(m)
-        if (peak == null || partPeak.compareTo(peak) > 0) peak = partPeak
-        accS = accS.add(s)
-        row
-      }
+    * EAGER: the checkpoint and the totals collect run when the DataFrame
+    * is built. The jobs they submit do not grow with the number of keys. */
+  def prefixScan(df: DataFrame, keys: Seq[String], order: Seq[Column],
+      value: Column, outCum: String, outPeak: Option[String] = None,
+      outRank: Option[String] = None): DataFrame = {
+    val (pid, v, lc, lm, rn) =
+      ("__ps_pid", "__ps_v", "__ps_lc", "__ps_lm", "__ps_rn")
+    val dt: DataType = df.select(value).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => LongType
+      case _ => DecimalType(38, 18)
     }
-    val offsDf = offsets.toDF(groupCol, pid, "__gcs_soff", "__gcs_poff")
-    val dec37 = org.apache.spark.sql.types.DecimalType(37, 18)
-    def plus(a: Column, b: Column): Column =
-      (a.cast(dec37) + b.cast(dec37)).cast(dec)
-    val withCum = local.join(broadcast(offsDf), Seq(groupCol, pid))
-      .withColumn(outCum, plus(col(lc), col("__gcs_soff")))
-      .withColumn(outPeak,
-        when(col("__gcs_poff").isNull,
-          plus(col(mlc), col("__gcs_soff")))
-          .otherwise(greatest(plus(col(mlc), col("__gcs_soff")),
-            col("__gcs_poff").cast(dec)))
-          .cast(dec))
-    withCum.drop(pid, v, lc, mlc, "__gcs_soff", "__gcs_poff")
+    // adding two DECIMAL(38,18)s would need precision 39, so Spark rounds
+    // the sum to (38,17) — a real 1e-18-level error. The operands are cast
+    // down to (37,18) (18 integer digits of headroom is far beyond any
+    // accumulated magnitude here), so the addition is exact in (38,18).
+    def plus(a: Column, b: Column): Column = dt match {
+      case LongType => a + b
+      case _ => (a.cast(DecimalType(37, 18)) + b.cast(DecimalType(37, 18)))
+        .cast(dt)
+    }
+    val w = Window.partitionBy(keys.map(col) :+ col(pid): _*)
+      .orderBy(order: _*)
+    val local = df
+      .withColumn(v, value.cast(dt))
+      .repartitionByRange(keys.map(col) ++ order: _*)
+      .withColumn(pid, spark_partition_id())
+      .graftCheckpoint()
+      .withColumn(lc, sum(col(v)).over(cum(w)))
+      .withColumn(rn, row_number().over(w))
+      .withColumn(lm, max(col(lc)).over(cum(w)))
+    val n = keys.length
+    val totals = local.groupBy(keys.map(col) :+ col(pid): _*)
+      .agg(sum(col(v)), max(col(lc)), count(lit(1)))
+      .collect()
+    // per key, in partition order: the exclusive sum (null until the
+    // key's first non-null value), the exclusive peak (max completed cum
+    // of the earlier partitions) and the exclusive row count
+    def big(x: Any): java.math.BigDecimal = x match {
+      case l: Long => java.math.BigDecimal.valueOf(l)
+      case d: java.math.BigDecimal => d
+      case _ => null
+    }
+    def typed(x: java.math.BigDecimal): Any =
+      if (x == null || dt != LongType) x else x.longValueExact()
+    val offsets = totals.groupBy(r => (0 until n).map(r.get)).values
+      .flatMap { rows =>
+        var accS: java.math.BigDecimal = null
+        var peak: java.math.BigDecimal = null
+        var accC = 0L
+        rows.sortBy(_.getInt(n)).map { r =>
+          val row = Row.fromSeq((0 to n).map(r.get) ++
+            Seq(typed(accS), typed(peak), accC))
+          val (s, m) = (big(r.get(n + 1)), big(r.get(n + 2)))
+          if (m != null) {
+            val partPeak = if (accS == null) m else accS.add(m)
+            if (peak == null || partPeak.compareTo(peak) > 0) peak = partPeak
+          }
+          if (s != null) accS = if (accS == null) s else accS.add(s)
+          accC += r.getLong(n + 3)
+          row
+        }
+      }.toSeq
+    val ks = keys.indices.map(i => s"__ps_k$i")
+    val keyFields = keys.zip(ks).map { case (k, o) =>
+      df.schema(k).copy(name = o) }
+    val offsDf = df.sparkSession.createDataFrame(offsets.asJava,
+      StructType(keyFields ++ Seq(StructField("__ps_opid", IntegerType),
+        StructField("__ps_soff", dt), StructField("__ps_poff", dt),
+        StructField("__ps_roff", LongType))))
+    val on = keys.zip(ks).map { case (k, o) => col(k) <=> col(o) }
+      .foldLeft(col(pid) === col("__ps_opid"))(_ && _)
+    val (soff, poff) = (col("__ps_soff"), col("__ps_poff"))
+    val joined = local.join(broadcast(offsDf), on)
+      .withColumn(outCum, coalesce(plus(col(lc), soff), col(lc), soff))
+    val withPeak = outPeak.fold(joined)(o => joined.withColumn(o,
+      greatest(poff, coalesce(plus(col(lm), soff), col(lm))).cast(dt)))
+    val withRank = outRank.fold(withPeak)(o => withPeak.withColumn(o,
+      col(rn).cast("long") + col("__ps_roff")))
+    withRank.drop(Seq(pid, v, lc, lm, rn, "__ps_opid", "__ps_soff",
+      "__ps_poff", "__ps_roff") ++ ks: _*)
   }
 
   /** Rolling mode with most-recent tiebreak over a trailing window

@@ -203,7 +203,7 @@ object BacktestQueries2 extends QueryModule {
   /** Per-cell combo metrics (trade stats ⨯ equity max drawdown — the `m`
     * and `dd` blocks of the oracle) over a keyed trade frame: two
     * distributed jobs for any number of cells (one grouped aggregate, one
-    * grouped prefix scan). `cells` carries one row per expected cell plus
+    * keyed prefix scan). `cells` carries one row per expected cell plus
     * its metadata columns; a cell without trades keeps trade_count = 0
     * with null metrics (Metrics.perCell). */
   private[queries] def comboMetrics(

@@ -466,7 +466,7 @@ object IngestQueries extends QueryModule {
     // by the bin its global starting byte offset falls in (the
     // Iceberg/Delta bin-pack shape). The offset is a GLOBAL prefix sum
     // over a manifest that at 100 TB has millions of rows — computed
-    // with the distributed two-pass Wins.globalCumSum, never a
+    // with the distributed two-pass Wins.prefixScan, never a
     // single-task window (plan-audited). Fixture manifest: one "file"
     // per document, bytes = n_chars, 4 KiB target groups.
     Q("q_compact_plan", Some("""
@@ -492,7 +492,7 @@ object IngestQueries extends QueryModule {
         format_string("f%06d.parquet", col("doc_id")).as("path"),
         col("n_chars").as("bytes"))
       val wG = Window.partitionBy("group_id")
-      graft.ops.Wins.globalCumSum(f, Seq(col("path")), col("bytes"), "cum")
+      graft.ops.Wins.prefixScan(f, Nil, Seq(col("path")), col("bytes"), "cum")
         .select(col("path"), col("bytes"),
           floor((col("cum") - col("bytes")) / target).as("group_id"))
         .withColumn("grp_files", count(lit(1)).over(wG))

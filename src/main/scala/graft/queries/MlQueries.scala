@@ -481,12 +481,15 @@ object MlQueries extends QueryModule {
         .groupBy(col("ci").as("cluster"))
         .agg(max((col("intra_i") + col("intra_j")) / col("mdist"))
           .as("db_ratio"))
-      sstat.join(ratio, Seq("cluster"))
+      // the index is one global aggregate broadcast back to every row,
+      // not an unpartitioned window (one task at scale)
+      val byCluster = sstat.join(ratio, Seq("cluster"))
+      byCluster
+        .crossJoin(broadcast(byCluster.agg(avg("db_ratio").as("db_mean"))))
         .select(col("cluster"), col("n_points"),
           round(col("intra"), 6).as("intra_mean_dist"),
           round(col("db_ratio"), 6).as("db_ratio"),
-          round(avg(col("db_ratio")).over(Window.partitionBy()), 6)
-            .as("db_index"))
+          round(col("db_mean"), 6).as("db_index"))
         .orderBy("cluster")
     },
 

@@ -1996,7 +1996,7 @@ object TextQueries extends QueryModule {
     // Context-window packing: docs packed into fixed 2048-token bins by
     // cumulative offset (deterministic doc_id order) — the sample-
     // packing shape; per-bin occupancy + fill rate. The cumulative sum
-    // runs as a distributed two-pass prefix sum (Wins.globalCumSum):
+    // runs as a distributed two-pass prefix sum (Wins.prefixScan):
     // range-partition, per-partition totals, broadcast offsets — never
     // a single-task global window; everything else is a bin-keyed
     // aggregate.
@@ -2035,7 +2035,7 @@ object TextQueries extends QueryModule {
         .groupBy("doc_id")
         .agg(sum("np").cast("long").as("n_tokens"))
       val binned = graft.ops.Wins
-        .globalCumSum(d, Seq(col("doc_id")), col("n_tokens"), "cum_tokens")
+        .prefixScan(d, Nil, Seq(col("doc_id")), col("n_tokens"), "cum_tokens")
         .withColumn("bin_id",
           floor((col("cum_tokens") - col("n_tokens"))
             / lit(target.toDouble)).cast("long"))
@@ -2056,7 +2056,7 @@ object TextQueries extends QueryModule {
     // dedup keeper, then a quality-ranked token budget (60% of surviving
     // tokens). The ranked budget needs a total ORDER but not a single
     // task: rank + cumulative tokens come from the distributed two-pass
-    // prefix sum (Wins.globalCumSum) over (quality desc, doc_id), so
+    // prefix sum (Wins.prefixScan) over (quality desc, doc_id), so
     // every stage — gates, keeper, budget — stays embarrassingly
     // parallel.
     Q("q_corpus_curate", Some {
@@ -2119,7 +2119,7 @@ object TextQueries extends QueryModule {
       // Materialize the slim survivor frame ONCE: the interpreted HOF
       // feature battery (qualityFeatures/langScores lambdas — no
       // codegen) would otherwise run twice, for the budget aggregate AND
-      // for globalCumSum's own checkpoint. One narrow row per surviving
+      // for prefixScan's own checkpoint. One narrow row per surviving
       // doc, so the checkpoint is bounded by corpus cardinality.
       val surv = feat.join(fp, Seq("doc_id"))
         .filter(col("doc_id") === col("keep_id")
@@ -2129,7 +2129,7 @@ object TextQueries extends QueryModule {
         .graftCheckpoint()
       val bud = surv.agg(
         floor(lit(0.6) * sum("n_tokens")).cast("long").as("budget"))
-      val ranked = graft.ops.Wins.globalCumSum(surv,
+      val ranked = graft.ops.Wins.prefixScan(surv, Nil,
         Seq(col("quality_score").desc, col("doc_id")), col("n_tokens"),
         "cum_tokens", outRank = Some("rnk"))
       ranked.crossJoin(broadcast(bud))

@@ -109,14 +109,16 @@ class OpsSpec extends SparkSpec {
     assert(out.toSeq == Seq(1, 1, 2, 3))
   }
 
-  test("globalCumSum (long) matches the single-window reference + rank") {
+  test("prefixScan (long, global) matches the single-window reference " +
+      "+ rank") {
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(11)
     val df = (1 to 400).map(i => (i.toLong, rnd.nextInt(50).toLong))
       .toDF("k", "v")
     val got = Wins
-      .globalCumSum(df, Seq(col("k")), col("v"), "cum", Some("rn"))
+      .prefixScan(df, Nil, Seq(col("k")), col("v"), "cum",
+        outRank = Some("rn"))
       .select("k", "cum", "rn").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
@@ -177,7 +179,8 @@ class OpsSpec extends SparkSpec {
     assert(pr1 == 0.0, "single-row percent_rank must be 0.0")
   }
 
-  test("globalCumSumMax matches the single-window reference bit-exactly") {
+  test("prefixScan (decimal, global) + peak matches the window reference " +
+      "bit-exactly") {
     val s = spark
     import s.implicits._
     // signed values force the running peak to move non-monotonically;
@@ -187,7 +190,8 @@ class OpsSpec extends SparkSpec {
       .toDF("k", "v")
     val dec = org.apache.spark.sql.types.DecimalType(38, 18)
     val got = Wins
-      .globalCumSumMax(df, Seq(col("k")), col("v"), "cum", "peak")
+      .prefixScan(df, Nil, Seq(col("k")), col("v"), "cum",
+        outPeak = Some("peak"))
       .select(col("k"), col("cum"), col("peak"))
       .orderBy("k").collect()
       .map(r => (r.getLong(0), r.getDecimal(1), r.getDecimal(2)))
@@ -202,34 +206,92 @@ class OpsSpec extends SparkSpec {
     assert(got.toSeq == ref.toSeq)
   }
 
-  test("groupedCumSumMax matches per-group globalCumSumMax bit-exactly") {
+  test("prefixScan (decimal, keyed) + peak matches the per-key window " +
+      "bit-exactly") {
     val s = spark
     import s.implicits._
-    // uneven group sizes (1, ~40, ~460) so one group spans several
-    // range partitions while another occupies a fraction of one —
-    // both offset paths (null peak seed, cross-partition peak carry)
-    // must agree with the one-group scan
+    // uneven key sizes (1, ~40, ~460) so one key spans several range
+    // partitions while another occupies a fraction of one — both offset
+    // paths (null peak seed, cross-partition peak carry)
     val rnd = new scala.util.Random(13)
     val rows = (1 to 500).map { i =>
       val g = if (i == 1) "solo" else if (i % 12 == 0) "mid" else "big"
       (g, i.toLong, rnd.nextDouble() * 2 - 1)
     }
     val df = rows.toDF("g", "k", "v")
-    val got = Wins
-      .groupedCumSumMax(df, "g", Seq(col("k")), col("v"), "cum", "peak")
-      .select(col("g"), col("k"), col("cum"), col("peak"))
-      .orderBy("g", "k").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2),
-        r.getDecimal(3)))
-    val ref = rows.map(_._1).distinct.sorted.flatMap { g =>
-      Wins.globalCumSumMax(df.filter(col("g") === g), Seq(col("k")),
-          col("v"), "cum", "peak")
-        .select(col("g"), col("k"), col("cum"), col("peak"))
-        .orderBy("k").collect()
+    val dec = org.apache.spark.sql.types.DecimalType(38, 18)
+    def tuples(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("g"), col("k"), col("cum"), col("peak"))
+        .orderBy("g", "k").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDecimal(2),
-          r.getDecimal(3)))
-    }
+          r.getDecimal(3))).toSeq
+    val got = tuples(Wins.prefixScan(df, Seq("g"), Seq(col("k")), col("v"),
+      "cum", outPeak = Some("peak")))
+    val w = Window.partitionBy("g").orderBy("k")
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val ref = tuples(df
+      .withColumn("cum", sum(col("v").cast(dec)).over(w).cast(dec))
+      .withColumn("peak", max(col("cum")).over(w)))
     assert(got.length == 500)
-    assert(got.toSeq == ref.toSeq)
+    assert(got == ref)
+  }
+
+  test("prefixScan follows the window's null rule across range " +
+      "partitions: nulls leading a later partition, an all-null key, " +
+      "a one-row key") {
+    val s = spark
+    import s.implicits._
+    // k 120..280 null spans the middle range boundary of 4 partitions,
+    // so a later partition starts with nulls after non-null values in
+    // the earlier ones; k 1..10 null leads the first partition
+    val rnd = new scala.util.Random(17)
+    val rows = (1 to 400).map { i =>
+      val g = if (i == 7) "one" else if (i % 10 == 3) "nulls" else "big"
+      val v = if (g == "nulls" || i <= 10 || (i >= 120 && i <= 280)) None
+        else Some(rnd.nextInt(100).toLong - 40)
+      (g, i.toLong, v)
+    }
+    val df = rows.toDF("g", "k", "v")
+    val dec = org.apache.spark.sql.types.DecimalType(38, 18)
+    val conf = spark.conf
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val old = conf.get(coalesceKey)
+    conf.set(coalesceKey, "false")
+    try {
+      assert(df.repartitionByRange(col("k"))
+        .select(spark_partition_id()).distinct().count() > 1,
+        "expected more than one range partition")
+      for ((keys, value) <- Seq((Nil, col("v")), (Seq("g"), col("v")),
+          (Nil, col("v").cast(dec)), (Seq("g"), col("v").cast(dec)))) {
+        val cols = Seq("g", "k", "cum", "peak", "rn")
+        val got = Wins.prefixScan(df, keys, Seq(col("k")), value, "cum",
+            outPeak = Some("peak"), outRank = Some("rn"))
+          .select(cols.map(col): _*).orderBy("k").collect().toSeq
+        val byKey = Window.partitionBy(keys.map(col): _*).orderBy("k")
+        val w = byKey.rowsBetween(Window.unboundedPreceding, 0)
+        val ref = df
+          .withColumn("cum", sum(value).over(w))
+          .withColumn("peak", max(col("cum")).over(w))
+          .withColumn("rn", row_number().over(byKey).cast("long"))
+          .select(cols.map(col): _*).orderBy("k").collect().toSeq
+        assert(got.length == 400)
+        assert(got == ref, s"keys=$keys value=$value drifted")
+        assert(got.exists(r => r.isNullAt(2)), "expected a null prefix")
+      }
+    } finally conf.set(coalesceKey, old)
+  }
+
+  test("prefixScan submits as many jobs for 16 keys as for 1") {
+    val s = spark
+    import s.implicits._
+    def jobs(nKeys: Int) = {
+      val df = (1 to 320).map(i => ((i % nKeys).toString, i.toLong,
+        (i % 7).toLong)).toDF("g", "k", "v")
+      Jobs.count(spark) {
+        Wins.prefixScan(df, Seq("g"), Seq(col("k")), col("v"), "cum",
+          outPeak = Some("peak"), outRank = Some("rn")).collect()
+      }
+    }
+    assert(jobs(1) == jobs(16))
   }
 }

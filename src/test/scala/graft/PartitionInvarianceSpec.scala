@@ -17,9 +17,11 @@ class PartitionInvarianceSpec extends SparkSpec {
     * by construction (two-pass prefix sums, DECIMAL accumulation,
     * portable-hash ranking). */
   private val LayoutProof = Seq(
-    "q_bt_portfolio",    // global equity prefix sum (globalCumSumMax)
-    "q_t_pack",          // token-budget prefix sum (globalCumSum)
+    "q_bt_portfolio",    // global equity prefix sum (prefixScan)
+    "q_t_pack",          // token-budget prefix sum (prefixScan)
     "q_corpus_curate",   // ranked token budget on the same scan
+    "q_compact_plan",    // byte-offset prefix sum on the same scan
+    "q_bt_robustness_v2", // per-cell drawdown curves, one keyed scan
     "q_corr_matrix",     // exact integer-cents second moments
     "q_t_mix_temperature", // DECIMAL-normalized mixture shares
     "q_det_sample",      // portable-hash deterministic sampler

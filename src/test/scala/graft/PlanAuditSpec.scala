@@ -329,8 +329,8 @@ class PlanAuditSpec extends SparkSpec {
       "no single-task global window") {
     // VERDICT r3 items 1-2 + the r4 equity-curve generalization: global
     // prefix scans must run as the distributed two-pass pattern
-    // (Wins.globalCumSum / globalCumSumMax), never an unpartitioned
-    // Window — which Spark executes as ONE task over the whole input. A
+    // (Wins.prefixScan), never an unpartitioned Window — which Spark
+    // executes as ONE task over the whole input. A
     // windowspecdefinition whose FIRST argument is a sort order (no
     // partition columns before the ordering) is exactly that
     // single-task shape.
@@ -439,7 +439,8 @@ class PlanAuditSpec extends SparkSpec {
     for (q <- Seq("q_rank_norm", "q_bt_robustness", "q_t_source_kl",
         "q_w_dense_rank", "q_t_bm25", "q_e_sim_hist", "q_pagerank_trade",
         "q_cluster_hardening_full", "q_t_vocab", "q_hybrid_eval",
-        "q_hybrid_key_deltas", "q_hybrid_wf", "q_t_dsir_sample")) {
+        "q_hybrid_key_deltas", "q_hybrid_wf", "q_t_dsir_sample",
+        "q_cluster_assign_metrics")) {
       val plan = SparkEntry.queries(q)(spark, dir)
         .queryExecution.optimizedPlan
       val wins = plan.collect {

@@ -62,6 +62,20 @@ class SweepSpec extends SparkSpec {
     assert(jobs(2) == jobs(6))
   }
 
+  test("Metrics.maxDrawdownByCell submits as many jobs for 8 cells as " +
+      "for 2") {
+    val s = spark
+    import s.implicits._
+    def jobs(nCells: Int) = {
+      val trades = (0 until nCells * 60).map { i =>
+        (s"c${i % nCells}", (i / nCells % 30).toLong,
+          ((i * 37) % 23 - 11) / 100.0)
+      }.toDF("cell", "exit_rn", "net_ret")
+      Jobs.count(spark) { Metrics.maxDrawdownByCell(trades).collect() }
+    }
+    assert(jobs(2) == jobs(8))
+  }
+
   test("a combo that never enters keeps its grid row at zero trades") {
     val never = Grid.Combo("state_transition_entry", 100000, 10, 5.0)
     val rows = Grid.run(gram, Seq(Grid.Default, never)).collect()
